@@ -9,23 +9,49 @@ import org.apache.spark.sql.functions._
  *
  * Storage here is parquet-append under a `_system` root (the reference uses
  * Delta; the write pattern is identical — swap the format string on a
- * Delta-enabled cluster). Each record batch is tiny; writes are
- * coalesce(1) appends.
+ * Delta-enabled cluster). Each record batch is tiny: a recorded run
+ * writes one file per meta table it touches, all tables concurrently
+ * ([[Catalog.runRecorded]]); a direct `record*` call writes one file.
  */
 final class Catalog(spark: SparkSession, root: String) {
   import spark.implicits._
+  import Catalog.Rows
 
   private def tablePath(name: String) = s"$root/$name"
 
   private def append(name: String, df: DataFrame): Unit =
     df.coalesce(1).write.mode("append").parquet(tablePath(name))
 
+  /** The rows one record adds to a meta table, built only when appended
+    * (None: nothing to write). */
+  private def rows(table: String)(build: => Option[DataFrame]): Rows =
+    table -> (() => build)
+
+  /** The per-run columns every run-grain table ends with. */
+  private def perRun(df: DataFrame, pipeline: String, runId: String): DataFrame =
+    df.withColumn("pipeline", lit(pipeline))
+      .withColumn("run_id", lit(runId))
+      .withColumn("recorded_at", current_timestamp())
+
+  /**
+   * One append per record, concurrently: the tables are independent
+   * directories. Each frame is built inside its own task, so the driver
+   * work of building it (encoding, plan traversal, DDL rendering) overlaps
+   * too. Every append runs to completion; the first failure is then
+   * rethrown.
+   */
+  private def appendAll(records: Rows*): Unit =
+    DriverPar.map(records, maxThreads = records.size) { case (table, build) =>
+      build().foreach(append(table, _))
+    }
+
   def table(name: String): DataFrame = spark.read.parquet(tablePath(name))
 
   /**
-   * Compact the meta tables: every run appends a coalesce(1) file, so a
-   * long-lived catalog accumulates thousands of tiny parquet files and
-   * reads slow down linearly. Rewrites each existing meta table to
+   * Compact the meta tables: every recorded run appends one file per meta
+   * table (the tables written concurrently), so a long-lived catalog
+   * accumulates thousands of tiny parquet files and reads slow down
+   * linearly. Rewrites each existing meta table to
    * `filesPerTable` files through the atomic temp-dir + rename swap — a
    * crash mid-compaction leaves the old files intact. Returns the
    * compacted table names.
@@ -54,13 +80,13 @@ final class Catalog(spark: SparkSession, root: String) {
 
   /** Record one pipeline run with per-node outcomes + timings. */
   def recordRun(pipeline: String, runId: String,
-                nodes: Seq[(String, Boolean, Long, String)]): Unit = {
-    append("meta_runs",
-      nodes.toDF("node", "success", "duration_ms", "error")
-        .withColumn("pipeline", lit(pipeline))
-        .withColumn("run_id", lit(runId))
-        .withColumn("recorded_at", current_timestamp()))
-  }
+                nodes: Seq[(String, Boolean, Long, String)]): Unit =
+    appendAll(runRows(pipeline, runId, nodes))
+
+  private def runRows(pipeline: String, runId: String,
+                      nodes: Seq[(String, Boolean, Long, String)]): Rows =
+    rows("meta_runs")(Some(perRun(
+      nodes.toDF("node", "success", "duration_ms", "error"), pipeline, runId)))
 
   /**
    * One row per pipeline run — the reference's `meta_pipeline_runs` grain
@@ -70,11 +96,15 @@ final class Catalog(spark: SparkSession, root: String) {
   def recordPipelineRun(pipeline: String, runId: String, success: Boolean,
                         nNodes: Int, nFailed: Int,
                         totalDurationMs: Long): Unit =
-    append("meta_pipeline_runs",
+    appendAll(pipelineRunRows(pipeline, runId, success, nNodes, nFailed, totalDurationMs))
+
+  private def pipelineRunRows(pipeline: String, runId: String, success: Boolean,
+                              nNodes: Int, nFailed: Int, totalDurationMs: Long): Rows =
+    rows("meta_pipeline_runs")(Some(
       Seq((pipeline, runId, success, nNodes.toLong, nFailed.toLong, totalDurationMs))
         .toDF("pipeline", "run_id", "success", "n_nodes", "n_failed",
           "total_duration_ms")
-        .withColumn("recorded_at", current_timestamp()))
+        .withColumn("recorded_at", current_timestamp())))
 
   /**
    * One row per (node, run) with write volume — the reference's
@@ -83,14 +113,15 @@ final class Catalog(spark: SparkSession, root: String) {
    */
   def recordNodeRuns(pipeline: String, runId: String,
                      nodes: Seq[(String, Boolean, Long, Option[Long], String)]): Unit =
-    if (nodes.nonEmpty)
-      append("meta_node_runs",
-        nodes.map { case (n, ok, ms, rows, err) =>
-          (n, ok, ms, rows.map(java.lang.Long.valueOf).orNull, err)
-        }.toDF("node", "success", "duration_ms", "rows_written", "error")
-          .withColumn("pipeline", lit(pipeline))
-          .withColumn("run_id", lit(runId))
-          .withColumn("recorded_at", current_timestamp()))
+    appendAll(nodeRunRows(pipeline, runId, nodes))
+
+  private def nodeRunRows(pipeline: String, runId: String,
+                          nodes: Seq[(String, Boolean, Long, Option[Long], String)]): Rows =
+    rows("meta_node_runs")(Option.when(nodes.nonEmpty)(perRun(
+      nodes.map { case (n, ok, ms, written, err) =>
+        (n, ok, ms, written.map(java.lang.Long.valueOf).orNull, err)
+      }.toDF("node", "success", "duration_ms", "rows_written", "error"),
+      pipeline, runId)))
 
   /**
    * Executor totals per (node, run) in long format — the WHY behind a
@@ -100,17 +131,18 @@ final class Catalog(spark: SparkSession, root: String) {
    * Spark jobs this run.
    */
   def recordNodeMetrics(pipeline: String, runId: String,
-                        nodes: Seq[(String, Map[String, Long])]): Unit = {
-    val rows = nodes.flatMap { case (n, m) =>
-      m.toSeq.map { case (metric, value) => (n, metric, value) }
+                        nodes: Seq[(String, Map[String, Long])]): Unit =
+    appendAll(nodeMetricRows(pipeline, runId, nodes))
+
+  private def nodeMetricRows(pipeline: String, runId: String,
+                             nodes: Seq[(String, Map[String, Long])]): Rows =
+    rows("meta_node_metrics") {
+      val longRows = nodes.flatMap { case (n, m) =>
+        m.toSeq.map { case (metric, value) => (n, metric, value) }
+      }
+      Option.when(longRows.nonEmpty)(perRun(
+        longRows.toDF("node", "metric", "value"), pipeline, runId))
     }
-    if (rows.nonEmpty)
-      append("meta_node_metrics",
-        rows.toDF("node", "metric", "value")
-          .withColumn("pipeline", lit(pipeline))
-          .withColumn("run_id", lit(runId))
-          .withColumn("recorded_at", current_timestamp()))
-  }
 
   /**
    * Alert-transport failures (`meta_observability_errors`,
@@ -121,79 +153,87 @@ final class Catalog(spark: SparkSession, root: String) {
    */
   def recordObservabilityErrors(pipeline: String, runId: String,
                                 errors: Seq[(String, String, String, String)]): Unit =
-    if (errors.nonEmpty)
-      append("meta_observability_errors",
-        errors.toDF("channel", "target", "error_class", "message")
-          .withColumn("pipeline", lit(pipeline))
-          .withColumn("run_id", lit(runId))
-          .withColumn("recorded_at", current_timestamp()))
+    appendAll(observabilityErrorRows(pipeline, runId, errors))
+
+  private def observabilityErrorRows(pipeline: String, runId: String,
+                                     errors: Seq[(String, String, String, String)]): Rows =
+    rows("meta_observability_errors")(Option.when(errors.nonEmpty)(perRun(
+      errors.toDF("channel", "target", "error_class", "message"), pipeline, runId)))
 
   /** Record node lineage edges (node -> its inputs). */
   def recordLineage(pipeline: String, runId: String,
                     edges: Seq[(String, String)]): Unit =
-    append("meta_lineage",
-      edges.toDF("node", "input")
-        .withColumn("pipeline", lit(pipeline))
-        .withColumn("run_id", lit(runId))
-        .withColumn("recorded_at", current_timestamp()))
+    appendAll(lineageRows(pipeline, runId, edges))
+
+  private def lineageRows(pipeline: String, runId: String,
+                          edges: Seq[(String, String)]): Rows =
+    rows("meta_lineage")(Some(perRun(edges.toDF("node", "input"), pipeline, runId)))
 
   /**
-   * Record column-level lineage for a node's output frame — one row per
-   * (output column, source column), derived from the Catalyst analyzed
-   * plan by [[Lineage.columnLineage]] (driver-side traversal, nothing
-   * executes).
+   * Record column-level lineage for nodes' output frames — one row per
+   * (node, output column, source column), derived from each Catalyst
+   * analyzed plan by [[Lineage.columnLineage]] (driver-side traversal,
+   * nothing executes). All nodes land in one append.
    */
-  def recordColumnLineage(pipeline: String, runId: String, node: String,
-                          df: DataFrame): Unit = {
-    val rows = Lineage.columnLineage(df).toSeq
-      .flatMap { case (out, srcs) => srcs.map(out -> _) }
-    if (rows.nonEmpty)
-      append("meta_column_lineage",
-        rows.toDF("column", "source")
-          .withColumn("node", lit(node))
-          .withColumn("pipeline", lit(pipeline))
-          .withColumn("run_id", lit(runId))
-          .withColumn("recorded_at", current_timestamp()))
-  }
+  def recordColumnLineage(pipeline: String, runId: String,
+                          nodes: Seq[(String, DataFrame)]): Unit =
+    appendAll(columnLineageRows(pipeline, runId, nodes))
+
+  private def columnLineageRows(pipeline: String, runId: String,
+                                nodes: Seq[(String, DataFrame)]): Rows =
+    rows("meta_column_lineage") {
+      val edges = nodes.flatMap { case (node, df) =>
+        Lineage.columnLineage(df).toSeq
+          .flatMap { case (out, srcs) => srcs.map(src => (out, src, node)) }
+      }
+      Option.when(edges.nonEmpty)(perRun(
+        edges.toDF("column", "source", "node"), pipeline, runId))
+    }
 
   /** Record node sink outputs (path + rows from write metrics). */
   def recordOutputs(pipeline: String, runId: String,
                     outputs: Seq[(String, String, Long)]): Unit =
-    if (outputs.nonEmpty)
-      append("meta_outputs",
-        outputs.toDF("node", "path", "rows_written")
-          .withColumn("pipeline", lit(pipeline))
-          .withColumn("run_id", lit(runId))
-          .withColumn("recorded_at", current_timestamp()))
+    appendAll(outputRows(pipeline, runId, outputs))
+
+  private def outputRows(pipeline: String, runId: String,
+                         outputs: Seq[(String, String, Long)]): Rows =
+    rows("meta_outputs")(Option.when(outputs.nonEmpty)(perRun(
+      outputs.toDF("node", "path", "rows_written"), pipeline, runId)))
 
   /** Record validation outcomes per node per run (meta_metrics family). */
   def recordValidation(pipeline: String, runId: String,
                        results: Seq[(String, graft.validation.Validation.TestResult)]): Unit =
-    if (results.nonEmpty)
-      append("meta_metrics",
-        results.map { case (node, r) =>
-          (node, r.test.name, r.test.kind, r.passed, r.failedRows, r.detail)
-        }.toDF("node", "test", "kind", "passed", "failed_rows", "detail")
-          .withColumn("pipeline", lit(pipeline))
-          .withColumn("run_id", lit(runId))
-          .withColumn("recorded_at", current_timestamp()))
+    appendAll(validationRows(pipeline, runId, results))
+
+  private def validationRows(pipeline: String, runId: String,
+                             results: Seq[(String, graft.validation.Validation.TestResult)]): Rows =
+    rows("meta_metrics")(Option.when(results.nonEmpty)(perRun(
+      results.map { case (node, r) =>
+        (node, r.test.name, r.test.kind, r.passed, r.failedRows, r.detail)
+      }.toDF("node", "test", "kind", "passed", "failed_rows", "detail"),
+      pipeline, runId)))
 
   /** Record node failures with exception class (meta_failures family). */
   def recordFailures(pipeline: String, runId: String,
                      failures: Seq[(String, String, String)]): Unit =
-    if (failures.nonEmpty)
-      append("meta_failures",
-        failures.toDF("node", "error_class", "message")
-          .withColumn("pipeline", lit(pipeline))
-          .withColumn("run_id", lit(runId))
-          .withColumn("recorded_at", current_timestamp()))
+    appendAll(failureRows(pipeline, runId, failures))
 
-  /** Snapshot a node's output schema (drift detection source). */
-  def recordSchema(pipeline: String, node: String, df: DataFrame): Unit =
-    append("meta_schemas",
-      Seq((node, df.schema.toDDL)).toDF("node", "schema_ddl")
+  private def failureRows(pipeline: String, runId: String,
+                          failures: Seq[(String, String, String)]): Rows =
+    rows("meta_failures")(Option.when(failures.nonEmpty)(perRun(
+      failures.toDF("node", "error_class", "message"), pipeline, runId)))
+
+  /** Snapshot nodes' output schemas (drift detection source), all nodes
+    * in one append. */
+  def recordSchema(pipeline: String, nodes: Seq[(String, DataFrame)]): Unit =
+    appendAll(schemaRows(pipeline, nodes))
+
+  private def schemaRows(pipeline: String, nodes: Seq[(String, DataFrame)]): Rows =
+    rows("meta_schemas")(Option.when(nodes.nonEmpty)(
+      nodes.map { case (node, df) => (node, df.schema.toDDL) }
+        .toDF("node", "schema_ddl")
         .withColumn("pipeline", lit(pipeline))
-        .withColumn("recorded_at", current_timestamp()))
+        .withColumn("recorded_at", current_timestamp())))
 
   /** Latest recorded schema DDL for a node, if any. */
   def latestSchema(node: String): Option[String] =
@@ -435,6 +475,9 @@ object Catalog {
     md.digest(cfg.toString.getBytes("UTF-8")).map("%02x".format(_)).mkString
   }
 
+  /** A meta table and a builder for the rows one record adds to it. */
+  private type Rows = (String, () => Option[DataFrame])
+
   /**
    * Run a pipeline with catalog recording: runs, lineage, schemas.
    * Timings come from wall-clock around each node's materialization, not
@@ -444,6 +487,9 @@ object Catalog {
    * differs from the deployed `meta_pipelines` hash, the run either fails
    * (`failOnDrift`) or proceeds with the drift recorded in the run error
    * field of a `_drift_check` pseudo-node.
+   *
+   * After the run, every meta table the run touches gets exactly one
+   * append, and the appends run concurrently (one task per table).
    */
   def runRecorded(spark: SparkSession, cfg: Pipeline.PipelineConfig,
                   catalog: Catalog, runId: String,
@@ -451,10 +497,10 @@ object Catalog {
                   opts: Pipeline.RunOptions = Pipeline.RunOptions(),
                   failOnDrift: Boolean = false)
       : Map[String, Pipeline.NodeResult] = {
-    catalog.configDrift(cfg).foreach { deployed =>
+    val drift = catalog.configDrift(cfg).map { deployed =>
       val msg = s"DRIFT: local ${pipelineHash(cfg).take(8)} != deployed ${deployed.take(8)}"
       if (failOnDrift) throw new IllegalStateException(msg)
-      catalog.recordRun(cfg.name, runId, Seq(("_drift_check", false, 0L, msg)))
+      ("_drift_check", false, 0L, msg)
     }
     // alert-channel failures buffer during the run, recorded after it —
     // the dispatcher must stay non-blocking and side-effect-safe
@@ -465,58 +511,56 @@ object Catalog {
       opts.onAlertError(acfg, e)
     })
     val results = Pipeline.run(spark, cfg, externalDatasets, recordingOpts)
-    catalog.recordRun(cfg.name, runId, cfg.nodes.map { n =>
-      val r = results.get(n.name)
-      // skipped nodes record success=true with the reason in the error
-      // field (the reference marks skips successful with metadata.reason)
-      (n.name, r.exists(_.failure.isEmpty),
-        r.map(_.durationMs).getOrElse(0L),
+    val name = cfg.name
+    val ran = cfg.nodes.map(n => n -> results.get(n.name))
+    // skipped nodes record success=true with the reason in the error
+    // field (the reference marks skips successful with metadata.reason)
+    def outcome(r: Option[Pipeline.NodeResult]) =
+      (r.exists(_.failure.isEmpty), r.map(_.durationMs).getOrElse(0L),
         r.flatMap(_.failure).map(_.getMessage)
           .orElse(r.flatMap(_.skipReason).map("skipped: " + _)).getOrElse(""))
-    })
-    // the reference's pipeline_runs / node_runs split (catalog.py:183-200)
-    catalog.recordPipelineRun(cfg.name, runId,
-      success = cfg.nodes.forall(n => results.get(n.name).exists(_.failure.isEmpty)),
-      nNodes = cfg.nodes.size,
-      nFailed = cfg.nodes.count(n => results.get(n.name).exists(_.failure.nonEmpty)),
-      totalDurationMs = cfg.nodes.flatMap(n => results.get(n.name)).map(_.durationMs).sum)
-    catalog.recordNodeRuns(cfg.name, runId, cfg.nodes.map { n =>
-      val r = results.get(n.name)
-      (n.name, r.exists(_.failure.isEmpty), r.map(_.durationMs).getOrElse(0L),
-        r.flatMap(_.rowsWritten),
-        r.flatMap(_.failure).map(_.getMessage)
-          .orElse(r.flatMap(_.skipReason).map("skipped: " + _)).getOrElse(""))
-    })
-    catalog.recordNodeMetrics(cfg.name, runId, cfg.nodes.flatMap { n =>
-      results.get(n.name).filter(_.metrics.nonEmpty).map(r => n.name -> r.metrics)
-    })
-    catalog.recordObservabilityErrors(cfg.name, runId,
-      alertErrors.toArray(Array.empty[(String, String, String, String)]).toSeq)
-    catalog.recordLineage(cfg.name, runId,
-      cfg.nodes.flatMap(n => n.dependsOn.map(d => n.name -> d)))
-    catalog.recordOutputs(cfg.name, runId, cfg.nodes.flatMap { n =>
-      for {
-        r <- results.get(n.name)
-        rows <- r.rowsWritten
-        path <- n.writePath
-      } yield (n.name, path, rows)
-    })
-    catalog.recordFailures(cfg.name, runId, cfg.nodes.flatMap { n =>
-      results.get(n.name).flatMap(_.failure)
-        .map(e => (n.name, e.getClass.getName, Option(e.getMessage).getOrElse("")))
-    })
-    catalog.recordValidation(cfg.name, runId, cfg.nodes.flatMap { n =>
-      results.get(n.name).toSeq.flatMap(_.validation.map(n.name -> _))
-    })
-    results.foreach { case (name, r) =>
-      if (r.failure.isEmpty && !r.skipped) {
-        catalog.recordSchema(cfg.name, name, r.df)
-        // lineage from the pre-write plan when the node's df is a
-        // lineage-truncating sink read-back
-        catalog.recordColumnLineage(cfg.name, runId, name,
-          r.lineageDf.getOrElse(r.df))
-      }
-    }
+    val succeeded = results.toSeq.filter { case (_, r) => r.failure.isEmpty && !r.skipped }
+    catalog.appendAll(
+      catalog.runRows(name, runId, drift.toSeq ++ ran.map { case (n, r) =>
+        val (ok, ms, err) = outcome(r)
+        (n.name, ok, ms, err)
+      }),
+      // the reference's pipeline_runs / node_runs split (catalog.py:183-200)
+      catalog.pipelineRunRows(name, runId,
+        success = ran.forall(_._2.exists(_.failure.isEmpty)),
+        nNodes = cfg.nodes.size,
+        nFailed = ran.count(_._2.exists(_.failure.nonEmpty)),
+        totalDurationMs = ran.flatMap(_._2).map(_.durationMs).sum),
+      catalog.nodeRunRows(name, runId, ran.map { case (n, r) =>
+        val (ok, ms, err) = outcome(r)
+        (n.name, ok, ms, r.flatMap(_.rowsWritten), err)
+      }),
+      catalog.nodeMetricRows(name, runId, ran.collect {
+        case (n, Some(r)) if r.metrics.nonEmpty => n.name -> r.metrics
+      }),
+      catalog.observabilityErrorRows(name, runId,
+        alertErrors.toArray(Array.empty[(String, String, String, String)]).toSeq),
+      catalog.lineageRows(name, runId,
+        cfg.nodes.flatMap(n => n.dependsOn.map(d => n.name -> d))),
+      catalog.outputRows(name, runId, ran.flatMap { case (n, r) =>
+        for {
+          res <- r
+          rows <- res.rowsWritten
+          path <- n.writePath
+        } yield (n.name, path, rows)
+      }),
+      catalog.failureRows(name, runId, ran.flatMap { case (n, r) =>
+        r.flatMap(_.failure)
+          .map(e => (n.name, e.getClass.getName, Option(e.getMessage).getOrElse("")))
+      }),
+      catalog.validationRows(name, runId, ran.flatMap { case (n, r) =>
+        r.toSeq.flatMap(_.validation.map(n.name -> _))
+      }),
+      catalog.schemaRows(name, succeeded.map { case (n, r) => n -> r.df }),
+      // lineage from the pre-write plan when the node's df is a
+      // lineage-truncating sink read-back
+      catalog.columnLineageRows(name, runId,
+        succeeded.map { case (n, r) => n -> r.lineageDf.getOrElse(r.df) }))
     results
   }
 }

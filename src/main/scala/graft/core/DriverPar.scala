@@ -5,8 +5,12 @@ package graft.core
  * reads, staged-file renames, per-file listStatus): these loops are pure
  * I/O latency — a commit of N files paid N × ~10 ms serially, which at
  * wide-partition writes (an 84-month hidden-partition commit) dominated
- * the commit. Order-preserving; exceptions propagate (first failure
- * wins). Small inputs run inline — no pool churn for 1-2 files.
+ * the commit. Order-preserving. Every item runs to completion before a
+ * failure surfaces; then the first failure in item order is rethrown, so
+ * no task is still running when the call returns or throws. Small inputs
+ * run inline — no pool churn for 1-2 files. The pool's threads are made
+ * by the calling thread, so they inherit its Spark local properties (job
+ * group, scheduler pool).
  */
 object DriverPar {
   /**
@@ -45,12 +49,12 @@ object DriverPar {
       val futures = items.map(a => pool.submit(new java.util.concurrent.Callable[B] {
         override def call(): B = fn(a)
       }))
-      futures.map { fu =>
-        try fu.get()
-        catch {
-          case e: java.util.concurrent.ExecutionException =>
-            throw Option(e.getCause).getOrElse(e)
-        }
+      val outcomes = futures.map(fu => scala.util.Try(fu.get()))
+      outcomes.map {
+        case scala.util.Success(b) => b
+        case scala.util.Failure(e: java.util.concurrent.ExecutionException) =>
+          throw Option(e.getCause).getOrElse(e)
+        case scala.util.Failure(e) => throw e
       }
     } finally { pool.shutdown(); () }
   }

@@ -6,7 +6,8 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import java.io.{BufferedInputStream, ByteArrayOutputStream, EOFException, InputStream, OutputStream}
+import java.io.{BufferedInputStream, ByteArrayOutputStream, EOFException, InputStream, OutputStream,
+  PushbackInputStream}
 import java.util.zip.{GZIPInputStream, GZIPOutputStream}
 import scala.jdk.CollectionConverters._
 
@@ -130,13 +131,19 @@ object WarcSource {
     * Common Crawl segments use). */
   private[sources] def parseStream(raw: InputStream, sourceFile: String,
                                    opts: WarcOptions): Iterator[Row] = {
+    // a zero-byte file (the writer's empty partition 0) holds no records;
+    // GZIPInputStream would throw EOFException reading its missing header
+    val peek = new PushbackInputStream(raw, 1)
+    val first = peek.read()
+    if (first < 0) { raw.close(); return Iterator.empty }
+    peek.unread(first)
     val decoded: InputStream =
-      if (sourceFile.endsWith(".gz")) new GZIPInputStream(raw, 64 * 1024)
+      if (sourceFile.endsWith(".gz")) new GZIPInputStream(peek, 64 * 1024)
       else if (sourceFile.endsWith(".zst")) {
-        val z = new com.github.luben.zstd.ZstdInputStream(raw)
+        val z = new com.github.luben.zstd.ZstdInputStream(peek)
         z.setContinuous(true)
         z
-      } else raw
+      } else peek
     val in = new BufferedInputStream(decoded, 64 * 1024)
     new Iterator[Row] {
       private var nextRow: Row = _

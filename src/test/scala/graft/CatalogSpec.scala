@@ -30,6 +30,99 @@ class CatalogSpec extends SparkSpec {
     assert(cat.schemaDrifted("agg", results("r").df))
   }
 
+  /** A 3-node run with validation and two sinks under `root`, reading a
+    * 5-row region table it writes there first. */
+  private def threeNodes(root: String) = {
+    import spark.implicits._
+    (0 to 4).map(k => (k.toLong, s"region_$k")).toDF("r_regionkey", "r_name")
+      .write.parquet(s"$root/region_in")
+    Pipeline.PipelineConfig("p3", Seq(
+      Pipeline.NodeConfig("r", read = Some(Sources.ReadConfig("parquet",
+        Some(s"$root/region_in"))),
+        tests = Seq(graft.validation.Validation.Test("pk_unique", "unique",
+          columns = Seq("r_regionkey"))),
+        writePath = Some(s"$root/r_out")),
+      Pipeline.NodeConfig("agg", dependsOn = Seq("r"),
+        steps = Seq(Pipeline.TransformStep(sql = Some(
+          "SELECT r_regionkey, count(*) AS n FROM df GROUP BY 1"))),
+        writePath = Some(s"$root/agg_out")),
+      Pipeline.NodeConfig("top", dependsOn = Seq("agg"),
+        steps = Seq(Pipeline.TransformStep(sql = Some(
+          "SELECT r_regionkey AS k, n * 2 AS n2 FROM df WHERE r_regionkey < 3"))))))
+  }
+
+  /** Parquet data files per meta table under a catalog root. */
+  private def dataFiles(root: String): Map[String, Int] =
+    new java.io.File(root).listFiles().toSeq
+      .filter(f => f.isDirectory && f.getName.startsWith("meta_"))
+      .map(d => d.getName -> d.listFiles().count(f =>
+        f.getName.startsWith("part-") && f.getName.endsWith(".parquet")))
+      .toMap
+
+  private val runTables = Set("meta_runs", "meta_pipeline_runs", "meta_node_runs",
+    "meta_node_metrics", "meta_lineage", "meta_outputs", "meta_metrics",
+    "meta_schemas", "meta_column_lineage")
+
+  test("a recorded run adds exactly one data file to each meta table it writes") {
+    val root = java.nio.file.Files.createTempDirectory("graft_cat_files").toString
+    val cat = new Catalog(spark, root)
+    val cfg = threeNodes(root)
+    Catalog.runRecorded(spark, cfg, cat, "run-1")
+    assert(dataFiles(root) == runTables.map(_ -> 1).toMap)
+    Catalog.runRecorded(spark, cfg, cat, "run-2")
+    assert(dataFiles(root) == runTables.map(_ -> 2).toMap)
+    assert(cat.table("meta_runs").count() == 6)
+    assert(cat.table("meta_metrics").count() == 2)
+    assert(cat.table("meta_outputs").count() == 4)
+  }
+
+  test("meta_schemas and meta_column_lineage hold every node, as per-node appends wrote them") {
+    val root = java.nio.file.Files.createTempDirectory("graft_cat_batch").toString
+    val cat = new Catalog(spark, root)
+    val results = Catalog.runRecorded(spark, threeNodes(root), cat, "run-b")
+    // the same records written one node at a time, into a second catalog
+    val single = new Catalog(spark, root + "_single")
+    results.foreach { case (n, r) =>
+      single.recordSchema("p3", Seq(n -> r.df))
+      single.recordColumnLineage("p3", "run-b", Seq(n -> r.lineageDf.getOrElse(r.df)))
+    }
+    def content(c: Catalog, t: String) = {
+      val df = c.table(t).drop("recorded_at")
+      (df.columns.toSeq, df.collect().map(_.toSeq).toSet)
+    }
+    Seq("meta_schemas", "meta_column_lineage").foreach { t =>
+      assert(content(cat, t) == content(single, t), t)
+    }
+    val schemas = cat.table("meta_schemas").collect()
+      .map(r => r.getAs[String]("node") -> r.getAs[String]("schema_ddl")).toMap
+    assert(schemas == results.map { case (n, r) => n -> r.df.schema.toDDL })
+    val lineageNodes = cat.table("meta_column_lineage").select("node").distinct()
+      .collect().map(_.getString(0)).toSet
+    assert(lineageNodes == Set("r", "agg", "top"))
+    assert(cat.table("meta_column_lineage")
+      .filter("node = 'top' AND column = 'k' AND source LIKE '%r_regionkey'").count() == 1)
+  }
+
+  test("a failed meta append fails the run after the other tables committed") {
+    // meta_runs is the first append, so its failure arrives before the
+    // others have finished
+    Seq("meta_lineage", "meta_runs").foreach { table =>
+      val root = java.nio.file.Files.createTempDirectory("graft_cat_blocked").toString
+      val cat = new Catalog(spark, root)
+      // a plain file where the table's directory belongs
+      val blocked = new java.io.File(root, table)
+      java.nio.file.Files.write(blocked.toPath, "not a table".getBytes("UTF-8"))
+      val err = intercept[Exception] {
+        Catalog.runRecorded(spark, threeNodes(root), cat, "run-x")
+      }
+      assert(err.toString.contains(table) ||
+        Option(err.getCause).exists(_.toString.contains(table)), err)
+      assert(blocked.isFile)
+      assert(dataFiles(root) == (runTables - table).map(_ -> 1).toMap, table)
+      assert(cat.table("meta_node_runs").count() == 3)
+    }
+  }
+
   test("meta_pipelines/meta_nodes registration, drift gate, catalog HWM state") {
     val root = java.nio.file.Files.createTempDirectory("graft_cat2").toString
     val cat = new Catalog(spark, root)

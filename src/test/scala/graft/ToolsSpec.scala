@@ -174,11 +174,11 @@ class ToolsSpec extends SparkSpec {
     val cat = new Catalog(spark, s"$dir/_system")
     val v1 = Seq((1, "a")).toDF("id", "v")
     // two identical snapshots -> ONE version; then a change -> v2
-    cat.recordSchema("sp", "tbl", v1)
-    cat.recordSchema("sp", "tbl", v1)
+    cat.recordSchema("sp", Seq("tbl" -> v1))
+    cat.recordSchema("sp", Seq("tbl" -> v1))
     Thread.sleep(5) // recorded_at must order v1 before v2
     val v2 = Seq((1L, "a", true)).toDF("id", "v", "flag")
-    cat.recordSchema("sp", "tbl", v2)
+    cat.recordSchema("sp", Seq("tbl" -> v2))
 
     val (hc, hist) = captured(Tools.mainExit(Array(
       "schema", s"$dir/_system", "history", "tbl", "--pipeline", "sp")))
@@ -211,7 +211,7 @@ class ToolsSpec extends SparkSpec {
     val cat = new Catalog(spark, s"$dir/_system")
     val frame = Seq((1, "a")).toDF("id", "v")
     frame.write.parquet(s"$dir/sink")
-    cat.recordSchema("dp", "tbl", frame)
+    cat.recordSchema("dp", Seq("tbl" -> frame))
     cat.recordOutputs("dp", "r1", Seq(("tbl", s"$dir/sink", 1L)))
 
     // clean: live sink matches the recorded schema

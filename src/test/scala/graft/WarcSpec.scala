@@ -141,6 +141,22 @@ class WarcSpec extends SparkSpec {
     intercept[IllegalArgumentException] { WarcSource.write(df, dir, mode = "error") }
   }
 
+  test("an empty partition's zero-byte part file reads as zero records") {
+    // one row over two slices: slice 0 is empty, and the writer still
+    // leaves a part file for partition 0
+    val rows = spark.sparkContext.parallelize(Seq("only doc"), 2)
+    val df = rows.toDF("content")
+    Seq("gzip", "zstd", "none").foreach { codec =>
+      val dir = tmp() + s"/$codec"
+      assert(WarcSource.write(df, dir, codec = codec) == 1L)
+      val parts = new File(dir).listFiles().filter(_.getName.startsWith("part-"))
+      assert(parts.exists(_.length == 0), parts.map(f => f.getName -> f.length).toSeq)
+      val back = WarcSource.read(spark, dir).collect()
+      assert(back.length == 1, codec)
+      assert(new String(back(0).getAs[Array[Byte]]("content"), "UTF-8") == "only doc")
+    }
+  }
+
   test("zstd codec: one-frame-per-record write reads back through setContinuous") {
     val dir = tmp() + "/z"
     val df = Seq(("https://a.example/1", "zstd doc one"),
