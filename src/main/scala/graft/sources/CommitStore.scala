@@ -5,11 +5,11 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 /**
  * The ONE primitive every log-structured table commit needs: atomically
  * publish a fully-written payload at a target path IFF nothing is there
- * yet ("put-if-absent"). Both table formats funnel their version claims
- * through it — Delta's `_delta_log/%020d.json` ([[DeltaWriter.tryPublish]],
- * also used by [[DeltaDvWriter]] and [[DeltaMaintenance]]) and Iceberg's
- * `metadata/vN.metadata.json` ([[IcebergSource.tryPublishMeta]], also
- * [[IcebergMaintenance]]).
+ * yet ("put-if-absent"). Its single caller is the one optimistic-commit
+ * loop, [[OptimisticCommit.run]]: every Delta and Iceberg commit claims
+ * its version there, through its format's publish function — Delta's
+ * `_delta_log/%020d.json` ([[DeltaWriter.publish]]) and Iceberg's
+ * `metadata/vN.metadata.json` ([[IcebergSource.publishMeta]]).
  *
  * The primitive is STORE-dependent, which is why it is pluggable (the
  * same seam delta-spark's LogStore API exposes — see the public delta.io

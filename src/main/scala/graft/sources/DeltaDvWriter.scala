@@ -46,7 +46,7 @@ import scala.jdk.CollectionConverters._
  */
 object DeltaDvWriter {
 
-  import DeltaWriter.{q, tryPublish}
+  import DeltaWriter.q
 
   final case class DeleteResult(version: Long, deletedRows: Long,
                                 filesTouched: Int, dvFiles: Int)
@@ -161,11 +161,7 @@ object DeltaDvWriter {
       : RowCommitResult = {
     require(DeltaLog.isDeltaTable(spark, root), s"$root is not a Delta table")
     val f = fs(spark, root)
-    var attempt = 0
-    while (true) {
-      attempt += 1
-      require(attempt <= 5,
-        s"gave up row-level commit at $root after $attempt conflicted attempts")
+    def attempt(at: OptimisticCommit.Attempt): OptimisticCommit.Step[RowCommitResult] = {
       val snap0 = DeltaLog.snapshot(spark, root)
       // an evolving commit was planned against a specific schema — a
       // concurrent schema change must abort, not clobber the other
@@ -178,10 +174,9 @@ object DeltaDvWriter {
       val effSchema = evolve.map(_.schema).getOrElse(snap0.schema)
       // SetTransaction idempotence: a checkpoint-replayed micro-batch
       // whose (appId, version) already committed must be a no-op
-      txn.foreach { case (appId, v) =>
-        if (snap0.transactions.get(appId).exists(_ >= v))
-          return RowCommitResult(snap0.version, 0L, 0L, 0, 0, 0)
-      }
+      val replayed = txn.exists { case (appId, v) =>
+        snap0.transactions.get(appId).exists(_ >= v) }
+      if (replayed) return OptimisticCommit.Finish(noCommit(snap0.version))
       val mapped =
         snap0.configuration.getOrElse("delta.columnMapping.mode", "none") != "none"
       val physOf: Map[String, String] =
@@ -244,6 +239,9 @@ object DeltaDvWriter {
           .groupBy("_gf_file")
           .agg(sort_array(collect_set(col("_gf_ridx"))).as("_gf_pos"))
         val descriptors = writeDvFiles(spark, root, snap, grouped)
+        val dvBins = descriptors.map(_.enc).distinct
+        at.stage(dvBins.map(enc => DeletionVectors.dvFilePath(root,
+          DeletionVectors.Descriptor("u", enc, None, 0, 0L))))
         val newDeleted = descriptors.map(_.newCount).sum
         val partCols = snap.partitionColumns
         val nonce = java.lang.Long.toHexString(System.nanoTime())
@@ -282,6 +280,7 @@ object DeltaDvWriter {
               nonce, countRows = true)
           case None => (Nil, 0L)
         }
+        at.stage(adds0.map(a => new Path(root, a.path)))
         // a no-match merge stages empty part files — don't commit them
         val (emptyAdds, adds) = adds0.partition(_.numRecords.contains(0L))
         emptyAdds.foreach(a => f.delete(new Path(root, a.path), false))
@@ -294,23 +293,15 @@ object DeltaDvWriter {
             case (k, v) => a.partitionValues.get(physOf.getOrElse(k, k))
               .orElse(a.partitionValues.get(k)).flatten.contains(v)
           })
-          if (escaped.nonEmpty) {
-            // reclaim EVERY artifact of the aborted attempt — the staged
-            // adds AND this attempt's DV bin files (same as the lost-race
-            // path; leaving the bins would leak uncommitted bitmaps)
-            adds.foreach(a => f.delete(new Path(root, a.path), false))
-            descriptors.map(_.enc).distinct.foreach { enc =>
-              f.delete(DeletionVectors.dvFilePath(root, DeletionVectors.Descriptor(
-                "u", enc, None, 0, 0L)), false)
-            }
-            throw new IllegalArgumentException(
-              s"partition-scoped merge $partitionFilter: appended rows land " +
-                s"outside the scope (e.g. ${escaped.head.partitionValues}) — " +
-                "aborting before commit")
-          }
+          // the funnel reclaims every artifact of the aborted attempt —
+          // the staged adds AND this attempt's DV bin files
+          if (escaped.nonEmpty) throw new IllegalArgumentException(
+            s"partition-scoped merge $partitionFilter: appended rows land " +
+              s"outside the scope (e.g. ${escaped.head.partitionValues}) — " +
+              "aborting before commit")
         }
         if (descriptors.isEmpty && adds.isEmpty)
-          return RowCommitResult(snap0.version, 0L, 0L, 0, 0, 0)
+          return OptimisticCommit.Finish(noCommit(snap0.version))
 
         // ---- CDF change files: deleted rows AND inserted rows (cdc
         // actions supersede add/remove for change purposes, so a commit
@@ -349,6 +340,7 @@ object DeltaDvWriter {
             stageCdc(spark, root, changes,
               partCols.map(c => physOf.getOrElse(c, c)), nonce)
           }
+        at.stage(cdcActions.map(c => new Path(root, c.path)))
 
         // ---- commit: remove + re-add with DV, protocol upgrade
         val now = System.currentTimeMillis()
@@ -367,15 +359,10 @@ object DeltaDvWriter {
             snap0.tableId.getOrElse(java.util.UUID.randomUUID().toString),
             e.schema, snap0.partitionColumns, now, e.configuration)
         }
-        txn.foreach { case (appId, v) =>
-          lines += s"""{"txn":{"appId":${q(appId)},"version":$v,"lastUpdated":$now}}"""
-        }
+        txn.foreach { case (appId, v) => lines += DeltaWriter.txnJson(appId, v, now) }
         descriptors.foreach { d =>
           val a = byFile.getOrElse(d.file, throw new IllegalStateException(
             s"matched file ${d.file} not in snapshot"))
-          val pvs = a.partitionValues.map { case (k, v) =>
-            s"${q(k)}:${v.map(q).getOrElse("null")}"
-          }.mkString(",")
           // DV writer requirement (PROTOCOL.md): a DV-carrying add MUST
           // record stats with the file's PHYSICAL numRecords and
           // tightBounds=false — delta-spark DML on the table fails
@@ -387,46 +374,36 @@ object DeltaDvWriter {
           val n = a.numRecords.getOrElse(DeltaWriter.parquetRowCount(
             spark.sessionState.newHadoopConf(),
             new Path(DeltaLog.absolutize(root, a.path))))
-          val stats = q(DeltaStats.loosen(
-            a.stats.getOrElse(s"""{"numRecords":$n}"""), n))
+          val stats = DeltaStats.loosen(
+            a.stats.getOrElse(s"""{"numRecords":$n}"""), n)
           // the path is re-emitted exactly as the log stored it
-          lines += s"""{"remove":{"path":${q(a.path)},"deletionTimestamp":$now,"dataChange":true}}"""
-          lines += s"""{"add":{"path":${q(a.path)},"partitionValues":{$pvs},"size":${a.size},"modificationTime":${a.modificationTime},"dataChange":true,"stats":$stats,"deletionVector":{"storageType":"u","pathOrInlineDv":${q(d.enc)},"offset":${d.offset},"sizeInBytes":${d.size},"cardinality":${d.cardinality}}}}"""
+          lines += DeltaWriter.removeJson(a.path, now, dataChange = true)
+          lines += DeltaWriter.addJson(a.path, a.copy(stats = Some(stats),
+            deletionVector = Some(DeletionVectors.Descriptor(
+              "u", d.enc, Some(d.offset), d.size, d.cardinality))),
+            dataChange = true)
         }
-        adds.foreach { a =>
-          val pvs = a.partitionValues.map { case (k, v) =>
-            s"${q(k)}:${v.map(q).getOrElse("null")}"
-          }.mkString(",")
-          lines += s"""{"add":{"path":${q(DeltaWriter.encodePath(a.path))},"partitionValues":{$pvs},"size":${a.size},"modificationTime":${a.modificationTime},"dataChange":true${DeltaWriter.statsFragment(a)}}}"""
-        }
+        adds.foreach(a => lines +=
+          DeltaWriter.addJson(DeltaWriter.encodePath(a.path), a, dataChange = true))
         cdcActions.foreach { c =>
-          val pvs = c.partitionValues.map { case (k, v) =>
-            s"${q(k)}:${v.map(q).getOrElse("null")}"
-          }.mkString(",")
-          lines += s"""{"cdc":{"path":${q(DeltaWriter.encodePath(c.path))},"partitionValues":{$pvs},"size":${c.size},"dataChange":false}}"""
+          lines += s"""{"cdc":{"path":${q(DeltaWriter.encodePath(c.path))},"partitionValues":${DeltaWriter.partitionValuesJson(c.partitionValues)},"size":${c.size},"dataChange":false}}"""
         }
+        // a lost claim means the snapshot moved (files may have been
+        // rewritten/overwritten): the funnel reclaims this attempt's
+        // artifacts and the next attempt RE-PLANS from fresh metadata —
+        // positions are never rebased blindly
         val version = snap0.version + 1
-        if (tryPublish(f, root, version, lines.toSeq, nonce)) {
-          if (checkpointInterval > 0 && version > 0 &&
-            version % checkpointInterval == 0)
-            DeltaWriter.writeCheckpoint(spark, root, version)
-          return RowCommitResult(version, newDeleted, appended,
-            descriptors.size, adds.size,
-            descriptors.map(_.enc).distinct.size)
-        }
-        // lost the version race: the snapshot moved (files may have been
-        // rewritten/overwritten) — reclaim this attempt's artifacts and
-        // RE-PLAN from fresh metadata, never rebase positions blindly
-        descriptors.map(_.enc).distinct.foreach { enc =>
-          f.delete(DeletionVectors.dvFilePath(root, DeletionVectors.Descriptor(
-            "u", enc, None, 0, 0L)), false)
-        }
-        adds.foreach(a => f.delete(new Path(root, a.path), false))
-        cdcActions.foreach(c => f.delete(new Path(root, c.path), false))
+        OptimisticCommit.Publish(
+          DeltaWriter.publish(spark, f, root, version, lines.toSeq, nonce,
+            checkpointInterval),
+          RowCommitResult(version, newDeleted, appended,
+            descriptors.size, adds.size, dvBins.size))
       } finally { matched.unpersist(); rp.cleanup() }
     }
-    throw new IllegalStateException("unreachable")
+    OptimisticCommit.run(s"Delta $operation", f, root)(attempt)
   }
+
+  private def noCommit(version: Long) = RowCommitResult(version, 0L, 0L, 0, 0, 0)
 
   // ------------------------------------------------------------- scanning
 

@@ -81,16 +81,10 @@ object DeltaMaintenance {
     require(missing.isEmpty,
       s"cannot restore $root to version $version: ${missing.size} data " +
         s"files were vacuumed (e.g. ${missing.head.path})")
-    var attempt = 0
-    while (true) {
-      attempt += 1
-      require(attempt <= 20,
-        s"gave up RESTORE commit at $root after 20 attempts")
+    OptimisticCommit.run("Delta restore", f, root) { _ =>
       val cur = DeltaLog.snapshot(spark, root)
       require(version <= cur.version,
         s"restore target $version is above current ${cur.version}")
-      if (version == cur.version)
-        return RestoreResult(cur.version, version, 0, 0)
       val curBy = cur.files.map(a => a.path -> a).toMap
       val tgtBy = tgt.files.map(a => a.path -> a).toMap
       // re-add files absent now or carrying a DIFFERENT deletion vector
@@ -100,43 +94,29 @@ object DeltaMaintenance {
       val metaChanged = cur.schema.json != tgt.schema.json ||
         cur.partitionColumns != tgt.partitionColumns ||
         cur.configuration != tgt.configuration
-      if (adds.isEmpty && removes.isEmpty && !metaChanged)
-        return RestoreResult(cur.version, version, 0, 0)
-      val now = System.currentTimeMillis()
-      val lines = scala.collection.mutable.ArrayBuffer[String]()
-      lines += s"""{"commitInfo":{"timestamp":$now,"operation":"RESTORE","operationParameters":{"version":${q(version.toString)}},"engineInfo":"graft-native-delta"}}"""
-      if (metaChanged)
-        // the restore must carry the TARGET version's configuration too —
-        // dropping it would wipe delta.columnMapping.mode / CDF flags
-        lines += DeltaWriter.metaDataJson(
-          tgt.tableId.getOrElse(java.util.UUID.randomUUID().toString),
-          tgt.schema, tgt.partitionColumns, now, tgt.configuration)
-      // snapshot paths are already log-encoded: emit them verbatim
-      // (re-encoding would '%'→'%25' hive-escaped partition dirs and the
-      // removes would miss the live add keys)
-      removes.foreach { a =>
-        lines += s"""{"remove":{"path":${q(a.path)},"deletionTimestamp":$now,"dataChange":true}}"""
+      if (version == cur.version || (adds.isEmpty && removes.isEmpty && !metaChanged))
+        OptimisticCommit.Finish(RestoreResult(cur.version, version, 0, 0))
+      else {
+        val now = System.currentTimeMillis()
+        val lines = scala.collection.mutable.ArrayBuffer[String]()
+        lines += s"""{"commitInfo":{"timestamp":$now,"operation":"RESTORE","operationParameters":{"version":${q(version.toString)}},"engineInfo":"graft-native-delta"}}"""
+        if (metaChanged)
+          // the restore must carry the TARGET version's configuration too —
+          // dropping it would wipe delta.columnMapping.mode / CDF flags
+          lines += DeltaWriter.metaDataJson(
+            tgt.tableId.getOrElse(java.util.UUID.randomUUID().toString),
+            tgt.schema, tgt.partitionColumns, now, tgt.configuration)
+        // both sides are snapshot files: their log paths are re-emitted
+        // verbatim, deletion vectors included
+        removes.foreach(a => lines += DeltaWriter.removeJson(a.path, now, dataChange = true))
+        adds.foreach(a => lines += DeltaWriter.addJson(a.path, a, dataChange = true))
+        val newVersion = cur.version + 1
+        OptimisticCommit.Publish(
+          DeltaWriter.publish(spark, f, root, newVersion, lines.toSeq,
+            java.lang.Long.toHexString(System.nanoTime()), checkpointInterval),
+          RestoreResult(newVersion, version, adds.size, removes.size))
       }
-      adds.foreach { a =>
-        val pvs = a.partitionValues.map { case (k, v) =>
-          s"${q(k)}:${v.map(q).getOrElse("null")}"
-        }.mkString(",")
-        val dv = a.deletionVector.map(d =>
-          s""","deletionVector":{"storageType":${q(d.storageType)},"pathOrInlineDv":${q(d.pathOrInlineDv)}${
-            d.offset.map(o => s""","offset":$o""").getOrElse("")},"sizeInBytes":${d.sizeInBytes},"cardinality":${d.cardinality}}""")
-          .getOrElse("")
-        lines += s"""{"add":{"path":${q(a.path)},"partitionValues":{$pvs},"size":${a.size},"modificationTime":${a.modificationTime},"dataChange":true${DeltaWriter.statsFragment(a)}$dv}}"""
-      }
-      val newVersion = cur.version + 1
-      val nonce = java.lang.Long.toHexString(System.nanoTime())
-      if (DeltaWriter.tryPublish(f, root, newVersion, lines.toSeq, nonce)) {
-        if (checkpointInterval > 0 && newVersion % checkpointInterval == 0)
-          DeltaWriter.writeCheckpoint(spark, root, newVersion)
-        return RestoreResult(newVersion, version, adds.size, removes.size)
-      }
-      // lost the race: rebase on the new current state and retry
     }
-    throw new IllegalStateException("unreachable")
   }
 
   private def fs(spark: SparkSession, root: String): FileSystem =
@@ -299,46 +279,32 @@ object DeltaMaintenance {
     val bytesAdded = adds.map(_.size).sum
 
     // ---- commit: remove+add with dataChange=false, conflict-checked
-    var attempt = 0
-    while (true) {
-      attempt += 1
-      require(attempt <= 20, s"gave up publishing OPTIMIZE commit at $root after 20 attempts")
+    OptimisticCommit.run("Delta optimize", f, root,
+        staged = adds.map(a => new Path(root, a.path))) { _ =>
       val current = DeltaLog.snapshot(spark, root)
       val currentByPath = current.files.map(a => a.path -> a.deletionVector).toMap
       // a file must still be active AND carry the SAME deletion vector we
       // planned against: a concurrent overwrite/optimize retiring it, or
       // a concurrent DV delete marking more rows, would make this commit
-      // resurrect dead rows
-      if (!removes.forall(r => currentByPath.get(r.path).contains(r.deletionVector))) {
-        adds.foreach(a => f.delete(new Path(root, a.path), false))
+      // resurrect dead rows. A conflict ABORTS (the staged files are
+      // reclaimed) — rebasing cannot repair a rewrite of retired inputs
+      if (!removes.forall(r => currentByPath.get(r.path).contains(r.deletionVector)))
         throw new IllegalStateException(
           s"concurrent commit at $root changed files being optimized — rerun optimize")
-      }
       val version = current.version + 1
       val now = System.currentTimeMillis()
-      import DeltaWriter.{q, encodePath}
       val lines = scala.collection.mutable.ArrayBuffer[String]()
       val zp = if (zorderBy.isEmpty) "" else zorderBy.mkString(",")
-      lines += s"""{"commitInfo":{"timestamp":$now,"operation":"OPTIMIZE","operationParameters":{"targetSize":${q(targetFileBytes.toString)},"zOrderBy":${q(zp)}},"engineInfo":"graft-native-delta"}}"""
+      lines += s"""{"commitInfo":{"timestamp":$now,"operation":"OPTIMIZE","operationParameters":{"targetSize":${DeltaWriter.q(targetFileBytes.toString)},"zOrderBy":${DeltaWriter.q(zp)}},"engineInfo":"graft-native-delta"}}"""
       // removes re-emit the snapshot's log-encoded paths verbatim; only
       // the adds (fresh filesystem-relative paths) need encoding
-      removes.foreach { a =>
-        lines += s"""{"remove":{"path":${q(a.path)},"deletionTimestamp":$now,"dataChange":false}}"""
-      }
-      adds.foreach { a =>
-        val pvs = a.partitionValues.map { case (k, v) =>
-          s"${q(k)}:${v.map(q).getOrElse("null")}"
-        }.mkString(",")
-        lines += s"""{"add":{"path":${q(encodePath(a.path))},"partitionValues":{$pvs},"size":${a.size},"modificationTime":${a.modificationTime},"dataChange":false${DeltaWriter.statsFragment(a)}}}"""
-      }
-      if (DeltaWriter.tryPublish(f, root, version, lines.toSeq, nonce)) {
-        if (checkpointInterval > 0 && version % checkpointInterval == 0)
-          DeltaWriter.writeCheckpoint(spark, root, version)
-        return OptimizeResult(Some(version), removes.size, adds.size,
-          bytesRemoved, bytesAdded)
-      }
+      removes.foreach(a => lines += DeltaWriter.removeJson(a.path, now, dataChange = false))
+      adds.foreach(a =>
+        lines += DeltaWriter.addJson(DeltaWriter.encodePath(a.path), a, dataChange = false))
+      OptimisticCommit.Publish(
+        DeltaWriter.publish(spark, f, root, version, lines.toSeq, nonce, checkpointInterval),
+        OptimizeResult(Some(version), removes.size, adds.size, bytesRemoved, bytesAdded))
     }
-    throw new IllegalStateException("unreachable")
   }
 
   /**

@@ -20,7 +20,7 @@ import org.apache.spark.sql.types._
  *     ATOMIC RENAME of a hidden temp file (the same optimistic-concurrency
  *     primitive every Delta implementation uses on rename-consistent
  *     stores); on collision the writer re-reads the log, rebases removes,
- *     and retries at the next version
+ *     and retries at the next version ([[OptimisticCommit]])
  *   - `append` adds files; `overwrite` adds files and emits `remove` for
  *     every previously-active file (old data files stay on disk — that is
  *     what makes [[DeltaLog]] time travel work); `ignore` /
@@ -266,26 +266,21 @@ object DeltaWriter {
       }
     }
 
-    // ---- build + atomically publish the commit (optimistic retry loop)
+    // ---- build + atomically publish the commit: each attempt rebases
+    // onto the table as it is NOW; the staged data files serve every
+    // attempt and are reclaimed if none of them commits
     val tableId = prior.flatMap(_.tableId)
       .getOrElse(java.util.UUID.randomUUID().toString)
-    var attempt = 0
-    while (true) {
-      attempt += 1
-      require(attempt <= 20, s"gave up publishing Delta commit at $root after 20 attempts")
+    def attempt(): OptimisticCommit.Step[Commit] = {
       val vs = DeltaLog.versions(spark, root)
       val version = if (vs.isEmpty) 0L else vs.last + 1
       // rebase: overwrite removes whatever is active NOW
       val current = if (vs.isEmpty) None else Some(DeltaLog.snapshot(spark, root))
       // a concurrent writer may have committed our txn while we raced:
-      // abandon (the moved data files are uncommitted — vacuumable, never
-      // visible to readers)
-      txn.foreach { case (appId, v) =>
-        if (current.exists(_.transactions.get(appId).exists(_ >= v))) {
-          adds.foreach(a => f.delete(new Path(root, a.path), false))
-          return Commit(current.get.version, 0L)
-        }
-      }
+      // abandon (the staged data files are reclaimed, never visible)
+      val replayed = txn.exists { case (appId, v) =>
+        current.exists(_.transactions.get(appId).exists(_ >= v)) }
+      if (replayed) return OptimisticCommit.Finish(Commit(current.get.version, 0L))
       // an evolving append was planned against a specific schema — a
       // concurrent schema change must abort, not clobber it
       evolution.foreach(e => require(current.exists(_.schema.json == e.baselineJson),
@@ -315,32 +310,16 @@ object DeltaWriter {
         // evolving/overwriting commits keep the table's configuration;
         // mapped tables' effSchema carries the mapping metadata
         lines += metaDataJson(tableId, effSchema, partCols, now, effConf)
-      txn.foreach { case (appId, v) =>
-        lines += s"""{"txn":{"appId":${q(appId)},"version":$v,"lastUpdated":$now}}"""
-      }
-      // snapshot paths are ALREADY log-encoded — re-emit them exactly as
-      // the log stored them (encodePath is not idempotent: '%' → '%25',
-      // so re-encoding a hive-escaped path would orphan the live add)
+      txn.foreach { case (appId, v) => lines += txnJson(appId, v, now) }
       if (isOverwrite) current.foreach(_.files.filter(a => !scoped || inScope(a))
-        .foreach { a =>
-          lines += s"""{"remove":{"path":${q(a.path)},"deletionTimestamp":$now,"dataChange":true}}"""
-        })
-      adds.foreach { a =>
-        val pvs = a.partitionValues.map { case (k, v) =>
-          s"${q(k)}:${v.map(q).getOrElse("null")}"
-        }.mkString(",")
-        lines += s"""{"add":{"path":${q(encodePath(a.path))},"partitionValues":{$pvs},"size":${a.size},"modificationTime":${a.modificationTime},"dataChange":true${statsFragment(a)}}}"""
-      }
-      // rename-if-absent is the commit: on rename-consistent stores two
-      // writers cannot both claim a version
-      if (tryPublish(f, root, version, lines.toSeq, nonce)) {
-        if (checkpointInterval > 0 && version > 0 && version % checkpointInterval == 0)
-          writeCheckpoint(spark, root, version)
-        return Commit(version, rows)
-      }
-      // lost the race: rebase and retry
+        .foreach(a => lines += removeJson(a.path, now, dataChange = true)))
+      adds.foreach(a => lines += addJson(encodePath(a.path), a, dataChange = true))
+      OptimisticCommit.Publish(
+        publish(spark, f, root, version, lines.toSeq, nonce, checkpointInterval),
+        Commit(version, rows))
     }
-    throw new IllegalStateException("unreachable")
+    OptimisticCommit.run("Delta write", f, root,
+      staged = adds.map(a => new Path(root, a.path)))(_ => attempt())
   }
 
   /** The struct type holding the member at dot `path`'s tail — i.e.
@@ -384,43 +363,22 @@ object DeltaWriter {
    * and a rename would orphan every existing file.
    */
   def renameColumn(spark: SparkSession, root: String, from: String,
-                   to: String): Commit = {
-    val f = fs(spark, root)
-    var attempts = 0
-    while (attempts < 10) {
-      attempts += 1
+                   to: String): Commit =
+    OptimisticCommit.run("Delta renameColumn", fs(spark, root), root) { _ =>
       val snap = DeltaLog.snapshot(spark, root)
-      require(snap.configuration.getOrElse("delta.columnMapping.mode", "none") != "none",
-        s"renameColumn requires a column-mapped table (set " +
-          s"delta.columnMapping.mode); $root is unmapped — its logical " +
-          "names are the physical parquet columns")
+      val (path, parent) = mappedColumn(snap, root, "renameColumn", from,
+        "its logical names are the physical parquet columns")
       require(!to.contains("."),
         s"'$to' must be a leaf name — a rename cannot move a field " +
           "between structs")
-      val path = from.split("\\.").toSeq
-      val parent = parentStructAt(snap.schema, path).getOrElse(
-        throw new IllegalArgumentException(
-          s"no column '$from' in ${snap.schema.simpleString} " +
-            "(nested paths navigate struct members only)"))
-      require(parent.fieldNames.contains(path.last),
-        s"no column '$from' in ${snap.schema.simpleString}")
       require(!parent.fieldNames.contains(to),
         s"column '${(path.init :+ to).mkString(".")}' already exists")
       val newSchema = editNested(snap.schema, path,
         fd => Some(fd.copy(name = to)))
-      val newParts = snap.partitionColumns.map(c => if (c == from) to else c)
-      val now = System.currentTimeMillis()
-      val lines = Seq(
-        s"""{"commitInfo":{"timestamp":$now,"operation":"RENAME COLUMN","operationParameters":{"from":${q(from)},"to":${q(to)}},"engineInfo":"graft-native-delta"}}""",
-        metaDataJson(snap.tableId.getOrElse(java.util.UUID.randomUUID().toString),
-          newSchema, newParts, now, snap.configuration))
-      if (tryPublish(f, root, snap.version + 1, lines,
-          java.lang.Long.toHexString(System.nanoTime())))
-        return Commit(snap.version + 1, 0L)
-      // lost the race: rebase onto the new snapshot and retry
+      schemaChange(spark, root, snap, "RENAME COLUMN",
+        s""""from":${q(from)},"to":${q(to)}""", newSchema,
+        snap.partitionColumns.map(c => if (c == from) to else c))
     }
-    throw new IllegalStateException(s"renameColumn lost 10 commit races at $root")
-  }
 
   /**
    * Metadata-only DROP of a logical column on a COLUMN-MAPPED table —
@@ -433,23 +391,11 @@ object DeltaWriter {
    * consuming the table fails loudly at the drop commit — by design
    * (resuming across a drop silently truncates the consumer's output).
    */
-  def dropColumn(spark: SparkSession, root: String, name: String): Commit = {
-    val f = fs(spark, root)
-    var attempts = 0
-    while (attempts < 10) {
-      attempts += 1
+  def dropColumn(spark: SparkSession, root: String, name: String): Commit =
+    OptimisticCommit.run("Delta dropColumn", fs(spark, root), root) { _ =>
       val snap = DeltaLog.snapshot(spark, root)
-      require(snap.configuration.getOrElse("delta.columnMapping.mode", "none") != "none",
-        s"dropColumn requires a column-mapped table (set " +
-          s"delta.columnMapping.mode); $root is unmapped — dropping would " +
-          "require rewriting every data file")
-      val path = name.split("\\.").toSeq
-      val parent = parentStructAt(snap.schema, path).getOrElse(
-        throw new IllegalArgumentException(
-          s"no column '$name' in ${snap.schema.simpleString} " +
-            "(nested paths navigate struct members only)"))
-      require(parent.fieldNames.contains(path.last),
-        s"no column '$name' in ${snap.schema.simpleString}")
+      val (path, parent) = mappedColumn(snap, root, "dropColumn", name,
+        "dropping would require rewriting every data file")
       require(!snap.partitionColumns.contains(name),
         s"'$name' is a partition column — repartition the table instead")
       require(path.size > 1 || snap.schema.fields.length > 1,
@@ -457,18 +403,43 @@ object DeltaWriter {
       require(path.size == 1 || parent.fields.length > 1,
         s"cannot drop '$name' — it is the last member of its struct " +
           "(parquet forbids empty groups); drop the struct itself")
-      val newSchema = editNested(snap.schema, path, _ => None)
-      val now = System.currentTimeMillis()
-      val lines = Seq(
-        s"""{"commitInfo":{"timestamp":$now,"operation":"DROP COLUMNS","operationParameters":{"columns":${q(name)}},"engineInfo":"graft-native-delta"}}""",
-        metaDataJson(snap.tableId.getOrElse(java.util.UUID.randomUUID().toString),
-          newSchema, snap.partitionColumns, now, snap.configuration))
-      if (tryPublish(f, root, snap.version + 1, lines,
-          java.lang.Long.toHexString(System.nanoTime())))
-        return Commit(snap.version + 1, 0L)
-      // lost the race: rebase onto the new snapshot and retry
+      schemaChange(spark, root, snap, "DROP COLUMNS", s""""columns":${q(name)}""",
+        editNested(snap.schema, path, _ => None), snap.partitionColumns)
     }
-    throw new IllegalStateException(s"dropColumn lost 10 commit races at $root")
+
+  /** The dot path of `column` and the struct holding it, on a
+    * column-mapped snapshot — where a schema change is metadata-only. */
+  private def mappedColumn(snap: DeltaLog.Snapshot, root: String, op: String,
+                           column: String, unmappedWhy: String): (Seq[String], StructType) = {
+    require(snap.configuration.getOrElse("delta.columnMapping.mode", "none") != "none",
+      s"$op requires a column-mapped table (set delta.columnMapping.mode); " +
+        s"$root is unmapped — $unmappedWhy")
+    val path = column.split("\\.").toSeq
+    val parent = parentStructAt(snap.schema, path).getOrElse(
+      throw new IllegalArgumentException(
+        s"no column '$column' in ${snap.schema.simpleString} " +
+          "(nested paths navigate struct members only)"))
+    require(parent.fieldNames.contains(path.last),
+      s"no column '$column' in ${snap.schema.simpleString}")
+    (path, parent)
+  }
+
+  /** The metadata-only commit of a schema change on `snap`, checkpointed
+    * on the default interval (10) like every other commit. */
+  private def schemaChange(spark: SparkSession, root: String,
+                           snap: DeltaLog.Snapshot, operation: String,
+                           params: String, schema: StructType,
+                           partCols: Seq[String]): OptimisticCommit.Step[Commit] = {
+    val now = System.currentTimeMillis()
+    val version = snap.version + 1
+    val lines = Seq(
+      s"""{"commitInfo":{"timestamp":$now,"operation":${q(operation)},"operationParameters":{$params},"engineInfo":"graft-native-delta"}}""",
+      metaDataJson(snap.tableId.getOrElse(java.util.UUID.randomUUID().toString),
+        schema, partCols, now, snap.configuration))
+    OptimisticCommit.Publish(
+      publish(spark, fs(spark, root), root, version, lines,
+        java.lang.Long.toHexString(System.nanoTime()), checkpointInterval = 10),
+      Commit(version, 0L))
   }
 
   /**
@@ -548,12 +519,52 @@ object DeltaWriter {
     * rename-if-absent on HDFS-contract stores, conditional-put or
     * lock-coordinated on object stores, LOUD refusal where no atomic
     * primitive exists). Returns false when another writer claimed the
-    * version first. */
+    * version first. Called only by [[publish]] and the hammer tests. */
   private[graft] def tryPublish(f: FileSystem, root: String, version: Long,
                                 lines: Seq[String], nonce: String): Boolean =
     CommitStore.forFs(f).putIfAbsent(f,
       new Path(logDir(root), f"$version%020d.json"),
       (lines.mkString("\n") + "\n").getBytes("UTF-8"), nonce)
+
+  /** The one Delta publish, for [[OptimisticCommit.run]]: claim commit
+    * `version`, and after a win write a checkpoint every
+    * `checkpointInterval` versions (never at version 0; 0 disables). */
+  private[sources] def publish(spark: SparkSession, f: FileSystem, root: String,
+                               version: Long, lines: Seq[String], nonce: String,
+                               checkpointInterval: Int): OptimisticCommit.Claim =
+    OptimisticCommit.Claim(
+      () => tryPublish(f, root, version, lines, nonce),
+      () => if (checkpointInterval > 0 && version > 0 &&
+          version % checkpointInterval == 0)
+        writeCheckpoint(spark, root, version))
+
+  /** `{"k":"v",...}` partition values of an add or cdc action. */
+  private[sources] def partitionValuesJson(pv: Map[String, Option[String]]): String =
+    pv.map { case (k, v) => s"${q(k)}:${v.map(q).getOrElse("null")}" }
+      .mkString("{", ",", "}")
+
+  /** An `add` action for `a` at `logPath`. Paths already in the log
+    * (snapshot files) are re-emitted VERBATIM; freshly staged,
+    * filesystem-relative paths go through [[encodePath]] first — it is
+    * not idempotent ('%' -> '%25'), so re-encoding a hive-escaped log
+    * path would orphan the live add. */
+  private[sources] def addJson(logPath: String, a: DeltaLog.AddFile,
+                               dataChange: Boolean): String = {
+    val dv = a.deletionVector.map(d =>
+      s""","deletionVector":{"storageType":${q(d.storageType)},"pathOrInlineDv":${q(d.pathOrInlineDv)}${
+        d.offset.map(o => s""","offset":$o""").getOrElse("")},"sizeInBytes":${d.sizeInBytes},"cardinality":${d.cardinality}}""")
+      .getOrElse("")
+    s"""{"add":{"path":${q(logPath)},"partitionValues":${partitionValuesJson(a.partitionValues)},"size":${a.size},"modificationTime":${a.modificationTime},"dataChange":$dataChange${statsFragment(a)}$dv}}"""
+  }
+
+  /** A `remove` action for the log path `logPath` (emitted verbatim). */
+  private[sources] def removeJson(logPath: String, now: Long,
+                                  dataChange: Boolean): String =
+    s"""{"remove":{"path":${q(logPath)},"deletionTimestamp":$now,"dataChange":$dataChange}}"""
+
+  /** A `txn` (SetTransaction) action — the streaming-sink idempotence key. */
+  private[sources] def txnJson(appId: String, version: Long, now: Long): String =
+    s"""{"txn":{"appId":${q(appId)},"version":$version,"lastUpdated":$now}}"""
 
   /** `configuration` must carry the TABLE's properties — emitting `{}`
     * for a table whose config holds `delta.columnMapping.mode` or

@@ -1,6 +1,7 @@
 package graft.sources
 
 import com.fasterxml.jackson.databind.JsonNode
+import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.avro.generic.{GenericData, GenericRecord}
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
@@ -80,19 +81,15 @@ object IcebergMaintenance {
     }
   }
 
-  /** A concurrent writer claimed the metadata version this maintenance
-    * job planned against; callers re-plan from fresh metadata. */
-  final class ConcurrentCommitException(msg: String) extends RuntimeException(msg)
-
   /** Clone-and-patch the PLAN-TIME metadata json (never whatever is
     * latest at commit time — a concurrent `write()` landing during a
-    * long job must surface as a version-claim conflict, not a silent
-    * lost update) and atomically claim `v(planVersion+1)` via
-    * [[IcebergSource.tryPublishMeta]]. Throws
-    * [[ConcurrentCommitException]] when the claim is lost. */
+    * long job must surface as a lost claim, not a silent lost update) and
+    * publish it as the version after `meta` through
+    * [[IcebergSource.publishMeta]]; a lost claim re-plans the whole
+    * operation against the winner's metadata. */
   private def patchMetadata(spark: SparkSession, root: String,
                             meta: IcebergSource.TableMeta,
-                            patch: com.fasterxml.jackson.databind.node.ObjectNode => Unit): Long = {
+                            patch: ObjectNode => Unit): OptimisticCommit.Claim = {
     val f = fs(spark, root)
     // the ACTUAL plan-time file, not a reconstructed `v$N` name — tables
     // with foreign layouts (e.g. `00001-<uuid>.metadata.json`, version 0)
@@ -101,47 +98,29 @@ object IcebergMaintenance {
     val metaPath = new Path(meta.metadataPath)
     require(f.exists(metaPath), s"plan-time metadata $metaPath vanished")
     val node = mapper.readTree(readText(f, metaPath))
-      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+      .asInstanceOf[ObjectNode]
     patch(node)
-    val version = meta.version + 1
-    // version-0 (non-v-named) tables claim v1; the claim itself is atomic,
-    // but a foreign-layout writer could have appended another lexical file
-    // since planning — verify the latest file is still the plan-time one
-    // right before claiming (best-effort narrow race, then atomic claim)
-    if (meta.version == 0L &&
-        IcebergSource.latestMetadata(f, root).toString != meta.metadataPath)
-      throw new ConcurrentCommitException(
-        s"$root: metadata advanced past plan-time ${meta.metadataPath} " +
-          "while this maintenance job ran — re-plan against the new metadata")
-    if (!tryPublishMeta(f, root, version, mapper.writeValueAsBytes(node),
-        java.util.UUID.randomUUID().toString))
-      throw new ConcurrentCommitException(
-        s"$root: v$version claimed by a concurrent commit while this " +
-          "maintenance job ran — re-plan against the new metadata")
-    writeHint(f, root, version)
-    // from the PATCHED node, not plan-time meta: a set-properties commit
-    // must itself honor the retention it just configured
+    // retention from the PATCHED node, not plan-time meta: a
+    // set-properties commit must itself honor the retention it configures
     val props = Option(node.get("properties")).map(p =>
       p.properties().asScala.map(e =>
         e.getKey -> e.getValue.asText()).toMap).getOrElse(Map.empty)
-    IcebergSource.enforceMetadataRetention(f, root, props, version)
-    version
+    publishMeta(f, root, Some(meta), mapper.writeValueAsBytes(node),
+      java.util.UUID.randomUUID().toString, props)
   }
 
-  /** Bounded re-plan loop around an optimistically-committing body. */
-  private def withReplan[T](what: String)(body: () => T): T = {
-    var attempt = 0
-    while (true) {
-      attempt += 1
-      try return body()
-      catch {
-        case e: ConcurrentCommitException =>
-          if (attempt >= 5) throw new ConcurrentCommitException(
-            s"$what gave up after $attempt conflicted attempts: ${e.getMessage}")
+  /** A metadata-only commit: patch the metadata planned by `plan`,
+    * returning the new metadata version. */
+  private def metadataCommit(spark: SparkSession, root: String, what: String)
+                            (plan: TableMeta => Option[ObjectNode => Unit]): Long =
+    OptimisticCommit.run(s"Iceberg $what", fs(spark, root), root) { _ =>
+      val meta = tableMeta(spark, root)
+      plan(meta) match {
+        case Some(patch) =>
+          OptimisticCommit.Publish(patchMetadata(spark, root, meta, patch), meta.version + 1)
+        case None => OptimisticCommit.Finish(meta.version)
       }
     }
-    throw new IllegalStateException("unreachable")
-  }
 
   /**
    * Bin-pack each partition's small live files (< `targetFileBytes`,
@@ -163,12 +142,13 @@ object IcebergMaintenance {
   def optimize(spark: SparkSession, root: String,
                targetFileBytes: Long = 128L << 20,
                zorderBy: Seq[String] = Nil): OptimizeResult =
-    withReplan(s"optimize($root)")(() =>
-      optimizeOnce(spark, root, targetFileBytes, zorderBy))
+    OptimisticCommit.run("Iceberg optimize", fs(spark, root), root)(at =>
+      optimizeAttempt(spark, root, targetFileBytes, zorderBy, at))
 
-  private def optimizeOnce(spark: SparkSession, root: String,
-                           targetFileBytes: Long,
-                           zorderBy: Seq[String] = Nil): OptimizeResult = {
+  private def optimizeAttempt(spark: SparkSession, root: String,
+                              targetFileBytes: Long, zorderBy: Seq[String],
+                              at: OptimisticCommit.Attempt)
+      : OptimisticCommit.Step[OptimizeResult] = {
     val f = fs(spark, root)
     val meta = tableMeta(spark, root)
     val snap = meta.currentSnapshotId.flatMap(id =>
@@ -216,7 +196,7 @@ object IcebergMaintenance {
         open.filter(_._2.size >= 2).foreach(b => bins += ((part, b._2.toSeq)))
       }
     }
-    if (bins.isEmpty) return OptimizeResult(None, 0, 0, 0L, 0L)
+    if (bins.isEmpty) return OptimisticCommit.Finish(OptimizeResult(None, 0, 0, 0L, 0L))
 
     // one distributed rewrite: basename → bin id, repartition per bin
     val readSchema = {
@@ -238,6 +218,8 @@ object IcebergMaintenance {
     val candidateEntries = bins.flatMap(_._2).toSeq
     val commitUuid = java.util.UUID.randomUUID().toString
     val outDir = new Path(root, s"data/$commitUuid")
+    val manifestPath = new Path(metaDir(root), s"manifest-$commitUuid.avro")
+    at.stage(Seq(outDir, manifestPath))
     // alias-aware scan: a compaction that read pre-rename files under
     // the current name only would REWRITE the renamed column as null —
     // permanent data loss the alias fallback could never repair
@@ -388,7 +370,6 @@ object IcebergMaintenance {
           entry(1, p, sz, n, newSeq, part,
             colStats = IcebergSource.columnStatsMaps(entrySchema, n, leaves, statIds))
         }
-    val manifestPath = new Path(metaDir(root), s"manifest-$commitUuid.avro")
     val manifestLen = writeAvro(conf, manifestPath, entrySchema, entries)
 
     val mlRecord = {
@@ -427,31 +408,14 @@ object IcebergMaintenance {
       .filter(r => Option(r.get("sequence_number"))
         .exists(_.asInstanceOf[Long] >= minKeptSeq))
     val mlPath = new Path(metaDir(root), s"snap-$snapshotId-$commitUuid.avro")
+    at.stage(mlPath)
     writeAvro(conf, mlPath, manifestFileSchema, mlRecord +: deleteMls)
 
-    val now = snapshotId
-    try {
-      patchMetadata(spark, root, meta, { node =>
-        node.put("last-sequence-number", newSeq)
-        node.put("last-updated-ms", now)
-        node.put("current-snapshot-id", snapshotId)
-        val snapNode = mapper.createObjectNode()
-        snapNode.put("snapshot-id", snapshotId)
-        snapNode.put("timestamp-ms", now)
-        snapNode.put("sequence-number", newSeq)
-        meta.currentSnapshotId.foreach(snapNode.put("parent-snapshot-id", _))
-        snapNode.putObject("summary").put("operation", "replace")
-        snapNode.put("manifest-list", mlPath.toString)
+    OptimisticCommit.Publish(patchMetadata(spark, root, meta, { node =>
         // compaction rewrites files under the CURRENT schema: recording
         // its id is what restores alias-free scans (full row-group
         // pushdown) for the compacted generation after a rename
-        snapNode.put("schema-id",
-          Option(node.get("current-schema-id")).map(_.asInt()).getOrElse(0))
-        node.withArray("snapshots").add(snapNode)
-        val logNode = mapper.createObjectNode()
-        logNode.put("snapshot-id", snapshotId)
-        logNode.put("timestamp-ms", now)
-        node.withArray("snapshot-log").add(logNode)
+        addSnapshot(node, meta, snapshotId, newSeq, "replace", mlPath)
         if (zorderBy.nonEmpty) {
           // record the clustering as the DEFAULT sort order (spec §Sort
           // Orders) — declarative metadata every engine can read, and
@@ -471,19 +435,9 @@ object IcebergMaintenance {
           node.withArray("sort-orders").add(mapper.readTree(orderJs))
           node.put("default-sort-order-id", priorMax + 1)
         }
-      })
-    } catch {
-      case e: ConcurrentCommitException =>
-        // a concurrent write() won the version: this attempt's rewrite
-        // outputs are unreferenced — reclaim them, then let the caller
-        // re-plan against the winner's metadata
-        f.delete(outDir, true)
-        f.delete(manifestPath, false)
-        f.delete(mlPath, false)
-        throw e
-    }
-    OptimizeResult(Some(snapshotId), compacted.size, newFiles.size,
-      bins.flatMap(_._2.map(sizeOf)).sum, newFiles.map(_._2).sum)
+      }),
+      OptimizeResult(Some(snapshotId), compacted.size, newFiles.size,
+        bins.flatMap(_._2.map(sizeOf)).sum, newFiles.map(_._2).sum))
   }
 
   /**
@@ -502,13 +456,12 @@ object IcebergMaintenance {
    * new metadata version (unchanged when already current).
    */
   def rollback(spark: SparkSession, root: String, snapshotId: Long): Long =
-    withReplan(s"rollback($root)")(() => {
-      val meta = tableMeta(spark, root)
+    metadataCommit(spark, root, "rollback") { meta =>
       require(meta.snapshots.exists(_.snapshotId == snapshotId),
         s"snapshot $snapshotId not in " +
           s"[${meta.snapshots.map(_.snapshotId).mkString(", ")}]")
-      if (meta.currentSnapshotId.contains(snapshotId)) meta.version
-      else patchMetadata(spark, root, meta, { node =>
+      if (meta.currentSnapshotId.contains(snapshotId)) None
+      else Some { node =>
         val now = System.currentTimeMillis()
         node.put("current-snapshot-id", snapshotId)
         node.put("last-updated-ms", now)
@@ -519,8 +472,8 @@ object IcebergMaintenance {
           node.withArray("snapshot-log").add(logNode)
           ()
         }
-      })
-    })
+      }
+    }
 
   /**
    * Set (or overwrite) table properties as a METADATA-ONLY commit (spec
@@ -542,19 +495,18 @@ object IcebergMaintenance {
       require(n >= 1,
         s"write.metadata.previous-versions-max must be >= 1, got $n")
     }
-    withReplan(s"setProperties($root)")(() => {
-      val meta = tableMeta(spark, root)
-      patchMetadata(spark, root, meta, { node =>
+    metadataCommit(spark, root, "setProperties") { _ =>
+      Some { node =>
         val p =
           if (node.has("properties"))
             node.get("properties")
-              .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+              .asInstanceOf[ObjectNode]
           else node.putObject("properties")
         props.foreach { case (k, v) => p.put(k, v) }
         node.put("last-updated-ms", System.currentTimeMillis())
         ()
-      })
-    })
+      }
+    }
   }
 
   /** Navigate a schema struct node along `path` (CURRENT names, struct
@@ -599,8 +551,7 @@ object IcebergMaintenance {
    */
   def renameColumn(spark: SparkSession, root: String, from: String,
                    to: String): Long =
-    withReplan(s"renameColumn($root)")(() => {
-      val meta = tableMeta(spark, root)
+    metadataCommit(spark, root, "renameColumn") { meta =>
       require(!to.contains("."),
         s"'$to' must be a leaf name — a rename cannot move a field " +
           "between structs")
@@ -658,29 +609,13 @@ object IcebergMaintenance {
             "pre-evolution file generations unreadable behind the alias " +
             "type guard; evolve members only AFTER renaming the struct")
       }
-      patchMetadata(spark, root, meta, { node =>
-        require(node.has("schemas"),
-          "renameColumn requires a metadata layout with a schemas array " +
-            "(v1 single-schema tables cannot retain rename history)")
-        val schemas = node.withArray("schemas")
-        val curId = node.get("current-schema-id").asInt()
-        val cur = schemas.elements().asScala
-          .find(_.get("schema-id").asInt() == curId)
-          .getOrElse(throw new IllegalStateException(
-            s"current-schema-id $curId not in schemas"))
-        val renamed = cur.deepCopy[com.fasterxml.jackson.databind.node.ObjectNode]()
-        val maxId = schemas.elements().asScala.map(_.get("schema-id").asInt()).max
-        renamed.put("schema-id", maxId + 1)
-        val target = fieldChain(renamed, path).getOrElse(
+      Some(evolveSchema("renameColumn") { renamed =>
+        fieldChain(renamed, path).getOrElse(
           throw new IllegalStateException(s"path $from vanished mid-patch"))
-          .last.asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-        target.put("name", to)
-        schemas.add(renamed)
-        node.put("current-schema-id", maxId + 1)
-        node.put("last-updated-ms", System.currentTimeMillis())
-        ()
+          .last.asInstanceOf[ObjectNode]
+          .put("name", to)
       })
-    })
+    }
 
   /**
    * Metadata-only DROP of a column — TOP-LEVEL (`name = "a"`) or a
@@ -697,8 +632,7 @@ object IcebergMaintenance {
    * names from being reclaimed by a different field.
    */
   def dropColumn(spark: SparkSession, root: String, name: String): Long =
-    withReplan(s"dropColumn($root)")(() => {
-      val meta = tableMeta(spark, root)
+    metadataCommit(spark, root, "dropColumn") { meta =>
       val path = name.split("\\.").toSeq
       val chain = fieldChain(meta.schemaJson, path).getOrElse(
         throw new IllegalArgumentException(
@@ -735,46 +669,62 @@ object IcebergMaintenance {
         s"'$name' sources partition field(s) " +
           s"${dangling.map(_.name).mkString(", ")}" +
           " — drop would dangle the partition spec")
-      patchMetadata(spark, root, meta, { node =>
-        require(node.has("schemas"),
-          "dropColumn requires a metadata layout with a schemas array")
-        val schemas = node.withArray("schemas")
-        val curId = node.get("current-schema-id").asInt()
-        val cur = schemas.elements().asScala
-          .find(_.get("schema-id").asInt() == curId)
-          .getOrElse(throw new IllegalStateException(
-            s"current-schema-id $curId not in schemas"))
-        val next = cur.deepCopy[com.fasterxml.jackson.databind.node.ObjectNode]()
-        val maxId = schemas.elements().asScala.map(_.get("schema-id").asInt()).max
-        next.put("schema-id", maxId + 1)
+      Some(evolveSchema("dropColumn") { next =>
         val holder =
           if (path.size == 1) next
           else fieldChain(next, path.init).getOrElse(
             throw new IllegalStateException(s"path $name vanished mid-patch"))
             .last.get("type")
-        val fields = holder.asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+        val fields = holder.asInstanceOf[ObjectNode]
           .withArray("fields")
         val kept = fields.elements().asScala
           .filterNot(_.get("name").asText() == path.last).toSeq
         fields.removeAll()
         kept.foreach(fields.add)
-        schemas.add(next)
-        node.put("current-schema-id", maxId + 1)
-        node.put("last-updated-ms", System.currentTimeMillis())
-        ()
       })
-    })
+    }
+
+  /** The metadata patch of a schema change (Iceberg spec v2 schema
+    * evolution): a copy of the current schema, edited by `edit`, joins
+    * the retained schemas under a fresh schema-id and becomes current. */
+  private def evolveSchema(what: String)(edit: ObjectNode => Unit)
+      : ObjectNode => Unit = { node =>
+    require(node.has("schemas"),
+      s"$what requires a metadata layout with a schemas array")
+    val schemas = node.withArray("schemas")
+    val curId = node.get("current-schema-id").asInt()
+    val next = schemas.elements().asScala
+      .find(_.get("schema-id").asInt() == curId)
+      .getOrElse(throw new IllegalStateException(
+        s"current-schema-id $curId not in schemas"))
+      .deepCopy[ObjectNode]()
+    val maxId = schemas.elements().asScala.map(_.get("schema-id").asInt()).max
+    next.put("schema-id", maxId + 1)
+    edit(next)
+    schemas.add(next)
+    node.put("current-schema-id", maxId + 1)
+    node.put("last-updated-ms", System.currentTimeMillis())
+    ()
+  }
 
   def expireSnapshots(spark: SparkSession, root: String,
                       keepLast: Int = 1,
                       olderThanMs: Option[Long] = None,
-                      dryRun: Boolean = false): ExpireResult =
-    withReplan(s"expireSnapshots($root)")(() =>
-      expireOnce(spark, root, keepLast, olderThanMs, dryRun))
+                      dryRun: Boolean = false): ExpireResult = {
+    val f = fs(spark, root)
+    val res = OptimisticCommit.run("Iceberg expireSnapshots", f, root)(_ =>
+      expirePlan(spark, root, keepLast, olderThanMs, dryRun))
+    // reclaim storage only AFTER the patched metadata committed: a crash
+    // between the two leaves harmless orphan files behind a valid table,
+    // never metadata referencing deleted files (which would brick every
+    // later read and re-expire)
+    if (!dryRun) res.deletedFiles.foreach(p => f.delete(new Path(p), false))
+    res
+  }
 
-  private def expireOnce(spark: SparkSession, root: String,
+  private def expirePlan(spark: SparkSession, root: String,
                          keepLast: Int, olderThanMs: Option[Long],
-                         dryRun: Boolean): ExpireResult = {
+                         dryRun: Boolean): OptimisticCommit.Step[ExpireResult] = {
     require(keepLast >= 1, s"keepLast must be >= 1, got $keepLast")
     val f = fs(spark, root)
     val meta = tableMeta(spark, root)
@@ -785,7 +735,7 @@ object IcebergMaintenance {
       ordered.filter(s => olderThanMs.exists(s.timestampMs >= _)).map(_.snapshotId) ++
       meta.currentSnapshotId.toSeq).toSet
     val expired = ordered.filterNot(s => keepSet.contains(s.snapshotId))
-    if (expired.isEmpty) return ExpireResult(Nil, Nil, dryRun)
+    if (expired.isEmpty) return OptimisticCommit.Finish(ExpireResult(Nil, Nil, dryRun))
 
     // file references per snapshot (manifest list + manifests + data).
     // RETAINED snapshots read strictly (an unreadable manifest there is
@@ -809,12 +759,9 @@ object IcebergMaintenance {
     val keepFiles = retained.flatMap(refs(_, tolerant = false)).toSet
     val doomed = expired.flatMap(refs(_, tolerant = true)).toSet -- keepFiles
 
-    if (!dryRun) {
-      // commit the patched metadata FIRST, then reclaim storage: a crash
-      // between the two leaves harmless orphan files behind a valid
-      // table, never metadata referencing deleted files (which would
-      // brick every later read and re-expire)
-      patchMetadata(spark, root, meta, { node =>
+    val result = ExpireResult(expired.map(_.snapshotId), doomed.toSeq.sorted, dryRun)
+    if (dryRun) OptimisticCommit.Finish(result)
+    else OptimisticCommit.Publish(patchMetadata(spark, root, meta, { node =>
         val snaps = node.withArray("snapshots")
         val keptNodes = snaps.elements().asScala.filter(s =>
           keepSet.contains(s.get("snapshot-id").asLong())).toSeq
@@ -827,10 +774,7 @@ object IcebergMaintenance {
           log.removeAll()
           keptLog.foreach(log.add)
         }
-      })
-      doomed.foreach(p => f.delete(new Path(p), false))
-    }
-    ExpireResult(expired.map(_.snapshotId), doomed.toSeq.sorted, dryRun)
+      }), result)
   }
 
   /**

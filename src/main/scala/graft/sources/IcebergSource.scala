@@ -571,7 +571,10 @@ object IcebergSource {
                         records: Seq[GenericRecord]): Long = {
     val f = path.getFileSystem(conf)
     val w = new DataFileWriter[GenericRecord](new GenericDatumWriter[GenericRecord](schema))
-    w.create(schema, f.create(path, true))
+    // overwrite=false: metadata avro files are WRITE-ONCE (fresh uuid
+    // names); the parse cache above keys on that, so a rewrite in place
+    // must fail loudly here instead of serving stale records there
+    w.create(schema, f.create(path, false))
     try records.foreach(w.append) finally w.close()
     f.getFileStatus(path).getLen
   }
@@ -1526,7 +1529,7 @@ object IcebergSource {
    * ([[applyDeletes]]); a later compaction ([[IcebergMaintenance
    * .optimize]]) is the purge.
    *
-   * Concurrency: the commit claims `v(N+1)` via [[tryPublishMeta]]; a
+   * Concurrency: the commit claims `v(N+1)` via [[publishMeta]]; a
    * lost claim reclaims this attempt's files and RE-PLANS from fresh
    * metadata (a concurrent overwrite/compaction may have retired the
    * very files the positions reference — rebasing blindly would
@@ -1536,17 +1539,13 @@ object IcebergSource {
              partitionFilter: Seq[PartitionPredicate] = Nil): DeleteResult = {
     val conf = spark.sessionState.newHadoopConf()
     val f = fs(spark, root)
-    var attempt = 0
-    while (true) {
-      attempt += 1
-      require(attempt <= 5,
-        s"gave up position-delete commit at $root after $attempt conflicted attempts")
+    def attempt(at: OptimisticCommit.Attempt): OptimisticCommit.Step[DeleteResult] = {
       val meta = tableMeta(spark, root)
       require(meta.formatVersion == 2,
         s"row-level deletes need iceberg format-version 2, $root is v${meta.formatVersion}")
       val snap = meta.currentSnapshotId.flatMap(id =>
         meta.snapshots.find(_.snapshotId == id))
-        .getOrElse(return DeleteResult(None, 0L, 0))
+        .getOrElse(return OptimisticCommit.Finish(DeleteResult(None, 0L, 0)))
       // `partitionFilter` prunes candidate files through the same
       // two-level metadata pruning as read() (manifest bounds, then
       // per-file tuples) — DELETE over one partition of a 100 TB table
@@ -1568,7 +1567,7 @@ object IcebergSource {
         case Some(c) => pruneByBounds(dataFiles0, c, meta, readSchema)
         case None => dataFiles0
       }
-      if (dataFiles.isEmpty) return DeleteResult(None, 0L, 0)
+      if (dataFiles.isEmpty) return OptimisticCommit.Finish(DeleteResult(None, 0L, 0))
 
       val scan0 = scanEntries(spark, meta, readSchema, dataFiles.toSeq)
       val prov = applyDeletes(spark, meta, scan0, dataFiles, posD, eqD)
@@ -1579,6 +1578,7 @@ object IcebergSource {
         dataFiles.map(fe => normSchemeString(fe.path) -> fe.path).toMap
       val commitUuid = java.util.UUID.randomUUID().toString
       val delDir = new Path(root, s"data/$commitUuid")
+      at.stage(delDir)
       // the spec's RESERVED field ids for position-delete columns:
       // conformant external engines resolve these columns BY ID, not
       // name — Spark's parquet writer emits the ids from the
@@ -1608,21 +1608,10 @@ object IcebergSource {
         .repartition(col("file_path"))
         .sortWithinPartitions("file_path", "pos")
         .write.mode("errorifexists").parquet(delDir.toString)
-      val files = graft.core.DriverPar.listFilesNoPerm(f, delDir)
-        .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-        .sortBy(_.getPath.toString)
-      val counts = graft.core.DriverPar.map(files)(s =>
-        parquetRowCount(conf, s.getPath))
-      val rows = counts.sum
-      if (rows == 0L) { f.delete(delDir, true); return DeleteResult(None, 0L, 0) }
-
-      commitDeleteSnapshot(spark, root, meta, files, counts,
-        equalityIds = Nil, commitUuid) match {
-        case Some(snapshotId) => return DeleteResult(Some(snapshotId), rows, files.size)
-        case None => f.delete(delDir, true) // lost the claim: re-plan fresh
-      }
+      commitDeleteSnapshot(spark, root, meta, delDir, equalityIds = Nil,
+        commitUuid, at)
     }
-    throw new IllegalStateException("unreachable")
+    OptimisticCommit.run("Iceberg delete", f, root)(attempt)
   }
 
   /**
@@ -1641,17 +1630,13 @@ object IcebergSource {
    */
   def deleteKeys(spark: SparkSession, root: String, deletedKeys: DataFrame,
                  keys: Seq[String]): DeleteResult = {
-    val conf = spark.sessionState.newHadoopConf()
     val f = fs(spark, root)
-    var attempt = 0
-    while (true) {
-      attempt += 1
-      require(attempt <= 5,
-        s"gave up equality-delete commit at $root after $attempt conflicted attempts")
+    def attempt(at: OptimisticCommit.Attempt): OptimisticCommit.Step[DeleteResult] = {
       val meta = tableMeta(spark, root)
       require(meta.formatVersion == 2,
         s"row-level deletes need iceberg format-version 2, $root is v${meta.formatVersion}")
-      if (meta.currentSnapshotId.isEmpty) return DeleteResult(None, 0L, 0)
+      if (meta.currentSnapshotId.isEmpty)
+        return OptimisticCommit.Finish(DeleteResult(None, 0L, 0))
       // key columns resolve to the table's field ids (top-level only)
       val idOf: Map[String, Int] = meta.schemaJson.get("fields")
         .elements().asScala.map(fd =>
@@ -1664,6 +1649,7 @@ object IcebergSource {
 
       val commitUuid = java.util.UUID.randomUUID().toString
       val delDir = new Path(root, s"data/$commitUuid")
+      at.stage(delDir)
       deletedKeys.select(keys.map { k =>
         val m = new org.apache.spark.sql.types.MetadataBuilder()
           .putLong("parquet.field.id", idOf(k).toLong).build()
@@ -1671,25 +1657,15 @@ object IcebergSource {
       }: _*).distinct()
         .coalesce(1)
         .write.mode("errorifexists").parquet(delDir.toString)
-      val files = graft.core.DriverPar.listFilesNoPerm(f, delDir)
-        .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-        .sortBy(_.getPath.toString)
-      val counts = graft.core.DriverPar.map(files)(s =>
-        parquetRowCount(conf, s.getPath))
-      val rows = counts.sum
-      if (rows == 0L) { f.delete(delDir, true); return DeleteResult(None, 0L, 0) }
-
-      commitDeleteSnapshot(spark, root, meta, files, counts,
-        equalityIds = eqIds, commitUuid) match {
-        case Some(snapshotId) => return DeleteResult(Some(snapshotId), rows, files.size)
-        case None => f.delete(delDir, true) // lost the claim: re-plan fresh
-      }
+      commitDeleteSnapshot(spark, root, meta, delDir, equalityIds = eqIds,
+        commitUuid, at)
     }
-    throw new IllegalStateException("unreachable")
+    OptimisticCommit.run("Iceberg deleteKeys", f, root)(attempt)
   }
 
   /**
-   * Publish a DELETE snapshot tracking `files` (position deletes when
+   * Publish a DELETE snapshot tracking the delete files staged in
+   * `delDir` (nothing to commit when they hold no rows; position deletes when
    * `equalityIds` is empty, equality deletes otherwise) via a content=1
    * DELETES manifest at the next sequence number.
    *
@@ -1697,19 +1673,24 @@ object IcebergSource {
    * (empty) tuples — conformant engines resolve tuples through the spec
    * — so on a partitioned table an UNPARTITIONED spec is registered (or
    * reused) in the metadata and referenced by the delete manifest;
-   * spec 0 serves directly when the table is unpartitioned. Returns the
-   * new snapshot id, or None when the version claim was lost (the
-   * caller reclaims its delete files and re-plans; this method reclaims
-   * its own manifest/manifest-list files).
+   * spec 0 serves directly when the table is unpartitioned. The
+   * manifest and manifest list are staged in `at`, so a lost claim
+   * reclaims them with the caller's delete files and re-plans.
    */
   private def commitDeleteSnapshot(spark: SparkSession, root: String,
-                                   meta: TableMeta,
-                                   files: Seq[org.apache.hadoop.fs.FileStatus],
-                                   counts: Seq[Long],
+                                   meta: TableMeta, delDir: Path,
                                    equalityIds: Seq[Int],
-                                   commitUuid: String): Option[Long] = {
+                                   commitUuid: String,
+                                   at: OptimisticCommit.Attempt)
+      : OptimisticCommit.Step[DeleteResult] = {
     val conf = spark.sessionState.newHadoopConf()
     val f = fs(spark, root)
+    val files = graft.core.DriverPar.listFilesNoPerm(f, delDir)
+      .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
+      .sortBy(_.getPath.toString)
+    val counts = graft.core.DriverPar.map(files)(s =>
+      parquetRowCount(conf, s.getPath))
+    if (counts.sum == 0L) return OptimisticCommit.Finish(DeleteResult(None, 0L, 0))
     val node = mapper.readTree(readText(f, new Path(meta.metadataPath)))
       .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
     val specsNode = node.withArray("partition-specs")
@@ -1755,6 +1736,8 @@ object IcebergSource {
       e
     }
     val manifestPath = new Path(metaDir(root), s"manifest-$commitUuid.avro")
+    val mlPath = new Path(metaDir(root), s"snap-$snapshotId-$commitUuid.avro")
+    at.stage(Seq(manifestPath, mlPath))
     f.mkdirs(metaDir(root))
     val manifestLen = writeAvro(conf, manifestPath, entrySchema, entries)
     val mlRec = {
@@ -1774,46 +1757,41 @@ object IcebergSource {
       r.put("deleted_rows_count", 0L)
       r
     }
-    val mlPath = new Path(metaDir(root), s"snap-$snapshotId-$commitUuid.avro")
     writeAvro(conf, mlPath, manifestFileSchema,
       mlRec +: currentMlRecords(conf, root, meta))
 
     // ---- clone-and-patch the PLAN-TIME metadata (the node read above,
     // delete-spec registration included), claim v(N+1)
-    node.put("last-sequence-number", newSeq)
+    addSnapshot(node, meta, snapshotId, newSeq, "delete", mlPath)
+    OptimisticCommit.Publish(
+      publishMeta(f, root, Some(meta), mapper.writeValueAsBytes(node),
+        commitUuid, meta.properties),
+      DeleteResult(Some(snapshotId), rows, files.size))
+  }
+
+  /** Patch plan-time metadata `node` so a new `operation` snapshot at
+    * sequence `seq`, listing `mlPath` and timestamped by its id, becomes
+    * current (spec §Snapshots) and enters the snapshot-log. Its schema-id
+    * is the CURRENT schema's, not 0: reads key file generations on the
+    * adding snapshot's schema-id to decide alias-free scans. */
+  private[sources] def addSnapshot(node: com.fasterxml.jackson.databind.node.ObjectNode,
+                                   meta: TableMeta, snapshotId: Long, seq: Long,
+                                   operation: String, mlPath: Path): Unit = {
+    node.put("last-sequence-number", seq)
     node.put("last-updated-ms", snapshotId)
     node.put("current-snapshot-id", snapshotId)
-    val snapNode = mapper.createObjectNode()
+    val snapNode = node.withArray("snapshots").addObject()
     snapNode.put("snapshot-id", snapshotId)
     snapNode.put("timestamp-ms", snapshotId)
-    snapNode.put("sequence-number", newSeq)
+    snapNode.put("sequence-number", seq)
     meta.currentSnapshotId.foreach(snapNode.put("parent-snapshot-id", _))
-    snapNode.putObject("summary").put("operation", "delete")
+    snapNode.putObject("summary").put("operation", operation)
     snapNode.put("manifest-list", mlPath.toString)
-    // the CURRENT schema id, not 0: reads key file generations on the
-    // adding snapshot's schema-id to decide alias-free scans
     snapNode.put("schema-id",
       Option(node.get("current-schema-id")).map(_.asInt()).getOrElse(0))
-    node.withArray("snapshots").add(snapNode)
-    if (node.has("snapshot-log")) {
-      val logNode = mapper.createObjectNode()
-      logNode.put("snapshot-id", snapshotId)
-      logNode.put("timestamp-ms", snapshotId)
-      node.withArray("snapshot-log").add(logNode)
-    }
-    val claimOk = (meta.version != 0L ||
-      latestMetadata(f, root).toString == meta.metadataPath) &&
-      tryPublishMeta(f, root, meta.version + 1,
-        mapper.writeValueAsBytes(node), commitUuid)
-    if (claimOk) {
-      writeHint(f, root, meta.version + 1)
-      enforceMetadataRetention(f, root, meta.properties, meta.version + 1)
-      Some(snapshotId)
-    } else {
-      f.delete(manifestPath, false)
-      f.delete(mlPath, false)
-      None
-    }
+    val logNode = node.withArray("snapshot-log").addObject()
+    logNode.put("snapshot-id", snapshotId)
+    logNode.put("timestamp-ms", snapshotId)
   }
 
   // ------------------------------------------------------ incremental read
@@ -2322,12 +2300,35 @@ object IcebergSource {
     * `DeltaWriter.tryPublish` — link(2) locally, rename-if-absent on
     * HDFS-contract stores, conditional-put or lock-coordinated on object
     * stores, loud refusal otherwise). Returns false when a concurrent
-    * committer claimed the version first (caller must rebase onto the
-    * new metadata and retry). */
+    * committer claimed the version first. Called only by [[publishMeta]]
+    * and the hammer tests. */
   private[graft] def tryPublishMeta(f: FileSystem, root: String, version: Long,
                                       bytes: Array[Byte], nonce: String): Boolean =
     CommitStore.forFs(f).putIfAbsent(f,
       new Path(metaDir(root), s"v$version.metadata.json"), bytes, nonce)
+
+  /** The one Iceberg publish, for [[OptimisticCommit.run]]: claim the
+    * version after the plan-time metadata `plan` (v1 for a new table),
+    * then publish the hint and trim old metadata per `properties` (the
+    * committed metadata's). A version-0 plan — foreign-layout metadata
+    * not named `vN` — is claimed only while its file is still the latest:
+    * another engine appending a metadata file since planning is a lost
+    * race, never a `v1` over stale state (the claim itself is atomic; the
+    * check before it narrows the foreign writer's window). */
+  private[sources] def publishMeta(f: FileSystem, root: String,
+                                   plan: Option[TableMeta], bytes: Array[Byte],
+                                   nonce: String,
+                                   properties: Map[String, String]): OptimisticCommit.Claim = {
+    val version = plan.fold(0L)(_.version) + 1
+    OptimisticCommit.Claim(
+      () => !plan.exists(m => m.version == 0L &&
+          latestMetadata(f, root).toString != m.metadataPath) &&
+        tryPublishMeta(f, root, version, bytes, nonce),
+      () => {
+        writeHint(f, root, version)
+        enforceMetadataRetention(f, root, properties, version)
+      })
+  }
 
   /**
    * Honor `write.metadata.previous-versions-max` AT COMMIT TIME: after a
@@ -2524,52 +2525,9 @@ object IcebergSource {
     }
     val entrySchema = entrySchemaFor(partCols, partFieldIds)
 
-    // 1. data files; source columns STAY in the files (spec requirement)
-    // so the layout job partitions on shadow columns carrying the
-    // TRANSFORMED values (hidden partitioning: the transform computes
-    // inside codegen, rows route by result value)
-    val commitUuid = java.util.UUID.randomUUID().toString
-    val dataDir = new Path(root, s"data/$commitUuid")
-    if (partitionBy.isEmpty)
-      data.write.mode("errorifexists").parquet(dataDir.toString)
-    else {
-      val shadowed = transforms.foldLeft(data)((d, t) =>
-        d.withColumn(s"_p_${t.fieldName}",
-          transformColumn(t, srcTypeOf(t.sourceCol))))
-      // optimized write: cluster by the TRANSFORMED values first, so
-      // file count tracks partitions instead of tasks x partitions.
-      // HASH clustering, not range: same one-task-per-value file count
-      // without RangePartitioner's extra sampling pass over the input
-      val staged =
-        if (clusterWrite)
-          shadowed.repartition(
-            transforms.map(t => col(s"_p_${t.fieldName}")): _*)
-        else shadowed
-      staged.write.mode("errorifexists")
-        .partitionBy(transforms.map(t => s"_p_${t.fieldName}"): _*)
-        .parquet(dataDir.toString)
-    }
-    // everything below can fail terminally (null partition value, schema
-    // conflict surfaced on rebase, 20-attempt cap, I/O errors); the staged
-    // parquet under data/$commitUuid is referenced by NOTHING until
-    // tryPublishMeta wins, so a terminal failure must reclaim it — the
-    // lost-race cleanup inside the loop only covers manifest/ml files
-    try {
-    val files = graft.core.DriverPar.listFilesNoPerm(f, dataDir)
-      .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-      .sortBy(_.getPath.toString)
-    // one footer read per staged file yields the row count AND the
-    // per-column min/max/null-count maps the manifest entries carry —
-    // what read()'s column-bound pruning (and any external Iceberg
-    // planner) skips files on; parallel — serial footer reads dominated
-    // wide-partition commits (driver metadata I/O, ~10 ms/file)
-    val fileFooters = graft.core.DriverPar.map(files)(s =>
-      StatsPruning.footerLeafStats(conf, s.getPath))
-    val counts = fileFooters.map(_._1)
-    val rows = counts.sum
     // table field ids for the stats map keys: existing ids for an append
     // (evolution continues above last-column-id with the same assignment
-    // the commit loop makes), fresh deterministic ids otherwise
+    // the commit makes), fresh deterministic ids otherwise
     val statIdOf: Map[String, Int] = prev match {
       case Some(m) if mode == "append" =>
         val base = topLevelIds(m.schemaJson)
@@ -2598,63 +2556,106 @@ object IcebergSource {
 
     val partSchema = entrySchema.getField("data_file").schema()
       .getField("partition").schema()
-    val fileParts: Seq[Seq[Any]] = files.map(s => partValuesOf(s.getPath))
 
-    // per-field bound summaries for the manifest-list row (what read()'s
-    // manifest-level pruning consumes); date partitions stored as int
-    // days, matching the tuple values
-    // empty staged writes (a filtered-out micro-batch, an empty append)
-    // carry no summaries — and must not crash on vals.head
-    val partitionSummaries: Seq[(Any, Any)] =
-      if (fileParts.isEmpty) Nil
-      else partCols.indices.map { i =>
-        val vals = fileParts.map(_(i)).sortWith((a, b) => cmp(a, b) < 0)
-        (vals.head, vals.last)
+    // 1. data files, staged ONCE by the first attempt and reused by every
+    // later one; the parquet under data/$commitUuid is referenced by
+    // NOTHING until a claim wins, so any terminal failure (null partition
+    // value, schema conflict surfaced on rebase, the attempt cap, I/O
+    // errors) has the funnel reclaim it. Source columns STAY in the files
+    // (spec requirement), so the layout job partitions on shadow columns
+    // carrying the TRANSFORMED values (hidden partitioning: the transform
+    // computes inside codegen, rows route by result value).
+    val commitUuid = java.util.UUID.randomUUID().toString
+    val dataDir = new Path(root, s"data/$commitUuid")
+    lazy val staged = {
+      if (partitionBy.isEmpty)
+        data.write.mode("errorifexists").parquet(dataDir.toString)
+      else {
+        val shadowed = transforms.foldLeft(data)((d, t) =>
+          d.withColumn(s"_p_${t.fieldName}",
+            transformColumn(t, srcTypeOf(t.sourceCol))))
+        // optimized write: cluster by the TRANSFORMED values first, so
+        // file count tracks partitions instead of tasks x partitions.
+        // HASH clustering, not range: same one-task-per-value file count
+        // without RangePartitioner's extra sampling pass over the input
+        val clustered =
+          if (clusterWrite)
+            shadowed.repartition(
+              transforms.map(t => col(s"_p_${t.fieldName}")): _*)
+          else shadowed
+        clustered.write.mode("errorifexists")
+          .partitionBy(transforms.map(t => s"_p_${t.fieldName}"): _*)
+          .parquet(dataDir.toString)
       }
+      val files = graft.core.DriverPar.listFilesNoPerm(f, dataDir)
+        .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
+        .sortBy(_.getPath.toString)
+      // one footer read per staged file yields the row count AND the
+      // per-column min/max/null-count maps the manifest entries carry —
+      // what read()'s column-bound pruning (and any external Iceberg
+      // planner) skips files on; parallel — serial footer reads dominated
+      // wide-partition commits (driver metadata I/O, ~10 ms/file)
+      val fileFooters = graft.core.DriverPar.map(files)(s =>
+        StatsPruning.footerLeafStats(conf, s.getPath))
+      (files, fileFooters, files.map(s => partValuesOf(s.getPath)))
+    }
 
-    // 2-4. build + atomically publish the commit (optimistic retry loop).
-    // The staged data files above are attempt-invariant; the manifest,
-    // manifest list and metadata all embed snapshot/sequence ids, so each
-    // attempt rewrites those (small, driver-side) against the then-current
-    // table state, then claims `v{N+1}.metadata.json` with a put-if-absent
-    // ([[tryPublishMeta]]). Exactly one committer wins a version; a loser
-    // deletes its orphaned attempt files, rebases onto the winner's
-    // metadata and retries — its committed data files are never thrown
-    // away (the lost-commit class DeltaConcurrencySpec proved real on
-    // local filesystems).
-    var attempt = 0
-    var cur = prev
-    while (true) {
-      attempt += 1
-      require(attempt <= 20,
-        s"gave up publishing iceberg commit at $root after 20 attempts")
-      if (attempt > 1) {
+    // 2-4. build + atomically publish the commit. The staged data files
+    // above are attempt-invariant; the manifest, manifest list and
+    // metadata all embed snapshot/sequence ids, so each attempt rewrites
+    // those (small, driver-side) against the then-current table state and
+    // claims `v{N+1}.metadata.json` ([[publishMeta]]). Exactly one
+    // committer wins a version; a loser's attempt files are reclaimed and
+    // it rebases onto the winner's metadata — its staged data files are
+    // never thrown away (the lost-commit class DeltaConcurrencySpec
+    // proved real on local filesystems).
+    OptimisticCommit.run("Iceberg write", f, root, staged = Seq(dataDir)) { at =>
+      val (files, fileFooters, fileParts) = staged
+      val rows = fileFooters.map(_._1).sum
+      // per-field bound summaries for the manifest-list row (what read()'s
+      // manifest-level pruning consumes); date partitions stored as int
+      // days, matching the tuple values. Empty staged writes (a
+      // filtered-out micro-batch, an empty append) carry no summaries —
+      // and must not crash on vals.head
+      val partitionSummaries: Seq[(Any, Any)] =
+        if (fileParts.isEmpty) Nil
+        else partCols.indices.map { i =>
+          val vals = fileParts.map(_(i)).sortWith((a, b) => cmp(a, b) < 0)
+          (vals.head, vals.last)
+        }
+      // the first attempt commits against the plan-time metadata
+      val cur = if (at.number == 1) prev else {
         // rebase: a concurrent overwrite may have changed the schema or
         // spec an append must match — re-validate loudly, don't clobber
-        cur = if (isIcebergTable(spark, root)) Some(tableMeta(spark, root)) else None
+        val c = if (isIcebergTable(spark, root)) Some(tableMeta(spark, root)) else None
         // on rebase, an evolving append requires the spec it planned to
         // evolve FROM to still be current (no concurrent evolution)
-        if (specEvolves) cur.foreach(m => require(
+        if (specEvolves) c.foreach(m => require(
           m.partitionSpec.map(f => (f.name, f.transform)) ==
             prev.get.partitionSpec.map(f => (f.name, f.transform)),
           s"concurrent partition-spec change at $root during evolving " +
             "append — re-run"))
-        else cur.foreach(validateSpec)
+        else c.foreach(validateSpec)
         // the frame was aligned against prev's schema — a concurrent
         // schema change invalidates the plan; abort rather than clobber
-        if (mode == "append") (prev, cur) match {
-          case (Some(p), Some(c)) =>
-            require(c.schemaJson == p.schemaJson,
+        if (mode == "append") (prev, c) match {
+          case (Some(p), Some(m)) =>
+            require(m.schemaJson == p.schemaJson,
               s"concurrent schema change at $root during append — re-run")
           case _ => ()
         }
+        c
       }
       // snapshot id strictly above any prior id, so two commits in the
       // same millisecond stay distinct
       val snapshotId = math.max(System.currentTimeMillis(),
         cur.toSeq.flatMap(_.snapshots).map(_.snapshotId + 1).foldLeft(0L)(math.max))
       val seq = cur.map(_.lastSequenceNumber).getOrElse(0L) + 1
-      val attemptUuid = if (attempt == 1) commitUuid else s"$commitUuid-r$attempt"
+      val attemptUuid =
+        if (at.number == 1) commitUuid else s"$commitUuid-r${at.number}"
+      val manifestPath = new Path(metaDir(root), s"manifest-$attemptUuid.avro")
+      val mlPath = new Path(metaDir(root), s"snap-$snapshotId-$attemptUuid.avro")
+      at.stage(Seq(manifestPath, mlPath))
       val entries = files.lazyZip(fileFooters).lazyZip(fileParts).map { (s, fstats, pvals) =>
         val (n, leaves) = fstats
         val dataFile = new GenericData.Record(
@@ -2678,7 +2679,6 @@ object IcebergSource {
         e.put("data_file", dataFile)
         e
       }
-      val manifestPath = new Path(metaDir(root), s"manifest-$attemptUuid.avro")
       f.mkdirs(metaDir(root))
       val manifestLen = writeAvro(conf, manifestPath, entrySchema, entries)
 
@@ -2737,7 +2737,6 @@ object IcebergSource {
         else cur.toSeq.flatMap(currentMlRecords(conf, root, _))
       val newManifestList = Seq(manifestFileRecord(manifestPath.toString,
         manifestLen, files.size, rows, seq)) ++ priorManifests
-      val mlPath = new Path(metaDir(root), s"snap-$snapshotId-$attemptUuid.avro")
       writeAvro(conf, mlPath, manifestFileSchema, newManifestList)
 
       // metadata vN+1 (snapshot history retained), version-hint LAST.
@@ -2821,7 +2820,6 @@ object IcebergSource {
       }
       val allSnaps = (priorSnaps :+ newSnap).mkString(",")
       val uuid = cur.map(_.tableUuid).getOrElse(java.util.UUID.randomUUID().toString)
-      val version = cur.map(_.version).getOrElse(0L) + 1
       // spec fields reference SOURCE columns by schema field id; the
       // transform string uses the spec JSON forms (identity, day,
       // bucket[16], truncate[4]) the reader's projection consumes
@@ -2865,21 +2863,10 @@ object IcebergSource {
            |"snapshots":[$allSnaps],"current-snapshot-id":$snapshotId,
            |"snapshot-log":[{"snapshot-id":$snapshotId,"timestamp-ms":$now}]}"""
           .stripMargin.replaceAll("\n", "")
-      if (tryPublishMeta(f, root, version, metadataJson.getBytes("UTF-8"), attemptUuid)) {
-        writeHint(f, root, version)
-        enforceMetadataRetention(f, root,
-          cur.map(_.properties).getOrElse(Map.empty), version)
-        return rows
-      }
-      // lost the race: drop this attempt's orphaned manifest files, rebase
-      f.delete(manifestPath, false)
-      f.delete(mlPath, false)
-    }
-    throw new IllegalStateException("unreachable")
-    } catch {
-      case e: Throwable =>
-        try f.delete(dataDir, true) catch { case _: Exception => () }
-        throw e
+      OptimisticCommit.Publish(
+        publishMeta(f, root, cur, metadataJson.getBytes("UTF-8"), attemptUuid,
+          cur.map(_.properties).getOrElse(Map.empty)),
+        rows)
     }
   }
 }

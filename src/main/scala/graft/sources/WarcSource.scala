@@ -234,11 +234,12 @@ object WarcSource {
            opts: WarcOptions = WarcOptions()): DataFrame = {
     val hconf = spark.sessionState.newHadoopConf()
     val p = new Path(path)
+    // a missing path fails in the listing; an empty directory (what an
+    // empty frame writes) reads as zero records
     val files = listWarcFiles(p.getFileSystem(hconf), p)
-    require(files.nonEmpty, s"no warc files under $path")
     val entries = confEntries(hconf)
     val rows = spark.sparkContext
-      .parallelize(files, files.size)
+      .parallelize(files, math.max(1, files.size))
       .flatMap { file =>
         val conf = rebuild(entries)
         val fp = new Path(file)
@@ -400,7 +401,10 @@ object WarcSource {
       case "zstd" => "warc.zst"
       case _ => "warc"
     }
-    def writeTo(dir: String): Long =
+    def writeTo(dir: String): Long = {
+      // created before the job: a frame with no partitions (limit(0),
+      // filter("false")) runs no task, so no task would create it
+      fs.mkdirs(new Path(dir))
       normalized.rdd.mapPartitionsWithIndex { (i, rows) =>
         if (rows.isEmpty && i != 0) Iterator.single(0L)
         else {
@@ -445,10 +449,11 @@ object WarcSource {
           Iterator.single(n)
         }
       }.sum().toLong
+    }
     if (mode == "overwrite") {
       var written = 0L
       graft.core.AtomicParquet.swap(hconf, path, token) { tmp => written = writeTo(tmp) }
       written
-    } else { fs.mkdirs(new Path(path)); writeTo(path) }
+    } else writeTo(path)
   }
 }

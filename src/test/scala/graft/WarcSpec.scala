@@ -157,6 +157,19 @@ class WarcSpec extends SparkSpec {
     }
   }
 
+  test("overwriting with a frame of no partitions leaves an empty, readable path") {
+    // limit(0) plans to an RDD with no partitions: no task runs, so no
+    // task creates the output directory the overwrite swaps in
+    val dir = tmp() + "/out"
+    val df = Seq(("https://a.example/x", "doc")).toDF("target_uri", "content")
+    assert(WarcSource.write(df, dir) == 1L)
+    assert(WarcSource.write(df.limit(0), dir) == 0L)
+    assert(new File(dir).isDirectory, "overwrite left the target path missing")
+    assert(WarcSource.read(spark, dir).count() == 0L)
+    assert(WarcSource.write(df.filter("false"), dir, mode = "append") == 0L)
+    assert(WarcSource.read(spark, dir).count() == 0L)
+  }
+
   test("zstd codec: one-frame-per-record write reads back through setContinuous") {
     val dir = tmp() + "/z"
     val df = Seq(("https://a.example/1", "zstd doc one"),
