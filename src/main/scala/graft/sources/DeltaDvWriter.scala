@@ -179,21 +179,10 @@ object DeltaDvWriter {
       if (replayed) return OptimisticCommit.Finish(noCommit(snap0.version))
       val mapped =
         snap0.configuration.getOrElse("delta.columnMapping.mode", "none") != "none"
-      val physOf: Map[String, String] =
-        snap0.schema.fields.map(f => f.name -> DeltaLog.physicalName(f)).toMap
+      val physOf = DeltaLog.physicalNames(snap0)
       // candidate pruning: only files inside the declared partition scope
-      // are scanned for positions (and re-added with vectors);
-      // partitionValues are keyed by PHYSICAL names under column mapping
-      val snapP = if (partitionFilter.isEmpty) snap0 else {
-        val unknown = partitionFilter.keySet -- snap0.partitionColumns.toSet
-        require(unknown.isEmpty,
-          s"partitionFilter keys $unknown are not partition columns " +
-            s"${snap0.partitionColumns}")
-        snap0.copy(files = snap0.files.filter(a => partitionFilter.forall {
-          case (k, v) => a.partitionValues.get(physOf.getOrElse(k, k))
-            .orElse(a.partitionValues.get(k)).flatten.contains(v)
-        }))
-      }
+      // are scanned for positions (and re-added with vectors)
+      val snapP = DeltaLog.inPartitions(snap0, partitionFilter)
       // min/max-stats candidate pruning (DELETE WHERE shape): files whose
       // bounds prove no match are left untouched — neither scanned for
       // positions nor re-listed; sound because the predicate re-applies
@@ -289,10 +278,7 @@ object DeltaDvWriter {
         // partitions mean the caller's filter was NOT implied by the
         // source — abort before commit rather than corrupt neighbors
         if (partitionFilter.nonEmpty) {
-          val escaped = adds.filterNot(a => partitionFilter.forall {
-            case (k, v) => a.partitionValues.get(physOf.getOrElse(k, k))
-              .orElse(a.partitionValues.get(k)).flatten.contains(v)
-          })
+          val escaped = adds.filterNot(DeltaLog.inPartition(_, partitionFilter, physOf))
           // the funnel reclaims every artifact of the aborted attempt —
           // the staged adds AND this attempt's DV bin files
           if (escaped.nonEmpty) throw new IllegalArgumentException(
@@ -419,8 +405,7 @@ object DeltaDvWriter {
     val partCols = snap.partitionColumns
     val mapped =
       snap.configuration.getOrElse("delta.columnMapping.mode", "none") != "none"
-    val physOf: Map[String, String] =
-      snap.schema.fields.map(f => f.name -> DeltaLog.physicalName(f)).toMap
+    val physOf = DeltaLog.physicalNames(snap)
     val logicalType: Map[String, org.apache.spark.sql.types.DataType] =
       snap.schema.fields.map(f => f.name -> f.dataType).toMap
     val dataFields = snap.schema.fields.filterNot(fd => partCols.contains(fd.name))
@@ -440,18 +425,8 @@ object DeltaDvWriter {
     if (partCols.isEmpty)
       return scan.select((ordered.map(logicalCol) :+
         col("_gf_file") :+ col("_gf_ridx")): _*)
-    def pvOf(a: DeltaLog.AddFile, c: String): Option[String] =
-      a.partitionValues.get(physOf.getOrElse(c, c))
-        .orElse(a.partitionValues.get(c)).flatten
-    val pvRows = snap.files.map { a =>
-      Row.fromSeq(basename(DeltaLog.decodePath(a.path)) +:
-        partCols.map(c => pvOf(a, c).orNull))
-    }
-    val pvSchema = StructType(StructField("_gf_file", StringType) +:
-      partCols.map(c => StructField(s"_gf_pv_$c", StringType)))
-    val pv = spark.createDataFrame(
-      spark.sparkContext.parallelize(pvRows.toSeq, 1), pvSchema)
-    scan.join(broadcast(pv), Seq("_gf_file"))
+    scan.join(broadcast(DeltaLog.partitionValueFrame(spark, snap, snap.files)),
+        Seq("_gf_file"))
       .select(ordered.map { c =>
         if (partCols.contains(c))
           col(s"_gf_pv_$c").cast(DeltaLog.stripMeta(logicalType(c))).as(c)

@@ -135,13 +135,7 @@ object DeltaLog {
 
   private def readText(f: FileSystem, p: Path): String = {
     val in = f.open(p)
-    try {
-      val out = new java.io.ByteArrayOutputStream()
-      val buf = new Array[Byte](64 * 1024)
-      var n = in.read(buf)
-      while (n >= 0) { out.write(buf, 0, n); n = in.read(buf) }
-      new String(out.toByteArray, "UTF-8")
-    } finally in.close()
+    try new String(in.readAllBytes(), "UTF-8") finally in.close()
   }
 
   /** add.path is an RFC 2396 URL-encoded path, relative to the table root
@@ -492,21 +486,8 @@ object DeltaLog {
            timestampAsOfMs: Option[Long] = None,
            partitionFilter: Map[String, String] = Map.empty,
            dataFilter: Option[Column] = None): DataFrame = {
-    val snap0 = snapshot(spark, root, versionAsOf, timestampAsOfMs)
-    // logical name -> physical (column-mapped tables key partitionValues
-    // by physical name); shared by the prune below and the value join
-    val physOf: Map[String, String] =
-      snap0.schema.fields.map(f => f.name -> physicalName(f)).toMap
-    val snap1 = if (partitionFilter.isEmpty) snap0 else {
-      val unknown = partitionFilter.keySet -- snap0.partitionColumns.toSet
-      require(unknown.isEmpty,
-        s"partitionFilter keys $unknown are not partition columns " +
-          s"${snap0.partitionColumns}")
-      snap0.copy(files = snap0.files.filter(a => partitionFilter.forall {
-        case (k, v) => a.partitionValues.get(physOf.getOrElse(k, k))
-          .orElse(a.partitionValues.get(k)).flatten.contains(v)
-      }))
-    }
+    val snap1 = inPartitions(snapshot(spark, root, versionAsOf, timestampAsOfMs),
+      partitionFilter)
     // stats-based data skipping: drop files whose min/max/nullCount prove
     // no row can match, then RE-APPLY the predicate on the scan so
     // correctness never depends on the prune (and Spark still pushes it
@@ -518,6 +499,51 @@ object DeltaLog {
     dataFilter.foldLeft(frameOf(spark, root, snap))((df, f) => df.filter(f))
   }
 
+  /** Logical column name -> physical (column-mapped tables key
+    * partitionValues and parquet columns by physical name). */
+  private[sources] def physicalNames(snap: Snapshot): Map[String, String] =
+    snap.schema.fields.map(f => f.name -> physicalName(f)).toMap
+
+  /** `snap` narrowed to the files inside `partitionFilter` (logical
+    * partition column -> value). */
+  private[sources] def inPartitions(snap: Snapshot,
+                                    partitionFilter: Map[String, String]): Snapshot =
+    if (partitionFilter.isEmpty) snap else {
+      val unknown = partitionFilter.keySet -- snap.partitionColumns.toSet
+      require(unknown.isEmpty,
+        s"partitionFilter keys $unknown are not partition columns " +
+          s"${snap.partitionColumns}")
+      val physOf = physicalNames(snap)
+      snap.copy(files = snap.files.filter(inPartition(_, partitionFilter, physOf)))
+    }
+
+  /** Whether `a` lies inside `partitionFilter`; partitionValues are keyed
+    * by physical names under column mapping (`physOf`), by logical names
+    * in loosely-written logs. */
+  private[sources] def inPartition(a: AddFile, partitionFilter: Map[String, String],
+                                   physOf: Map[String, String]): Boolean =
+    partitionFilter.forall { case (k, v) => partitionValue(a, k, physOf).contains(v) }
+
+  private def partitionValue(a: AddFile, c: String,
+                             physOf: Map[String, String]): Option[String] =
+    a.partitionValues.get(physOf.getOrElse(c, c)).orElse(a.partitionValues.get(c)).flatten
+
+  /** One row per file of `files`: its basename `_gf_file` and a string
+    * `_gf_pv_<c>` per partition column — the broadcast side of the
+    * file -> partition values join (values are not stored in the files). */
+  private[sources] def partitionValueFrame(spark: SparkSession, snap: Snapshot,
+                                           files: Seq[AddFile]): DataFrame = {
+    val physOf = physicalNames(snap)
+    val rows = files.map { a =>
+      val name = decodePath(a.path)
+      Row.fromSeq(name.substring(name.lastIndexOf('/') + 1) +:
+        snap.partitionColumns.map(c => partitionValue(a, c, physOf).orNull))
+    }
+    val schema = StructType(("_gf_file" +: snap.partitionColumns.map(c => s"_gf_pv_$c"))
+      .map(org.apache.spark.sql.types.StructField(_, org.apache.spark.sql.types.StringType)))
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
+  }
+
   /**
    * The DataFrame of exactly `snap.files` — one parquet scan (physical
    * schema under column mapping, renamed back), DV positions dropped,
@@ -527,8 +553,7 @@ object DeltaLog {
    */
   private[sources] def frameOf(spark: SparkSession, root: String,
                                snap: Snapshot): DataFrame = {
-    val physOf: Map[String, String] =
-      snap.schema.fields.map(f => f.name -> physicalName(f)).toMap
+    val physOf = physicalNames(snap)
     val mapped =
       snap.configuration.getOrElse("delta.columnMapping.mode", "none") != "none"
     val logicalType: Map[String, DataType] =
@@ -561,22 +586,7 @@ object DeltaLog {
     require(names.distinct.size == names.size,
       s"duplicate data-file basenames in Delta snapshot of $root — cannot " +
         "key partition values by file name")
-    // partitionValues keys are physical names under column mapping;
-    // accept either so loosely-written logs still read
-    def pvOf(a: AddFile, c: String): Option[String] =
-      a.partitionValues.get(physOf(c)).orElse(a.partitionValues.get(c)).flatten
-    val pvRows = snap.files.map { a =>
-      Row.fromSeq(base(decodePath(a.path)) +:
-        snap.partitionColumns.map(c => pvOf(a, c).orNull))
-    }
-    val pvSchema = StructType(
-      org.apache.spark.sql.types.StructField("_gf_file",
-        org.apache.spark.sql.types.StringType) +:
-        snap.partitionColumns.map(c =>
-          org.apache.spark.sql.types.StructField(s"_gf_pv_$c",
-            org.apache.spark.sql.types.StringType)))
-    val pv = spark.createDataFrame(
-      spark.sparkContext.parallelize(pvRows.toSeq, 1), pvSchema)
+    val pv = partitionValueFrame(spark, snap, snap.files)
     // the file column MUST attach on the raw scan — input_file_name()
     // returns "" after the DV anti-join's join node
     val withFile = applyDeletionVectors(spark, root, snap,
@@ -698,8 +708,7 @@ object DeltaLog {
     val snap = snapshot(spark, root, versionAsOf = Some(to))
     val mapped =
       snap.configuration.getOrElse("delta.columnMapping.mode", "none") != "none"
-    val physOf: Map[String, String] =
-      snap.schema.fields.map(fd => fd.name -> physicalName(fd)).toMap
+    val physOf = physicalNames(snap)
     val logicalType: Map[String, DataType] =
       snap.schema.fields.map(fd => fd.name -> fd.dataType).toMap
     val dataFields =
@@ -749,21 +758,8 @@ object DeltaLog {
           withFile.select(ordered.map(logicalCol) ++
             Seq(col("_change_type"), col("_gf_file")): _*)
         else {
-          def pvOf(a: AddFile, c: String): Option[String] =
-            a.partitionValues.get(physOf(c)).orElse(a.partitionValues.get(c)).flatten
-          val pvRows = files.map { case (a, _, _) =>
-            Row.fromSeq(base(decodePath(a.path)) +:
-              snap.partitionColumns.map(c => pvOf(a, c).orNull))
-          }
-          val pvSchema = StructType(
-            org.apache.spark.sql.types.StructField("_gf_file",
-              org.apache.spark.sql.types.StringType) +:
-              snap.partitionColumns.map(c =>
-                org.apache.spark.sql.types.StructField(s"_gf_pv_$c",
-                  org.apache.spark.sql.types.StringType)))
-          val pv = spark.createDataFrame(
-            spark.sparkContext.parallelize(pvRows.toSeq, 1), pvSchema)
-          withFile.join(broadcast(pv), Seq("_gf_file"))
+          withFile.join(broadcast(partitionValueFrame(spark, snap, files.map(_._1))),
+              Seq("_gf_file"))
             .select(ordered.map { c =>
               if (snap.partitionColumns.contains(c))
                 col(s"_gf_pv_$c").cast(stripMeta(logicalType(c))).as(c)

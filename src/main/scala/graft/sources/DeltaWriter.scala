@@ -522,9 +522,14 @@ object DeltaWriter {
     * version first. Called only by [[publish]] and the hammer tests. */
   private[graft] def tryPublish(f: FileSystem, root: String, version: Long,
                                 lines: Seq[String], nonce: String): Boolean =
-    CommitStore.forFs(f).putIfAbsent(f,
-      new Path(logDir(root), f"$version%020d.json"),
-      (lines.mkString("\n") + "\n").getBytes("UTF-8"), nonce)
+    CommitStore.forFs(f).putIfAbsent(f, commitPath(root, version),
+      commitBytes(lines), nonce)
+
+  private def commitPath(root: String, version: Long) =
+    new Path(logDir(root), f"$version%020d.json")
+
+  private def commitBytes(lines: Seq[String]) =
+    (lines.mkString("\n") + "\n").getBytes("UTF-8")
 
   /** The one Delta publish, for [[OptimisticCommit.run]]: claim commit
     * `version`, and after a win write a checkpoint every
@@ -536,7 +541,8 @@ object DeltaWriter {
       () => tryPublish(f, root, version, lines, nonce),
       () => if (checkpointInterval > 0 && version > 0 &&
           version % checkpointInterval == 0)
-        writeCheckpoint(spark, root, version))
+        writeCheckpoint(spark, root, version),
+      commitPath(root, version), () => commitBytes(lines))
 
   /** `{"k":"v",...}` partition values of an add or cdc action. */
   private[sources] def partitionValuesJson(pv: Map[String, Option[String]]): String =

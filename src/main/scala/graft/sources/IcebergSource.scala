@@ -202,13 +202,7 @@ object IcebergSource {
 
   private[sources] def readText(f: FileSystem, p: Path): String = {
     val in = f.open(p)
-    try {
-      val out = new java.io.ByteArrayOutputStream()
-      val buf = new Array[Byte](64 * 1024)
-      var n = in.read(buf)
-      while (n >= 0) { out.write(buf, 0, n); n = in.read(buf) }
-      new String(out.toByteArray, "UTF-8")
-    } finally in.close()
+    try new String(in.readAllBytes(), "UTF-8") finally in.close()
   }
 
   // ------------------------------------------------------- avro (driver)
@@ -2304,8 +2298,10 @@ object IcebergSource {
     * and the hammer tests. */
   private[graft] def tryPublishMeta(f: FileSystem, root: String, version: Long,
                                       bytes: Array[Byte], nonce: String): Boolean =
-    CommitStore.forFs(f).putIfAbsent(f,
-      new Path(metaDir(root), s"v$version.metadata.json"), bytes, nonce)
+    CommitStore.forFs(f).putIfAbsent(f, metadataPath(root, version), bytes, nonce)
+
+  private def metadataPath(root: String, version: Long) =
+    new Path(metaDir(root), s"v$version.metadata.json")
 
   /** The one Iceberg publish, for [[OptimisticCommit.run]]: claim the
     * version after the plan-time metadata `plan` (v1 for a new table),
@@ -2327,7 +2323,8 @@ object IcebergSource {
       () => {
         writeHint(f, root, version)
         enforceMetadataRetention(f, root, properties, version)
-      })
+      },
+      metadataPath(root, version), () => bytes)
   }
 
   /**

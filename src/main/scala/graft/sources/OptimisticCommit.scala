@@ -35,8 +35,13 @@ object OptimisticCommit {
         "claim was lost to a concurrent commit")
 
   /** How a format claims a version (`tryClaim`: true = this writer's
-    * commit is published) and the work that follows a won claim. */
-  final case class Claim(tryClaim: () => Boolean, afterWin: () => Unit)
+    * commit is published), the work that follows a won claim, and the
+    * claim's `target` with this writer's `payload` — read back when
+    * `tryClaim` throws, since a claim can land and still throw (a lock
+    * release or temp delete after the publish, a rename RPC that timed
+    * out after the store applied it). */
+  final case class Claim(tryClaim: () => Boolean, afterWin: () => Unit,
+                         target: Path, payload: () => Array[Byte])
 
   /** What one attempt decided. */
   sealed trait Step[+T]
@@ -61,11 +66,15 @@ object OptimisticCommit {
    * without a won claim. An attempt's own files are reclaimed when its
    * claim is lost or anything in it fails. Nothing is reclaimed once a
    * claim wins: a failure in the after-win work propagates, but the
-   * commit stands.
+   * commit stands. A claim that throws is read back: if the target holds
+   * this writer's payload the commit landed and counts as won; if the
+   * target cannot be read, the failure propagates and no file is
+   * reclaimed, since a landed commit may reference any of them.
    */
   def run[T](operation: String, f: FileSystem, root: String,
              staged: Seq[Path] = Nil)(attempt: Attempt => Step[T]): T = {
     var won = false
+    var maybeLanded = false
     try {
       var attempts = 0
       while (attempts < MaxAttempts) {
@@ -80,7 +89,11 @@ object OptimisticCommit {
             return result
           case Publish(claim, result) =>
             won = try claim.tryClaim() catch {
-              case e: Throwable => reclaim(f, at.files); throw e
+              case e: Throwable => landed(f, claim) match {
+                case Some(true) => true // published; what failed came after
+                case Some(false) => reclaim(f, at.files); throw e
+                case None => maybeLanded = true; throw e
+              }
             }
             if (won) {
               claim.afterWin()
@@ -92,10 +105,23 @@ object OptimisticCommit {
       throw new GaveUpException(operation, root, attempts)
     } catch {
       case e: Throwable =>
-        if (!won) reclaim(f, staged)
+        if (!won && !maybeLanded) reclaim(f, staged)
         throw e
     }
   }
+
+  /** Whether `claim.target` holds this writer's payload: Some(false) when
+    * it is absent or holds another writer's commit, None when it cannot
+    * be read. */
+  private def landed(f: FileSystem, claim: Claim): Option[Boolean] =
+    try {
+      val in = f.open(claim.target)
+      try Some(java.util.Arrays.equals(in.readAllBytes(), claim.payload()))
+      finally in.close()
+    } catch {
+      case _: java.io.FileNotFoundException => Some(false)
+      case _: Exception => None
+    }
 
   /** Best-effort delete: a file left behind is uncommitted garbage a
     * vacuum collects, never table state. */

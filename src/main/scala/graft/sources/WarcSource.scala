@@ -234,12 +234,11 @@ object WarcSource {
            opts: WarcOptions = WarcOptions()): DataFrame = {
     val hconf = spark.sessionState.newHadoopConf()
     val p = new Path(path)
-    // a missing path fails in the listing; an empty directory (what an
-    // empty frame writes) reads as zero records
     val files = listWarcFiles(p.getFileSystem(hconf), p)
+    require(files.nonEmpty, s"no warc files under $path")
     val entries = confEntries(hconf)
     val rows = spark.sparkContext
-      .parallelize(files, math.max(1, files.size))
+      .parallelize(files, files.size)
       .flatMap { file =>
         val conf = rebuild(entries)
         val fp = new Path(file)
@@ -402,10 +401,13 @@ object WarcSource {
       case _ => "warc"
     }
     def writeTo(dir: String): Long = {
-      // created before the job: a frame with no partitions (limit(0),
-      // filter("false")) runs no task, so no task would create it
-      fs.mkdirs(new Path(dir))
-      normalized.rdd.mapPartitionsWithIndex { (i, rows) =>
+      val rdd = normalized.rdd
+      // a frame with no partitions (limit(0), filter("false")) runs no
+      // task: write partition 0's empty part file here instead
+      if (rdd.getNumPartitions == 0) {
+        fs.create(new Path(dir, f"part-00000-$token.$ext"), false).close()
+        0L
+      } else rdd.mapPartitionsWithIndex { (i, rows) =>
         if (rows.isEmpty && i != 0) Iterator.single(0L)
         else {
           val conf = rebuild(entries)
@@ -454,6 +456,6 @@ object WarcSource {
       var written = 0L
       graft.core.AtomicParquet.swap(hconf, path, token) { tmp => written = writeTo(tmp) }
       written
-    } else writeTo(path)
+    } else { fs.mkdirs(new Path(path)); writeTo(path) }
   }
 }

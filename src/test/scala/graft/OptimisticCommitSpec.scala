@@ -13,7 +13,8 @@ import org.apache.hadoop.util.Progressable
  * A local filesystem on the `faultfs` scheme that injects faults into
  * version claims. Every claim stages its payload as a hidden
  * `.tmp_<nonce>_<target>` file first ([[CommitStore]]); creating that
- * temp is where a competing writer can slip in or the process can die.
+ * temp is where a competing writer can slip in or the process can die;
+ * the rename that publishes it can apply and still throw.
  */
 class FaultFileSystem extends MockS3FileSystem {
   override def getScheme: String = "faultfs"
@@ -33,6 +34,17 @@ class FaultFileSystem extends MockS3FileSystem {
     super.create(f, permission, overwrite, bufferSize, replication,
       blockSize, progress)
   }
+
+  override def rename(src: Path, dst: Path): Boolean = {
+    val done = super.rename(src, dst)
+    FaultFileSystem.afterRename(src, dst, done)
+    done
+  }
+
+  override def open(f: Path, bufferSize: Int): org.apache.hadoop.fs.FSDataInputStream = {
+    FaultFileSystem.beforeOpen(f)
+    super.open(f, bufferSize)
+  }
 }
 
 object FaultFileSystem {
@@ -41,10 +53,35 @@ object FaultFileSystem {
   @volatile var losses = 0
   /** The next claim throws: a crash between staging and publish. */
   @volatile var crash = false
+  /** The next claim publishes, then throws: a rename RPC whose reply is
+    * lost after the store applied it. */
+  @volatile var crashAfterClaim = false
+  /** With [[crashAfterClaim]], the claimed target cannot be read back. */
+  @volatile var unreadableAfterClaim = false
+  @volatile private var unreadable: Option[Path] = None
   /** Runs (once) before the next manifest file is created. */
   @volatile var beforeManifest: Option[() => Unit] = None
 
-  def reset(): Unit = { losses = 0; crash = false; beforeManifest = None }
+  def reset(): Unit = {
+    losses = 0; crash = false; crashAfterClaim = false
+    unreadableAfterClaim = false; unreadable = None; beforeManifest = None
+  }
+
+  private[graft] def afterRename(src: Path, dst: Path, done: Boolean): Unit =
+    synchronized {
+      if (done && crashAfterClaim && src.getName.startsWith(".tmp_")) {
+        crashAfterClaim = false
+        if (unreadableAfterClaim) { unreadableAfterClaim = false; unreadable = Some(dst) }
+        throw new IOException(s"injected crash after claiming $dst")
+      }
+    }
+
+  private[graft] def beforeOpen(p: Path): Unit = synchronized {
+    if (unreadable.exists(_.getName == p.getName)) {
+      unreadable = None
+      throw new IOException(s"injected read failure on $p")
+    }
+  }
 
   private[graft] def beforeCreate(p: Path): Unit = synchronized {
     val name = p.getName
@@ -82,8 +119,8 @@ object FaultFileSystem {
 /**
  * Drives Delta and Iceberg commits through the one optimistic-commit
  * loop ([[OptimisticCommit]]) with faults injected at the version claim:
- * lost races, a crash between staging and publish, and a writer that
- * never wins. After each, the table holds exactly what committed and no
+ * lost races, a crash between staging and publish, a claim that lands
+ * and then throws, and a writer that never wins. After each, the table holds exactly what committed and no
  * file staged by a failed attempt remains.
  */
 class OptimisticCommitSpec extends SparkSpec {
@@ -266,6 +303,48 @@ class OptimisticCommitSpec extends SparkSpec {
       assert(icebergVersion(iceDir) == 2L)
       assert(IcebergSource.read(spark, ice).count() == 3L)
       assert(filesUnder(iceDir) - "metadata/version-hint.text" == iceBefore)
+    }
+  }
+
+  test("a claim that lands and then throws: the commit stands with every file it references") {
+    withFaults {
+      val (root, dir) = table()
+      DeltaWriter.write(Seq((1, "a"), (2, "b")).toDF("id", "v"), root) // v0
+      FaultFileSystem.crashAfterClaim = true
+      assert(DeltaWriter.write(Seq((3, "c")).toDF("id", "v"), root, "append").version == 1L)
+      FaultFileSystem.crashAfterClaim = true
+      DeltaMerge.upsert(spark, root, Seq((2, "B"), (4, "d")).toDF("id", "v"), Seq("id"))
+      assert(DeltaLog.snapshot(spark, root).version == 2L)
+      assertDeltaClean(dir)
+      // the claim cannot be read back: the failure propagates, and the
+      // landed commit keeps its data
+      FaultFileSystem.crashAfterClaim = true
+      FaultFileSystem.unreadableAfterClaim = true
+      intercept[IOException] {
+        DeltaWriter.write(Seq((5, "e")).toDF("id", "v"), root, "append")
+      }
+      assert(DeltaLog.snapshot(spark, root).version == 3L)
+      assert(DeltaLog.read(spark, root).orderBy("id").as[(Int, String)].collect().toSeq ==
+        Seq((1, "a"), (2, "B"), (3, "c"), (4, "d"), (5, "e")))
+      assertDeltaClean(dir)
+
+      val (ice, iceDir) = table()
+      IcebergSource.write(Seq((1L, "a"), (2L, "b")).toDF("id", "v"), ice) // v1
+      FaultFileSystem.crashAfterClaim = true
+      IcebergSource.write(Seq((3L, "c")).toDF("id", "v"), ice, "append")
+      FaultFileSystem.crashAfterClaim = true
+      IcebergSource.delete(spark, ice, "id = 1")
+      assert(icebergVersion(iceDir) == 3L)
+      assertIcebergClean(iceDir)
+      FaultFileSystem.crashAfterClaim = true
+      FaultFileSystem.unreadableAfterClaim = true
+      intercept[IOException] {
+        IcebergSource.write(Seq((4L, "d")).toDF("id", "v"), ice, "append")
+      }
+      assert(icebergVersion(iceDir) == 4L)
+      assert(IcebergSource.read(spark, ice).orderBy("id").as[(Long, String)]
+        .collect().toSeq == Seq((2L, "b"), (3L, "c"), (4L, "d")))
+      assertIcebergClean(iceDir)
     }
   }
 
