@@ -47,6 +47,17 @@ final class Catalog(spark: SparkSession, root: String) {
 
   def table(name: String): DataFrame = spark.read.parquet(tablePath(name))
 
+  /** `read` over the meta table `name`; None before its first append.
+    * Existence is checked on the filesystem first: a read planned
+    * against a missing path fails, and Spark reports each such failure
+    * as a failed query with its full stack. A table that exists but
+    * cannot be read also yields None. */
+  private[graft] def probe[T](name: String)(read: DataFrame => Option[T]): Option[T] = {
+    val p = new org.apache.hadoop.fs.Path(tablePath(name))
+    if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)) None
+    else try read(table(name)) catch { case scala.util.control.NonFatal(_) => None }
+  }
+
   /**
    * Compact the meta tables: every recorded run appends one file per meta
    * table (the tables written concurrently), so a long-lived catalog
@@ -237,11 +248,9 @@ final class Catalog(spark: SparkSession, root: String) {
 
   /** Latest recorded schema DDL for a node, if any. */
   def latestSchema(node: String): Option[String] =
-    try {
-      table("meta_schemas").filter(col("node") === node)
-        .orderBy(col("recorded_at").desc).limit(1)
-        .select("schema_ddl").as[String].collect().headOption
-    } catch { case _: Throwable => None }
+    probe("meta_schemas")(_.filter(col("node") === node)
+      .orderBy(col("recorded_at").desc).limit(1)
+      .select("schema_ddl").as[String].collect().headOption)
 
   /** Schema drift check: true when the node's schema changed since last run. */
   def schemaDrifted(node: String, df: DataFrame): Boolean =
@@ -337,12 +346,10 @@ final class Catalog(spark: SparkSession, root: String) {
    * (odibi/semantics/query.py:294-369 resolves through the same catalog).
    */
   def latestOutputPath(pipeline: String, node: String): Option[String] =
-    try {
-      table("meta_outputs")
-        .filter(col("pipeline") === pipeline && col("node") === node)
-        .orderBy(col("recorded_at").desc).limit(1)
-        .select("path").as[String].collect().headOption
-    } catch { case _: Throwable => None }
+    probe("meta_outputs")(_
+      .filter(col("pipeline") === pipeline && col("node") === node)
+      .orderBy(col("recorded_at").desc).limit(1)
+      .select("path").as[String].collect().headOption)
 
   /**
    * Average rows written by a node over its recent runs — the baseline for
@@ -350,13 +357,10 @@ final class Catalog(spark: SparkSession, root: String) {
    * wired through the catalog in pipeline validation).
    */
   def averageRowsWritten(pipeline: String, node: String, lastN: Int = 7): Option[Double] =
-    try {
-      val rows = table("meta_outputs")
-        .filter(col("pipeline") === pipeline && col("node") === node)
-        .orderBy(col("recorded_at").desc).limit(lastN)
-        .agg(avg(col("rows_written"))).as[Option[Double]].collect().headOption.flatten
-      rows
-    } catch { case _: Throwable => None }
+    probe("meta_outputs")(_
+      .filter(col("pipeline") === pipeline && col("node") === node)
+      .orderBy(col("recorded_at").desc).limit(lastN)
+      .agg(avg(col("rows_written"))).as[Option[Double]].collect().headOption.flatten)
 
   /**
    * Volume-drop gate: fails when this run's rows_written fell more than
@@ -419,11 +423,9 @@ final class Catalog(spark: SparkSession, root: String) {
 
   /** Latest registered version hash for a pipeline (drift baseline). */
   def getPipelineHash(pipeline: String): Option[String] =
-    try {
-      table("meta_pipelines").filter(col("pipeline") === pipeline)
-        .orderBy(col("recorded_at").desc).limit(1)
-        .select("version_hash").as[String].collect().headOption
-    } catch { case _: Throwable => None }
+    probe("meta_pipelines")(_.filter(col("pipeline") === pipeline)
+      .orderBy(col("recorded_at").desc).limit(1)
+      .select("version_hash").as[String].collect().headOption)
 
   /**
    * Drift check against the deployed definition (pipeline.py:487-520):
@@ -441,11 +443,9 @@ final class Catalog(spark: SparkSession, root: String) {
   def state: graft.operators.Incremental.StateBackend =
     new graft.operators.Incremental.StateBackend {
       override def get(key: String): Option[String] =
-        try {
-          table("meta_state").filter(col("key") === key)
-            .orderBy(col("recorded_at").desc).limit(1)
-            .select("value").as[String].collect().headOption
-        } catch { case _: Throwable => None }
+        probe("meta_state")(_.filter(col("key") === key)
+          .orderBy(col("recorded_at").desc).limit(1)
+          .select("value").as[String].collect().headOption)
       override def set(key: String, value: String): Unit =
         append("meta_state", Seq((key, value)).toDF("key", "value")
           .withColumn("recorded_at", current_timestamp()))

@@ -54,15 +54,16 @@ final class DerivedUpdater(spark: SparkSession, root: String,
       .withColumn("recorded_at", current_timestamp())
       .coalesce(1).write.mode("append").parquet(guardPath)
 
-  private def log(table: String, runId: String) =
-    try spark.read.parquet(guardPath)
+  // existence checked on the filesystem first: a read planned against
+  // the missing log (every first run) fails as a logged failed query
+  private def log(table: String, runId: String) = {
+    val p = new org.apache.hadoop.fs.Path(guardPath)
+    if (!fsOf(p).exists(p)) Nil
+    else spark.read.parquet(guardPath)
       .filter(col("derived_table") === table && col("run_id") === runId)
       .select("claim_id", "status", "recorded_at")
       .collect().toSeq
-    catch {
-      case e: org.apache.spark.sql.AnalysisException
-          if AtomicParquet.isMissingPath(e) => Nil
-    }
+  }
 
   /** Has this (derived_table, run_id) already been applied? */
   def isApplied(table: String, runId: String): Boolean =

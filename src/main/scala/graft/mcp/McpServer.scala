@@ -639,18 +639,18 @@ object McpServer {
       }
     // column lineage is optional — recorded only when the runner captured it
     val cols = out.putArray("columns")
-    try {
-      ctx.catalog.table("meta_column_lineage")
+    ctx.catalog.probe("meta_column_lineage")(t => Some(t
         .filter(col("pipeline") === pipeline)
         .select("node", "column", "source").distinct()
         .orderBy("node", "column", "source")
-        .collect().foreach { r =>
-          val e = cols.addObject()
-          e.put("node", r.getString(0))
-          e.put("column", r.getString(1))
-          e.put("source", r.getString(2))
-        }
-    } catch { case _: Exception => () } // table absent: fine
+        .collect()))
+      .toSeq.flatten
+      .foreach { r =>
+        val e = cols.addObject()
+        e.put("node", r.getString(0))
+        e.put("column", r.getString(1))
+        e.put("source", r.getString(2))
+      }
     mapper.writeValueAsString(out)
   }
 

@@ -1,10 +1,11 @@
 package graft.sources
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, IntegerType,
+  LongType, MapType, StringType, StructField, StructType}
 
 import scala.jdk.CollectionConverters._
 
@@ -51,10 +52,20 @@ import scala.jdk.CollectionConverters._
  *
  * Scale: log replay is driver-side metadata work — the same model every
  * Delta implementation uses (the active-file list must reach the planner
- * anyway). The DATA path is one parquet scan over the active files; for
- * partitioned tables the per-file partition values attach via a broadcast
- * file→values join on the file name, so 100 TB of data still moves through
- * a single columnar scan with pushdown intact.
+ * anyway), and it is incremental. [[snapshot]] lists `_delta_log` once
+ * per call (so "latest" never misses a commit), starts from the newest
+ * cached snapshot of the table at or below the target and replays only
+ * the commits after it. The cache is a 16-entry LRU keyed on (qualified
+ * root, version); an entry serves only while the listing shows its
+ * commit file with the recorded (mtime, length) — commit files are
+ * write-once, so anything else means the table was re-created at that
+ * path. With no usable base, or when a commit after it has been cleaned
+ * up, the load falls back to the newest checkpoint, read in one Spark
+ * job with the fixed [[CheckpointSchema]]. The DATA path is one parquet
+ * scan over the active files; for partitioned tables the per-file
+ * partition values attach via a broadcast file→values join on the file
+ * name, so 100 TB of data still moves through a single columnar scan
+ * with pushdown intact.
  */
 object DeltaLog {
 
@@ -125,12 +136,84 @@ object DeltaLog {
     }
   }
 
+  /** One listing of `_delta_log`: each commit file's status by version
+    * (ascending) and every checkpoint file. [[snapshot]] resolves
+    * "latest", validates its cached base and picks a checkpoint from
+    * this one view of the log. */
+  private final case class LogListing(commits: Seq[(Long, FileStatus)],
+                                      checkpoints: Seq[(Long, CheckpointKind, FileStatus)]) {
+    def versions: Seq[Long] = commits.map(_._1)
+    lazy val commitStatus: Map[Long, FileStatus] = commits.toMap
+  }
+
+  private def listLog(f: FileSystem, root: String): LogListing = {
+    val statuses = if (!f.exists(logDir(root))) Seq.empty[FileStatus]
+      else f.listStatus(logDir(root)).toSeq
+    LogListing(
+      statuses.flatMap(s => commitVersion(s.getPath.getName).map(_ -> s)).sortBy(_._1),
+      statuses.flatMap(s => checkpointVersion(s.getPath.getName).map { case (v, kind) =>
+        (v, kind, s)
+      }))
+  }
+
   /** Committed versions, ascending. */
-  def versions(spark: SparkSession, root: String): Seq[Long] = {
-    val f = fs(spark, root)
-    if (!f.exists(logDir(root))) Nil
-    else f.listStatus(logDir(root)).toSeq
-      .flatMap(s => commitVersion(s.getPath.getName)).sorted
+  def versions(spark: SparkSession, root: String): Seq[Long] =
+    listLog(fs(spark, root), root).versions
+
+  /**
+   * The checkpoint parquet schema, the one definition behind the writer
+   * ([[DeltaWriter.writeCheckpoint]]) and the reader ([[loadCheckpoint]]):
+   * the protocol's action structs, restricted to the fields graft writes
+   * and reads. Reading with it instead of inferring saves a footer-scan
+   * job per cold load; fields a foreign checkpoint lacks read as null and
+   * fields it adds are not read.
+   */
+  private[sources] object CheckpointSchema {
+    private val protocol = StructType(Seq(
+      StructField("minReaderVersion", IntegerType),
+      StructField("minWriterVersion", IntegerType),
+      StructField("readerFeatures", ArrayType(StringType)),
+      StructField("writerFeatures", ArrayType(StringType))))
+    private val format = StructType(Seq(
+      StructField("provider", StringType),
+      StructField("options", MapType(StringType, StringType))))
+    private val metaData = StructType(Seq(
+      StructField("id", StringType),
+      StructField("format", format),
+      StructField("schemaString", StringType),
+      StructField("partitionColumns", ArrayType(StringType)),
+      StructField("configuration", MapType(StringType, StringType)),
+      StructField("createdTime", LongType)))
+    private val deletionVector = StructType(Seq(
+      StructField("storageType", StringType),
+      StructField("pathOrInlineDv", StringType),
+      StructField("offset", IntegerType),
+      StructField("sizeInBytes", IntegerType),
+      StructField("cardinality", LongType)))
+    private val add = StructType(Seq(
+      StructField("path", StringType),
+      StructField("partitionValues", MapType(StringType, StringType, valueContainsNull = true)),
+      StructField("size", LongType),
+      StructField("modificationTime", LongType),
+      StructField("dataChange", BooleanType),
+      StructField("deletionVector", deletionVector),
+      StructField("stats", StringType)))
+    private val txn = StructType(Seq(
+      StructField("appId", StringType),
+      StructField("version", LongType)))
+    private val sidecar = StructType(Seq(
+      StructField("path", StringType),
+      StructField("sizeInBytes", LongType),
+      StructField("modificationTime", LongType)))
+    private val checkpointMetadata = StructType(Seq(StructField("version", LongType)))
+    private val actions = StructType(Seq(
+      StructField("protocol", protocol), StructField("metaData", metaData),
+      StructField("add", add), StructField("txn", txn),
+      StructField("sidecar", sidecar),
+      StructField("checkpointMetadata", checkpointMetadata)))
+
+    /** The action columns `names`, in that order (rows are positional). */
+    def apply(names: String*): StructType = StructType(names.map(actions(_)))
   }
 
   private def readText(f: FileSystem, p: Path): String = {
@@ -232,14 +315,29 @@ object DeltaLog {
     }
 
     def applyRemove(r: JsonNode): Unit = { files.remove(r.get("path").asText()); () }
+
+    /** Resume from a reconstructed snapshot: the cached base that the
+      * commits after it replay onto. */
+    def seed(s: Snapshot): Unit = {
+      schema = s.schema
+      partitionColumns = s.partitionColumns
+      configuration = s.configuration
+      s.files.foreach(a => files.update(a.path, a))
+      tableId = s.tableId
+      txns ++= s.transactions
+      minReader = s.minReaderVersion
+      minWriter = s.minWriterVersion
+      readerFeats = s.readerFeatures
+      writerFeats = s.writerFeatures
+    }
   }
 
   /** Bounded LRU of parsed commit JSON files. Delta commit files
     * (vN.json) are WRITE-ONCE — the commit claim is an atomic create and
     * nothing ever rewrites one — so a (path, mtime, length) key can never
-    * serve stale content, and the one getFileStatus per hit preserves
-    * log-retention semantics (a vacuumed commit misses the cache and
-    * fails like an uncached read). Snapshot replay, time-travel timestamp
+    * serve stale content, and the status each hit needs (a listing's, or
+    * one getFileStatus) preserves log-retention semantics (a vacuumed
+    * commit misses the cache and fails like an uncached read). Snapshot replay, time-travel timestamp
     * resolution, CDF ranges and the streaming source all re-parsed the
     * same immutable files once per action / micro-batch. Callers only
     * read the nodes. No cross-run reuse exists — each bench invocation
@@ -253,14 +351,18 @@ object DeltaLog {
         size() > commitCacheMax
     }
 
-  private[sources] def commitNodes(f: FileSystem, p: Path): Seq[JsonNode] = {
-    val st = f.getFileStatus(p)
-    val key = (p.toString, st.getModificationTime, st.getLen)
+  private[sources] def commitNodes(f: FileSystem, p: Path): Seq[JsonNode] =
+    commitNodes(f, f.getFileStatus(p))
+
+  /** [[commitNodes]] for a status already in hand — a `_delta_log`
+    * listing carries every commit's, so replay pays no round trip. */
+  private def commitNodes(f: FileSystem, st: FileStatus): Seq[JsonNode] = {
+    val key = (st.getPath.toString, st.getModificationTime, st.getLen)
     commitCache.synchronized {
       val hit = commitCache.get(key)
       if (hit != null) return hit
     }
-    val nodes = readText(f, p).split('\n').iterator
+    val nodes = readText(f, st.getPath).split('\n').iterator
       .map(_.trim).filter(_.nonEmpty).map(mapper.readTree).toVector
     commitCache.synchronized { commitCache.put(key, nodes); () }
     nodes
@@ -283,17 +385,11 @@ object DeltaLog {
     * present). Classic single-file, multi-part, and V2 (uuid-named,
     * sidecar-bearing) checkpoints all qualify; the boolean marks a
     * json-format V2 checkpoint. */
-  private def latestCheckpointAtOrBefore(f: FileSystem, root: String,
-                                         target: Long)
-      : Option[(Long, Seq[Path], Boolean)] = {
-    val byVersion = f.listStatus(logDir(root)).toSeq
-      .flatMap(s => checkpointVersion(s.getPath.getName).map { case (v, kind) =>
-        (v, kind, s.getPath)
-      })
-      .filter(_._1 <= target)
-      .groupBy(_._1)
-    def complete(entries: Seq[(Long, CheckpointKind, Path)])
-        : Option[(Seq[Path], Boolean)] = {
+  private def latestCheckpointAtOrBefore(log: LogListing, target: Long)
+      : Option[(Long, Seq[FileStatus], Boolean)] = {
+    val byVersion = log.checkpoints.filter(_._1 <= target).groupBy(_._1)
+    def complete(entries: Seq[(Long, CheckpointKind, FileStatus)])
+        : Option[(Seq[FileStatus], Boolean)] = {
       entries.collectFirst { case (_, Classic, p) => (Seq(p), false) }
         .orElse(entries.collectFirst { case (_, V2(json), p) => (Seq(p), json) })
         .orElse {
@@ -319,13 +415,13 @@ object DeltaLog {
     else new Path(new Path(logDir(root), "_sidecars"), p)
 
   private def loadCheckpoint(spark: SparkSession, state: State, root: String,
-                             parts: Seq[Path], jsonV2: Boolean): Unit = {
+                             parts: Seq[FileStatus], jsonV2: Boolean): Unit = {
     if (jsonV2) {
       // json-format V2 checkpoint: newline-delimited actions; file
       // actions may be inlined or live in sidecar parquet files
       val f = fs(spark, root)
       val sidecars = scala.collection.mutable.ArrayBuffer.empty[Path]
-      readText(f, parts.head).split('\n').iterator
+      readText(f, parts.head.getPath).split('\n').iterator
         .map(_.trim).filter(_.nonEmpty).foreach { line =>
           val node = mapper.readTree(line)
           if (node.has("metaData")) state.applyMeta(node.get("metaData"))
@@ -343,16 +439,13 @@ object DeltaLog {
     // `select(to_json(c)).collect()` loop scanned the checkpoint parquet
     // once per class (4-5 full passes of a file that at scale holds
     // millions of add rows). Row payload is unchanged — each action row
-    // is non-null in exactly one class column.
-    val df = spark.read.parquet(parts.map(_.toString): _*)
-    val cols = df.columns.toSet
+    // is non-null in exactly one class column. The listing's statuses
+    // and the fixed schema plan the scan without touching the files.
     val classes = Seq("metaData", "protocol", "add", "txn", "sidecar")
-    val projected = classes.map { c =>
-      if (cols.contains(c)) to_json(col(c)).as(c)
-      else lit(null).cast("string").as(c)
-    }
+    val df = MetaScan.parquetScan(spark, CheckpointSchema(classes: _*),
+      parts.map(s => MetaScan.KnownFile(s.getPath.toString, s.getLen, s.getModificationTime)))
     val sidecars = scala.collection.mutable.ArrayBuffer.empty[Path]
-    df.select(projected: _*).collect().foreach { r =>
+    df.select(classes.map(c => to_json(col(c)).as(c)): _*).collect().foreach { r =>
       // metaData / protocol: exactly one non-null row each in a checkpoint;
       // checkpoints hold the already-reconciled file list: adds only
       if (!r.isNullAt(0)) state.applyMeta(mapper.readTree(r.getString(0)))
@@ -366,47 +459,105 @@ object DeltaLog {
     loadSidecars(spark, state, sidecars.toSeq)
   }
 
-  /** Sidecar parquet: add (live files) + remove (tombstones, skipped).
+  /** Sidecar parquet: add (live files) + remove (tombstones, not read).
     * All of a checkpoint's sidecars load in ONE scan — per-file reads
     * cost one driver round-trip each, O(sidecars) actions per snapshot
-    * load on a large table. */
+    * load on a large table. Sizes come from the files, not from the
+    * checkpoint's `sidecar.sizeInBytes`. */
   private def loadSidecars(spark: SparkSession, state: State,
                            ps: Seq[Path]): Unit = {
     if (ps.isEmpty) return
-    val df = spark.read.parquet(ps.map(_.toString): _*)
-    if (df.columns.contains("add"))
-      df.select(to_json(col("add"))).where(col("add").isNotNull)
-        .collect().foreach(r => state.applyAdd(mapper.readTree(r.getString(0))))
+    MetaScan.parquetScanStat(spark, CheckpointSchema("add"), ps.map(_.toString))
+      .select(to_json(col("add"))).where(col("add").isNotNull)
+      .collect().foreach(r => state.applyAdd(mapper.readTree(r.getString(0))))
   }
+
+  /** Bounded LRU of reconstructed snapshots, keyed (qualified table
+    * root, version), each with its commit file's (mtime, length). A
+    * snapshot at version v is a pure function of the commits 0..v, which
+    * are WRITE-ONCE (the same invariant as [[commitCache]]) — but a table
+    * deleted and re-created at the same path rewrites them, so an entry
+    * serves only while the listing still shows its commit file with the
+    * recorded (mtime, length); any other entry is dropped on sight. 16
+    * entries cover the working set of a few tables that a writer, a
+    * reader and a stream touch at neighbouring versions; neighbouring
+    * entries share their [[AddFile]]s, so an entry beyond the first
+    * costs one pointer per live file. */
+  private val snapshotCacheMax = 16
+  private final case class CachedSnapshot(snap: Snapshot, commitMtime: Long,
+                                          commitLen: Long) {
+    def matches(st: FileStatus): Boolean =
+      st.getModificationTime == commitMtime && st.getLen == commitLen
+  }
+  private val snapshotCache =
+    new java.util.LinkedHashMap[(String, Long), CachedSnapshot](
+      snapshotCacheMax, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[(String, Long), CachedSnapshot]): Boolean =
+        size() > snapshotCacheMax
+    }
+
+  /** The newest valid cached snapshot of `table` at or below `target`
+    * whose later commits up to `target` are all still in the log. */
+  private def cachedBase(table: String, log: LogListing,
+                         target: Long): Option[Snapshot] =
+    snapshotCache.synchronized {
+      val mine = snapshotCache.asScala.toSeq.collect {
+        case ((t, v), c) if t == table => (v, c)
+      }
+      val (valid, stale) =
+        mine.partition { case (v, c) => log.commitStatus.get(v).exists(c.matches) }
+      stale.foreach { case (v, _) => snapshotCache.remove((table, v)) }
+      val base = valid.filter(_._1 <= target).maxByOption(_._1)
+      base.foreach { case (v, _) => snapshotCache.get((table, v)) } // LRU touch
+      base.map(_._2.snap)
+        .filter(b => (b.version + 1 to target).forall(log.commitStatus.contains))
+    }
 
   /** Reconstruct table state at `versionAsOf` / `timestampAsOfMs` /
     * latest. timestampAsOf picks the newest version whose commit
     * timestamp (commitInfo.timestamp, else log-file mtime) is <= the
-    * requested instant — the Delta time-travel contract. */
+    * requested instant — the Delta time-travel contract.
+    *
+    * Incremental: one listing of `_delta_log` resolves the target (a new
+    * commit is never missed), then the newest cached snapshot at or below
+    * it is the base and only the commits after it replay. The checkpoint
+    * is read only with no cached base, or when a commit after the base
+    * has been cleaned up. */
   def snapshot(spark: SparkSession, root: String,
                versionAsOf: Option[Long] = None,
                timestampAsOfMs: Option[Long] = None): Snapshot = {
     val f = fs(spark, root)
-    val vs = versions(spark, root)
+    val log = listLog(f, root)
+    val vs = log.versions
     require(vs.nonEmpty, s"$root is not a Delta table (no _delta_log commits)")
     val target = (versionAsOf, timestampAsOfMs) match {
       case (Some(v), _) =>
-        require(vs.contains(v),
+        require(log.commitStatus.contains(v),
           s"version $v not in Delta log [${vs.head}..${vs.last}]")
         v
       case (None, Some(ts)) =>
-        val eligible = vs.filter(v => commitTimeOf(spark, f, root, v) <= ts)
+        val eligible = vs.filter(v => commitTimeOf(f, log.commitStatus(v)) <= ts)
         require(eligible.nonEmpty,
           s"no Delta commit at or before timestamp $ts (earliest is version ${vs.head})")
         eligible.last
       case _ => vs.last
     }
+    val table = f.makeQualified(new Path(root)).toString
+    val base = cachedBase(table, log, target)
+    if (base.exists(_.version == target)) return base.get
     val state = new State
-    val cp = latestCheckpointAtOrBefore(f, root, target)
-    cp.foreach { case (_, parts, jsonV2) =>
-      loadCheckpoint(spark, state, root, parts, jsonV2)
+    val replayFrom = base match {
+      case Some(b) =>
+        state.seed(b)
+        b.version + 1
+      case None =>
+        val cp = latestCheckpointAtOrBefore(log, target)
+        cp.foreach { case (_, parts, jsonV2) =>
+          loadCheckpoint(spark, state, root, parts, jsonV2)
+        }
+        cp.map(_._1 + 1).getOrElse(0L)
     }
-    val replayFrom = cp.map(_._1 + 1).getOrElse(0L)
     // aged-out commits (log retention cleanup) are only safe to skip when
     // a checkpoint covers them; replaying a partial suffix would silently
     // drop the oldest files
@@ -416,26 +567,28 @@ object DeltaLog {
     val toReplay = vs.filter(v => v >= replayFrom && v <= target)
     require(toReplay == (replayFrom to target),
       s"Delta log at $root has gaps in versions $replayFrom..$target")
-    toReplay.foreach { v =>
-      applyCommit(state, commitNodes(f, new Path(logDir(root), f"$v%020d.json")))
-    }
+    toReplay.foreach(v => applyCommit(state, commitNodes(f, log.commitStatus(v))))
     require(state.schema != null,
       s"Delta log at $root yields no metaData action up to version $target")
-    Snapshot(target, state.schema, state.partitionColumns,
-      state.configuration, state.files.values.toSeq, state.tableId,
+    val snap = Snapshot(target, state.schema, state.partitionColumns,
+      state.configuration, state.files.values.toVector, state.tableId,
       state.txns.toMap, state.minReader, state.minWriter,
       state.readerFeats, state.writerFeats)
+    val st = log.commitStatus(target)
+    snapshotCache.synchronized {
+      snapshotCache.put((table, target),
+        CachedSnapshot(snap, st.getModificationTime, st.getLen))
+    }
+    snap
   }
 
-  private def commitTimeOf(spark: SparkSession, f: FileSystem, root: String,
-                           v: Long): Long = {
-    val p = new Path(logDir(root), f"$v%020d.json")
+  private def commitTimeOf(f: FileSystem, st: FileStatus): Long = {
     var ts = 0L
-    commitNodes(f, p).foreach { node =>
+    commitNodes(f, st).foreach { node =>
       if (node.has("commitInfo") && node.get("commitInfo").hasNonNull("timestamp"))
         ts = math.max(ts, node.get("commitInfo").get("timestamp").asLong())
     }
-    if (ts > 0) ts else f.getFileStatus(p).getModificationTime
+    if (ts > 0) ts else st.getModificationTime
   }
 
   /** `delta.columnMapping.physicalName` when present (mapping modes

@@ -606,43 +606,6 @@ object DeltaWriter {
   def writeCheckpoint(spark: SparkSession, root: String, version: Long): Unit = {
     val snap = DeltaLog.snapshot(spark, root, versionAsOf = Some(version))
     val f = fs(spark, root)
-    val protocolType = StructType(Seq(
-      StructField("minReaderVersion", IntegerType),
-      StructField("minWriterVersion", IntegerType),
-      StructField("readerFeatures", ArrayType(StringType)),
-      StructField("writerFeatures", ArrayType(StringType))))
-    val formatType = StructType(Seq(
-      StructField("provider", StringType),
-      StructField("options", MapType(StringType, StringType))))
-    val metaType = StructType(Seq(
-      StructField("id", StringType),
-      StructField("format", formatType),
-      StructField("schemaString", StringType),
-      StructField("partitionColumns", ArrayType(StringType)),
-      StructField("configuration", MapType(StringType, StringType)),
-      StructField("createdTime", LongType)))
-    val dvType = StructType(Seq(
-      StructField("storageType", StringType),
-      StructField("pathOrInlineDv", StringType),
-      StructField("offset", IntegerType),
-      StructField("sizeInBytes", IntegerType),
-      StructField("cardinality", LongType)))
-    val addType = StructType(Seq(
-      StructField("path", StringType),
-      StructField("partitionValues", MapType(StringType, StringType, valueContainsNull = true)),
-      StructField("size", LongType),
-      StructField("modificationTime", LongType),
-      StructField("dataChange", BooleanType),
-      StructField("deletionVector", dvType),
-      StructField("stats", StringType)))
-    val txnType = StructType(Seq(
-      StructField("appId", StringType),
-      StructField("version", LongType)))
-    val cpSchema = StructType(Seq(
-      StructField("protocol", protocolType),
-      StructField("metaData", metaType),
-      StructField("add", addType),
-      StructField("txn", txnType)))
     // the checkpoint carries the snapshot's ACTUAL protocol — writing a
     // fixed (1, 2) would downgrade feature tables (deletion vectors,
     // column mapping) and external readers could mis-read them
@@ -690,26 +653,16 @@ object DeltaWriter {
       // ---- V2 checkpoint with sidecars ----
       val perSidecar = math.max(1, spark.conf
         .get("graft.delta.checkpoint.sidecar.files", "10000").toInt)
-      val sidecarSchema = StructType(Seq(StructField("add", addType)))
       val nParts = math.max(1,
         math.ceil(snap.files.size.toDouble / perSidecar).toInt)
       val sidecarDir = new Path(logDir(root), "_sidecars")
       val addRows = snap.files.map(a => Row(addStruct(a)))
       val sidecars = publishParts(
         spark.createDataFrame(
-          spark.sparkContext.parallelize(addRows, nParts), sidecarSchema),
+          spark.sparkContext.parallelize(addRows, nParts), DeltaLog.CheckpointSchema("add")),
         _ => new Path(sidecarDir, s"${java.util.UUID.randomUUID()}.parquet"))
-      val sidecarType = StructType(Seq(
-        StructField("path", StringType),
-        StructField("sizeInBytes", LongType),
-        StructField("modificationTime", LongType)))
-      val cpMetaType = StructType(Seq(StructField("version", LongType)))
-      val mainSchema = StructType(Seq(
-        StructField("protocol", protocolType),
-        StructField("metaData", metaType),
-        StructField("txn", txnType),
-        StructField("checkpointMetadata", cpMetaType),
-        StructField("sidecar", sidecarType)))
+      val mainSchema = DeltaLog.CheckpointSchema(
+        "protocol", "metaData", "txn", "checkpointMetadata", "sidecar")
       val mainRows =
         Row(protoStruct, null, null, null, null) +:
         Row(null, metaStruct, null, null, null) +:
@@ -735,7 +688,8 @@ object DeltaWriter {
       publishParts(
         spark.createDataFrame(
           spark.sparkContext.parallelize(
-            protoRow +: metaRow +: (addRows ++ txnRows), 1), cpSchema)
+            protoRow +: metaRow +: (addRows ++ txnRows), 1),
+          DeltaLog.CheckpointSchema("protocol", "metaData", "add", "txn"))
           .coalesce(1),
         _ => new Path(logDir(root), f"$version%020d.checkpoint.parquet"))
     }

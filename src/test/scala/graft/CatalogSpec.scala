@@ -384,4 +384,39 @@ class CatalogSpec extends SparkSpec {
     val rd = Pipeline.run(spark, YamlConfig.loadPipeline(badYaml))
     assert(rd("broken").failure.exists(_.getMessage.contains("no_such_node")))
   }
+
+  test("a first recorded run on an empty catalog root plans no read that fails") {
+    import org.apache.spark.sql.graftshim.ListenerShim
+    val failed = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+                             qe: org.apache.spark.sql.execution.QueryExecution,
+                             durationNs: Long): Unit = ()
+      override def onFailure(funcName: String,
+                             qe: org.apache.spark.sql.execution.QueryExecution,
+                             exception: Exception): Unit = {
+        failed.add(s"$funcName: ${exception.getMessage}"); ()
+      }
+    }
+    val dir = java.nio.file.Files.createTempDirectory("graft_cat_first").toString
+    val cfg = threeNodes(dir)
+    val cat = new Catalog(spark, s"$dir/_system")
+    ListenerShim.drain(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    try {
+      val results = Catalog.runRecorded(spark, cfg, cat, "run-1")
+      assert(results.values.forall(_.failure.isEmpty))
+      // every probe of a meta table that a first run has not written
+      val fresh = new Catalog(spark, s"$dir/_fresh")
+      assert(fresh.latestSchema("r").isEmpty)
+      assert(fresh.latestOutputPath("p3", "r").isEmpty)
+      assert(fresh.averageRowsWritten("p3", "r").isEmpty)
+      assert(fresh.getPipelineHash("p3").isEmpty)
+      assert(fresh.state.get("hwm/k").isEmpty)
+      assert(!new graft.core.DerivedUpdater(spark, s"$dir/_fresh")
+        .isApplied("meta_daily_stats", "run-1"))
+      ListenerShim.drain(spark.sparkContext)
+      assert(failed.isEmpty, failed.toArray.mkString("\n"))
+    } finally spark.listenerManager.unregister(listener)
+  }
 }

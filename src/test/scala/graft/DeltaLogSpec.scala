@@ -566,6 +566,113 @@ class DeltaLogSpec extends SparkSpec {
     }
   }
 
+  // ---------------------------------------------------- snapshot cache
+
+  /** `body`'s result and the Spark jobs it started. */
+  private def withJobCount[T](body: => T): (T, Int) = {
+    import org.apache.spark.sql.graftshim.ListenerShim
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    ListenerShim.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val out = body
+      ListenerShim.drain(spark.sparkContext)
+      (out, jobs.get())
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  private def ids(root: String, v: Option[Long] = None): Seq[Long] =
+    DeltaLog.read(spark, root, versionAsOf = v).collect().map(_.getLong(0)).sorted.toSeq
+
+  private def deleteTree(f: File): Unit = {
+    Option(f.listFiles).foreach(_.foreach(deleteTree))
+    f.delete(); ()
+  }
+
+  test("snapshot cache: a table re-created at the same path reads as the new table") {
+    import graft.sources.DeltaWriter
+    val root = tmp() + "/t"
+    DeltaWriter.write(Seq((1L, "a"), (2L, "b")).toDF("id", "name"), root)
+    assert(ids(root) == Seq(1L, 2L)) // caches (root, v0)
+    deleteTree(new File(root))
+    // the new v0 has another schema and other rows: the cached v0's
+    // commit file is gone, so the entry must not serve
+    DeltaWriter.write(Seq((7L, 0.5)).toDF("key", "score"), root)
+    val df = DeltaLog.read(spark, root)
+    assert(df.columns.toSeq == Seq("key", "score"))
+    assert(df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq == Seq((7L, 0.5)))
+  }
+
+  test("snapshot cache: latest sees a commit another writer made behind a cached snapshot") {
+    val dir = buildBasic()
+    assert(DeltaLog.snapshot(spark, dir).version == 1L)
+    assert(ids(dir) == Seq(1L, 2L, 3L)) // cached at v1
+    // another writer (plain file IO, no graft code) commits v2
+    dataFile(Seq((9L, "z")).toDF("id", "name"), dir, "fileC.parquet")
+    commit(dir, 2, Seq(infoLine(3000), addLine("fileC.parquet")))
+    assert(DeltaLog.snapshot(spark, dir).version == 2L)
+    assert(ids(dir) == Seq(1L, 2L, 3L, 9L))
+  }
+
+  test("snapshot cache: time travel below every cached entry replays from the start") {
+    val dir = buildBasic() // v0: ids 1..4; v1: rewrites B to id 3 only
+    commit(dir, 2, Seq(infoLine(3000), removeLine("fileA.parquet")))
+    assert(ids(dir) == Seq(3L)) // caches v2
+    assert(ids(dir, Some(1L)) == Seq(1L, 2L, 3L))
+    assert(ids(dir, Some(0L)) == Seq(1L, 2L, 3L, 4L))
+    assert(ids(dir) == Seq(3L))
+  }
+
+  test("snapshot cache: with the commits before a checkpoint removed, the load uses it") {
+    import graft.sources.DeltaWriter
+    val root = tmp() + "/t"
+    DeltaWriter.write(Seq(1L).toDF("id"), root) // v0
+    DeltaWriter.write(Seq(2L).toDF("id"), root) // v1
+    DeltaWriter.write(Seq(3L).toDF("id"), root) // v2
+    assert(ids(root, Some(1L)) == Seq(1L, 2L)) // caches v1
+    DeltaWriter.writeCheckpoint(spark, root, 2L) // caches v2
+    DeltaWriter.write(Seq(4L).toDF("id"), root) // v3, never loaded
+    // log retention cleanup: every cached version's commit goes away
+    (0L to 2L).foreach(v =>
+      assert(new File(root, f"_delta_log/$v%020d.json").delete()))
+    val (snap, jobs) = withJobCount(DeltaLog.snapshot(spark, root))
+    assert(snap.version == 3L)
+    assert(jobs == 1, s"expected the checkpoint scan alone, saw $jobs jobs")
+    assert(ids(root) == Seq(1L, 2L, 3L, 4L))
+    // a cleaned-up version stays unreadable even though it was cached
+    intercept[IllegalArgumentException] { DeltaLog.snapshot(spark, root, Some(1L)) }
+  }
+
+  test("snapshot cache: a cold load of a checkpointed table runs one Spark job") {
+    import graft.sources.DeltaWriter
+    val src = tmp() + "/t"
+    DeltaWriter.write(Seq(1L, 2L).toDF("id"), src)
+    DeltaWriter.write(Seq(3L).toDF("id"), src)
+    DeltaWriter.writeCheckpoint(spark, src, 1L)
+    DeltaWriter.write(Seq(4L).toDF("id"), src)
+    // a copy at a path no snapshot was ever loaded from
+    val root = tmp() + "/copy"
+    val from = new File(src).toPath
+    val walk = Files.walk(from)
+    try walk.forEach { p =>
+      val to = new File(root, from.relativize(p).toString).toPath
+      if (Files.isDirectory(p)) Files.createDirectories(to) else Files.copy(p, to)
+      ()
+    } finally walk.close()
+    val (cold, coldJobs) = withJobCount(DeltaLog.snapshot(spark, root))
+    assert(cold.version == 2L)
+    assert(coldJobs == 1, s"cold load: expected one checkpoint scan, saw $coldJobs jobs")
+    val (warm, warmJobs) = withJobCount(DeltaLog.snapshot(spark, root))
+    assert(warm == cold)
+    assert(warmJobs == 0, s"warm load: expected no job, saw $warmJobs")
+    assert(ids(root) == Seq(1L, 2L, 3L, 4L))
+  }
+
   test("declarative dispatch: format delta with time-travel options") {
     val dir = buildBasic()
     val latest = Sources.read(spark, Sources.ReadConfig("delta", path = Some(dir)))

@@ -21,7 +21,7 @@ class McpServerSpec extends SparkSpec {
 
   private val mapper = new ObjectMapper()
 
-  /** A live server on pipes: send(req) -> response node (15 s timeout). */
+  /** A live server on pipes: send(req) -> response node. */
   private class Wire(catalogRoot: Option[String]) {
     private val toServer = new PipedOutputStream()
     private val serverIn = new PipedInputStream(toServer, 1 << 16)
@@ -45,13 +45,26 @@ class McpServerSpec extends SparkSpec {
     server.start(); pump.start()
 
     def notifyRaw(json: String): Unit = writer.println(json)
+    /** The next response: waits while the server and the pump threads
+      * live, however slow a loaded box makes them. The cap only turns a
+      * hung server into a failure instead of a hung suite. */
     def send(json: String): JsonNode = {
       writer.println(json)
-      val r = responses.poll(15, TimeUnit.SECONDS)
-      assert(r != null, s"no response within 15s for: $json")
+      val deadline = System.nanoTime() + TimeUnit.MINUTES.toNanos(10)
+      var r: JsonNode = null
+      while (r == null && server.isAlive && pump.isAlive && System.nanoTime() < deadline)
+        r = responses.poll(100, TimeUnit.MILLISECONDS)
+      if (r == null) r = responses.poll() // written just before a thread ended
+      assert(r != null, s"no response (server alive: ${server.isAlive}) for: $json")
       r
     }
-    def idle(ms: Long = 300): Boolean = responses.poll(ms, TimeUnit.MILLISECONDS) == null
+    /** True when the server wrote nothing since the last response: the
+      * serve loop answers in order, so the reply to a ping sent now
+      * must be the next thing on the wire. */
+    def idle(): Boolean = {
+      val r = send("""{"jsonrpc":"2.0","id":"idle-barrier","method":"ping"}""")
+      r.path("id").asText() == "idle-barrier"
+    }
     def close(): Unit = { toServer.close(); server.join(5000) }
   }
 

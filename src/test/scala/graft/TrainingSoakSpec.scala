@@ -91,10 +91,27 @@ class TrainingSoakSpec extends SparkSpec {
       assert(a.numSinglePartitionExchanges == 0, s"$n: single-partition funnel")
     }
 
+  // the run writes ~1.5 GB under these; a suite that left them behind
+  // would fill a shared temp volume within a few runs
+  private val tempDirs = scala.collection.mutable.ArrayBuffer.empty[java.io.File]
+  private def tempDir(prefix: String): String = {
+    val d = java.nio.file.Files.createTempDirectory(prefix).toFile
+    tempDirs += d
+    d.toString
+  }
+  override def afterAll(): Unit = {
+    def delete(f: java.io.File): Unit = {
+      Option(f.listFiles).foreach(_.foreach(delete))
+      f.delete(); ()
+    }
+    tempDirs.foreach(delete)
+    super.afterAll()
+  }
+
   test("training_data pipeline e2e at 2M docs: two crawl batches through one minhash index", Soak) {
-    val out = java.nio.file.Files.createTempDirectory("tsoak_out").toString
-    val data1 = java.nio.file.Files.createTempDirectory("tsoak_d1").toString
-    val data2 = java.nio.file.Files.createTempDirectory("tsoak_d2").toString
+    val out = tempDir("tsoak_out")
+    val data1 = tempDir("tsoak_d1")
+    val data2 = tempDir("tsoak_d2")
 
     // batch 1: every distinct text appears exactly twice
     writeDocs(s"$data1/documents.parquet", spark.range(N1)
