@@ -1566,23 +1566,25 @@ object Tools {
         import org.apache.spark.sql.functions.col
         val catalog = new graft.core.Catalog(spark, r)
         try {
-          def scoped(t: String) = {
-            var df = catalog.table(t)
-            pipeline.foreach(p => df = df.filter(col("pipeline") === p))
-            node.foreach(nd => df = df.filter(col("node") === nd))
-            df
-          }
-          val edges = scoped("meta_lineage")
+          // a meta table a run never wrote is absent, not an error
+          def scoped(t: String): Option[org.apache.spark.sql.DataFrame] =
+            catalog.probe(t) { df0 =>
+              var df = df0
+              pipeline.foreach(p => df = df.filter(col("pipeline") === p))
+              node.foreach(nd => df = df.filter(col("node") === nd))
+              Some(df)
+            }
+          val edges = scoped("meta_lineage").toSeq.flatMap(_
             .select("pipeline", "node", "input").distinct()
-            .orderBy("pipeline", "node", "input").collect()
+            .orderBy("pipeline", "node", "input").collect())
           if (edges.isEmpty) { System.err.println("no lineage recorded"); return 1 }
           edges.foreach(e =>
             println(s"${e.getString(0)}: ${e.getString(2)} -> ${e.getString(1)}"))
           // column lineage is optional detail — present only with --node
           if (node.isDefined)
-            try scoped("meta_column_lineage")
+            try scoped("meta_column_lineage").toSeq.flatMap(_
               .select("column", "source").distinct()
-              .orderBy("column", "source").collect()
+              .orderBy("column", "source").collect())
               .foreach(c => println(s"  ${c.getString(1)} => ${c.getString(0)}"))
             catch { case _: Exception => () }
           0

@@ -1,7 +1,7 @@
 package graft.core
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{AnalysisException, DataFrame}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /**
  * Atomic parquet snapshot replacement, shared by every self-overwriting
@@ -20,10 +20,14 @@ import org.apache.spark.sql.{AnalysisException, DataFrame}
  */
 object AtomicParquet {
 
-  /** True iff the AnalysisException means "path does not exist" (first run). */
-  def isMissingPath(e: AnalysisException): Boolean =
-    Option(e.getCondition).contains("PATH_NOT_FOUND") ||
-      e.getMessage.contains("Path does not exist")
+  /** Whether `path` exists — what a first run checks before reading its
+    * own earlier output. A read planned against a missing path fails,
+    * and Spark reports each such failure to every query listener as a
+    * failed query with its full stack. */
+  def exists(spark: SparkSession, path: String): Boolean = {
+    val p = new Path(path)
+    p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
+  }
 
   /**
    * Replace the snapshot at `path` with `df` via temp-dir + rename swap.

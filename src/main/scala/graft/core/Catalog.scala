@@ -53,8 +53,7 @@ final class Catalog(spark: SparkSession, root: String) {
     * as a failed query with its full stack. A table that exists but
     * cannot be read also yields None. */
   private[graft] def probe[T](name: String)(read: DataFrame => Option[T]): Option[T] = {
-    val p = new org.apache.hadoop.fs.Path(tablePath(name))
-    if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)) None
+    if (!AtomicParquet.exists(spark, tablePath(name))) None
     else try read(table(name)) catch { case scala.util.control.NonFatal(_) => None }
   }
 

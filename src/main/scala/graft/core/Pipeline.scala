@@ -285,11 +285,9 @@ object Pipeline {
           sn.incremental.flatMap(_.filter))
         sn.incremental match {
           case Some(inc) =>
-            val existing = cfg.writePath.flatMap { p =>
+            val existing = cfg.writePath.filter(AtomicParquet.exists(spark, _)).flatMap { p =>
               try Some(Pipeline.readSink(spark, cfg.write.format, p))
               catch {
-                case e: org.apache.spark.sql.AnalysisException
-                    if AtomicParquet.isMissingPath(e) => None // first run
                 case _: IllegalArgumentException
                     if cfg.write.format.equalsIgnoreCase("delta") => None // no log yet
               }

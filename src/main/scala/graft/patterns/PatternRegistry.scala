@@ -58,13 +58,8 @@ object PatternRegistry {
 
   /** Existing sink snapshot, or None on first run / no sink. */
   private def readTarget(spark: SparkSession, target: Option[TargetRef]): Option[DataFrame] =
-    target.flatMap { t =>
-      try Some(spark.read.format(t.format).load(t.path))
-      catch {
-        case e: org.apache.spark.sql.AnalysisException
-            if graft.core.AtomicParquet.isMissingPath(e) => None
-      }
-    }
+    target.filter(t => graft.core.AtomicParquet.exists(spark, t.path))
+      .map(t => spark.read.format(t.format).load(t.path))
 
   private def tsCol(p: Map[String, Any], k: String) =
     p.get(k).map(e => expr(e.toString)).getOrElse(current_timestamp())

@@ -224,13 +224,9 @@ object Semantics {
     }
     val fresh = run(spark, model, query, filtered)
     val merged =
-      try graft.patterns.Patterns.aggregationMerge(
+      if (!graft.core.AtomicParquet.exists(spark, outPath)) fresh // first run
+      else graft.patterns.Patterns.aggregationMerge(
         spark.read.parquet(outPath), fresh, grain, strategies)
-      catch {
-        case e: org.apache.spark.sql.AnalysisException
-            if graft.core.AtomicParquet.isMissingPath(e) =>
-          fresh // first run: no existing metric table
-      }
     graft.core.AtomicParquet.overwrite(
       merged, outPath, System.nanoTime().toString)
     spark.read.parquet(outPath)

@@ -122,9 +122,9 @@ object DeltaDvWriter {
   /**
    * ONE atomic row-level commit combining DV deletes and appended data
    * files — the primitive under [[DeltaMerge]]'s copy-on-write MERGE.
-   * `plan` receives the live table WITH provenance ([[scanWithPos]]
-   * output: every logical column plus `_gf_file`, `_gf_ridx`; existing
-   * DVs already applied) and returns
+   * `plan` receives the live table WITH provenance (every logical
+   * column plus `_gf_file`, the data file's log path, and `_gf_ridx`,
+   * its parquet row index; existing DVs already applied) and returns
    *
    *   (matchedRows, appendRows, cleanup)
    *
@@ -196,22 +196,15 @@ object DeltaDvWriter {
       // frame — a MERGE into an empty (or fully-pruned) table degenerates
       // to pure insert, not a no-op
       val prov =
-        if (snap.files.nonEmpty) scanWithPos(spark, root, snap)
+        if (snap.files.nonEmpty)
+          DeltaLog.scanFiles(spark, root, snap, snap.files.map((_, Nil)), withPos = true)
         else spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
           StructType(DeltaLog.stripMeta(snap.schema).asInstanceOf[StructType].fields ++
             Seq(StructField("_gf_file", StringType),
               StructField("_gf_ridx", LongType))))
 
-      // position matching keys on data-file BASENAME: a foreign-written
-      // table with two same-named files in different partition dirs
-      // would silently merge both files' positions under one — wrong
-      // rows permanently deleted. Fail loudly BEFORE any artifact is
-      // staged (our own writers always emit UUID-unique basenames).
-      val byFile: Map[String, DeltaLog.AddFile] = snap.files
-        .map(a => basename(DeltaLog.decodePath(a.path)) -> a).toMap
-      require(byFile.size == snap.files.size,
-        s"duplicate data-file basenames in Delta snapshot of $root — " +
-          "cannot plan a DV delete keyed on file name")
+      // provenance keys on the log path, unique within a snapshot
+      val byFile: Map[String, DeltaLog.AddFile] = snap.files.map(a => a.path -> a).toMap
 
       val rp = plan(prov)
       val appendRows = rp.append
@@ -391,62 +384,6 @@ object DeltaDvWriter {
 
   private def noCommit(version: Long) = RowCommitResult(version, 0L, 0L, 0, 0, 0)
 
-  // ------------------------------------------------------------- scanning
-
-  private def basename(p: String): String = p.substring(p.lastIndexOf('/') + 1)
-
-  /** The live table rows WITH provenance: every LOGICAL column plus
-    * `_gf_file` (data-file basename) and `_gf_ridx` (parquet row index).
-    * Existing DVs are applied, so already-deleted rows never match.
-    * Under column mapping the scan runs on physical names and renames
-    * back to logical (the read path's positional struct cast). */
-  private def scanWithPos(spark: SparkSession, root: String,
-                          snap: DeltaLog.Snapshot): DataFrame = {
-    val partCols = snap.partitionColumns
-    val mapped =
-      snap.configuration.getOrElse("delta.columnMapping.mode", "none") != "none"
-    val physOf = DeltaLog.physicalNames(snap)
-    val logicalType: Map[String, org.apache.spark.sql.types.DataType] =
-      snap.schema.fields.map(f => f.name -> f.dataType).toMap
-    val dataFields = snap.schema.fields.filterNot(fd => partCols.contains(fd.name))
-    val dataSchema =
-      if (mapped) StructType(dataFields.map(f => StructField(
-        DeltaLog.physicalName(f), DeltaLog.toPhysical(f.dataType), f.nullable)))
-      else StructType(dataFields)
-    def logicalCol(c: String) =
-      if (!mapped) col(c)
-      else col(physOf(c)).cast(DeltaLog.stripMeta(logicalType(c))).as(c)
-    val scan0 = MetaScan.parquetScanStat(spark, dataSchema,
-        snap.files.map(a => DeltaLog.absolutize(root, a.path)))
-      .withColumn("_gf_ridx", col("_metadata.row_index"))
-      .withColumn("_gf_file", element_at(split(input_file_name(), "/"), -1))
-    val scan = antiJoinDvs(spark, root, snap, scan0)
-    val ordered = snap.schema.fieldNames.toSeq
-    if (partCols.isEmpty)
-      return scan.select((ordered.map(logicalCol) :+
-        col("_gf_file") :+ col("_gf_ridx")): _*)
-    scan.join(broadcast(DeltaLog.partitionValueFrame(spark, snap, snap.files)),
-        Seq("_gf_file"))
-      .select(ordered.map { c =>
-        if (partCols.contains(c))
-          col(s"_gf_pv_$c").cast(DeltaLog.stripMeta(logicalType(c))).as(c)
-        else logicalCol(c)
-      } ++ Seq(col("_gf_file"), col("_gf_ridx")): _*)
-  }
-
-  /** Drop rows already deleted by existing DVs (same join shape as
-    * DeltaLog's read-side application). */
-  private def antiJoinDvs(spark: SparkSession, root: String,
-                          snap: DeltaLog.Snapshot, scan: DataFrame): DataFrame = {
-    val dvFiles = snap.files.filter(_.deletionVector.isDefined)
-    if (dvFiles.isEmpty) return scan
-    // broadcast-hinted below the cardinality cap (see
-    // DeltaLog.deletedPositions): the anti-join must not shuffle the scan
-    scan.join(
-      DeltaLog.deletedPositions(spark, root, dvFiles, "_gf_file", "_gf_ridx"),
-      Seq("_gf_file", "_gf_ridx"), "left_anti")
-  }
-
   // ------------------------------------------------------------ DV output
 
   private final case class DvRef(file: String, enc: String, offset: Int,
@@ -462,8 +399,7 @@ object DeltaDvWriter {
     val f = fs(spark, root)
     val oldPayloads: Map[String, Array[Byte]] = snap.files
       .filter(_.deletionVector.isDefined).map { a =>
-        basename(DeltaLog.decodePath(a.path)) ->
-          DeletionVectors.payload(f, root, a.deletionVector.get)
+        a.path -> DeletionVectors.payload(f, root, a.deletionVector.get)
       }.toMap
     val oldB = spark.sparkContext.broadcast(oldPayloads)
     val entries = confEntries(spark.sessionState.newHadoopConf())

@@ -5,7 +5,7 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, IntegerType,
-  LongType, MapType, StringType, StructField, StructType}
+  LongType, MapType, StringType, StructField, StructType, TimestampType}
 
 import scala.jdk.CollectionConverters._
 
@@ -62,10 +62,10 @@ import scala.jdk.CollectionConverters._
  * path. With no usable base, or when a commit after it has been cleaned
  * up, the load falls back to the newest checkpoint, read in one Spark
  * job with the fixed [[CheckpointSchema]]. The DATA path is one parquet
- * scan over the active files; for partitioned tables the per-file
- * partition values attach via a broadcast file→values join on the file
- * name, so 100 TB of data still moves through a single columnar scan
- * with pushdown intact.
+ * scan over the active files; for partitioned tables the partition
+ * values ride the scan as per-file constant columns ([[MetaScan]]), so
+ * 100 TB of data still moves through a single columnar scan with
+ * pushdown intact.
  */
 object DeltaLog {
 
@@ -467,7 +467,8 @@ object DeltaLog {
   private def loadSidecars(spark: SparkSession, state: State,
                            ps: Seq[Path]): Unit = {
     if (ps.isEmpty) return
-    MetaScan.parquetScanStat(spark, CheckpointSchema("add"), ps.map(_.toString))
+    MetaScan.parquetScan(spark, CheckpointSchema("add"),
+        ps.map(p => MetaScan.KnownFile(p.toString, 0L)))
       .select(to_json(col("add"))).where(col("add").isNotNull)
       .collect().foreach(r => state.applyAdd(mapper.readTree(r.getString(0))))
   }
@@ -626,9 +627,9 @@ object DeltaLog {
 
   /**
    * Read the table at a version/timestamp. One parquet scan over the
-   * active files (pushdown and pruning intact); partitioned tables attach
-   * their partition values via a broadcast (file name → values) join —
-   * partition columns are NOT stored in Delta data files.
+   * active files (pushdown and pruning intact); partitioned tables carry
+   * their partition values as per-file constants of the scan — partition
+   * columns are NOT stored in Delta data files.
    * `partitionFilter` prunes FILES driver-side before the scan touches
    * parquet (equality on partition-column values, the replaceWhere
    * scoping shape): a day/region load over a 100 TB partitioned table
@@ -681,129 +682,96 @@ object DeltaLog {
                              physOf: Map[String, String]): Option[String] =
     a.partitionValues.get(physOf.getOrElse(c, c)).orElse(a.partitionValues.get(c)).flatten
 
-  /** One row per file of `files`: its basename `_gf_file` and a string
-    * `_gf_pv_<c>` per partition column — the broadcast side of the
-    * file -> partition values join (values are not stored in the files). */
-  private[sources] def partitionValueFrame(spark: SparkSession, snap: Snapshot,
-                                           files: Seq[AddFile]): DataFrame = {
-    val physOf = physicalNames(snap)
-    val rows = files.map { a =>
-      val name = decodePath(a.path)
-      Row.fromSeq(name.substring(name.lastIndexOf('/') + 1) +:
-        snap.partitionColumns.map(c => partitionValue(a, c, physOf).orNull))
-    }
-    val schema = StructType(("_gf_file" +: snap.partitionColumns.map(c => s"_gf_pv_$c"))
-      .map(org.apache.spark.sql.types.StructField(_, org.apache.spark.sql.types.StringType)))
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
-  }
-
   /**
-   * The DataFrame of exactly `snap.files` — one parquet scan (physical
-   * schema under column mapping, renamed back), DV positions dropped,
-   * partition values attached via the broadcast file→values join. The
-   * building block behind [[read]] and the streaming source's per-batch
-   * frames.
+   * The DataFrame of exactly `snap.files` — the building block behind
+   * [[read]] and the streaming source's per-batch frames.
    */
   private[sources] def frameOf(spark: SparkSession, root: String,
-                               snap: Snapshot): DataFrame = {
+                               snap: Snapshot): DataFrame =
+    if (snap.files.isEmpty)
+      spark.createDataFrame(
+        spark.sparkContext.emptyRDD[Row], stripMeta(snap.schema).asInstanceOf[StructType])
+    else scanFiles(spark, root, snap, snap.files.map((_, Nil)))
+
+  /**
+   * One parquet scan over `files` of `snap`'s table (physical schema
+   * under column mapping, renamed back), each file paired with its
+   * values for the extra `constants` columns. Per-file constants of the
+   * scan ([[MetaScan]]) carry `_gf_file` — the path exactly as the log
+   * records it, unique within a snapshot — and the partition values
+   * (Delta does not store them in data files), cast from the log's
+   * strings to the declared types. Deletion vectors drop their rows by
+   * an anti-join on (`_gf_file`, `_metadata.row_index`).
+   *
+   * Output: the logical table columns, then `dataExtra` (columns the
+   * files themselves carry, e.g. a cdc file's `_change_type`), then
+   * `_gf_file` and `_gf_ridx` (parquet row index) when `withPos`, then
+   * `constants`.
+   */
+  private[sources] def scanFiles(spark: SparkSession, root: String, snap: Snapshot,
+                                 files: Seq[(AddFile, Seq[Any])],
+                                 constants: Seq[StructField] = Nil,
+                                 dataExtra: Seq[StructField] = Nil,
+                                 withPos: Boolean = false): DataFrame = {
     val physOf = physicalNames(snap)
     val mapped =
       snap.configuration.getOrElse("delta.columnMapping.mode", "none") != "none"
+    val partCols = snap.partitionColumns
     val logicalType: Map[String, DataType] =
       snap.schema.fields.map(f => f.name -> f.dataType).toMap
-    val dataFields =
-      snap.schema.fields.filterNot(fd => snap.partitionColumns.contains(fd.name))
-    val dataSchema =
-      if (mapped) StructType(dataFields.map(f =>
-        org.apache.spark.sql.types.StructField(
-          physicalName(f), toPhysical(f.dataType), f.nullable)))
-      else StructType(dataFields.toSeq)
-    val ordered = snap.schema.fieldNames.toSeq
-    if (snap.files.isEmpty)
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[Row], stripMeta(snap.schema).asInstanceOf[StructType])
+    val dataFields = snap.schema.fields.filterNot(fd => partCols.contains(fd.name))
+    val dataSchema = StructType((
+      if (mapped) dataFields.toSeq.map(f =>
+        StructField(physicalName(f), toPhysical(f.dataType), f.nullable))
+      else dataFields.toSeq) ++ dataExtra)
+    val constSchema = StructType(StructField("_gf_file", StringType) +:
+      (partCols.map(c => StructField(s"_gf_pv_$c", StringType)) ++ constants))
+    val scan = MetaScan.parquetScan(spark, dataSchema, files.map { case (a, vs) =>
+      MetaScan.KnownFile(absolutize(root, a.path), 0L, constants =
+        a.path +: (partCols.map(c => partitionValue(a, c, physOf).orNull) ++ vs))
+    }, constSchema)
+    val dvFiles = files.map(_._1).filter(_.deletionVector.isDefined)
+    val withRidx =
+      if (dvFiles.isEmpty && !withPos) scan
+      else scan.withColumn("_gf_ridx", col("_metadata.row_index"))
+    val live =
+      if (dvFiles.isEmpty) withRidx
+      else withRidx.join(deletedPositions(spark, root, dvFiles),
+        Seq("_gf_file", "_gf_ridx"), "left_anti")
     // physical → logical: rename top-level by alias, nested by positional
     // struct cast (identical types, so the cast is a pure rename)
-    def logicalCol(c: String) =
-      if (!mapped) col(c)
-      else col(physOf(c)).cast(stripMeta(logicalType(c))).as(c)
-    val rawScan = MetaScan.parquetScanStat(spark, dataSchema,
-      snap.files.map(a => absolutize(root, a.path)))
-    if (snap.partitionColumns.isEmpty)
-      return applyDeletionVectors(spark, root, snap, rawScan)
-        .select(ordered.map(logicalCol): _*)
-    // file name (unique UUID-bearing basenames per the Delta writers) →
-    // partition value strings, cast to the declared types after the join
-    val base = (p: String) => p.substring(p.lastIndexOf('/') + 1)
-    val names = snap.files.map(a => base(decodePath(a.path)))
-    require(names.distinct.size == names.size,
-      s"duplicate data-file basenames in Delta snapshot of $root — cannot " +
-        "key partition values by file name")
-    val pv = partitionValueFrame(spark, snap, snap.files)
-    // the file column MUST attach on the raw scan — input_file_name()
-    // returns "" after the DV anti-join's join node
-    val withFile = applyDeletionVectors(spark, root, snap,
-      rawScan.withColumn("_gf_file",
-        element_at(split(input_file_name(), "/"), -1)))
-    val partType = snap.schema.fields.map(fd => fd.name -> fd.dataType).toMap
-    val joined = withFile.join(broadcast(pv), Seq("_gf_file"))
-    joined.select(ordered.map { c =>
-      if (snap.partitionColumns.contains(c))
-        col(s"_gf_pv_$c").cast(stripMeta(partType(c))).as(c)
-      else logicalCol(c)
-    }: _*)
+    live.select(snap.schema.fieldNames.toSeq.map { c =>
+      if (partCols.contains(c)) col(s"_gf_pv_$c").cast(stripMeta(logicalType(c))).as(c)
+      else if (mapped) col(physOf(c)).cast(stripMeta(logicalType(c))).as(c)
+      else col(c)
+    } ++ (dataExtra.map(_.name) ++
+      (if (withPos) Seq("_gf_file", "_gf_ridx") else Nil) ++
+      constants.map(_.name)).map(col): _*)
   }
 
   /**
-   * Drop DV-deleted row positions: one anti-join of the scan's
-   * (file basename, `_metadata.row_index`) against the decoded deleted
-   * positions. The driver ships only raw DV payloads (total size bounded
-   * by the log's own `sizeInBytes` fields); bitmap decode happens on
-   * executors. No-op for snapshots without deletion vectors.
+   * (`_gf_file`, `_gf_ridx`) rows — log path, deleted row index — for
+   * the DV-carrying `dvFiles`, BROADCAST-hinted when the log's own
+   * recorded cardinalities say the decoded position set is small: the
+   * anti-join then builds one hash relation instead of shuffling +
+   * sorting the ENTIRE data scan against a few thousand positions (the
+   * plan was SortMergeJoin with an Exchange on the 100 TB side). The
+   * driver ships only raw DV payloads (total size bounded by the log's
+   * own `sizeInBytes` fields); bitmap decode happens on executors.
+   * Beyond the cap (`spark.graft.dv.broadcastMaxPositions`, default 4M
+   * positions — a few hundred MB of hash relation, far cheaper than a
+   * full-table shuffle but bounded so a pathological table cannot OOM
+   * the driver) the frame is left unhinted and the planner falls back
+   * to the shuffle.
    */
-  private[sources] def applyDeletionVectors(spark: SparkSession, root: String,
-                                            snap: Snapshot, scan: DataFrame): DataFrame = {
-    val dvFiles = snap.files.filter(_.deletionVector.isDefined)
-    if (dvFiles.isEmpty) return scan
-    val deleted = deletedPositions(spark, root, dvFiles,
-      "_gf_dv_file", "_gf_dv_ridx")
-    // collision-free provenance columns: `scan` MUST be the raw parquet
-    // scan (possibly with extra withColumns) — input_file_name() and
-    // `_metadata` are undefined after a join, so callers that need their
-    // own file column must add it BEFORE this anti-join, never after
-    scan
-      .withColumn("_gf_dv_file", element_at(split(input_file_name(), "/"), -1))
-      .withColumn("_gf_dv_ridx", col("_metadata.row_index"))
-      .join(deleted, Seq("_gf_dv_file", "_gf_dv_ridx"), "left_anti")
-      .drop("_gf_dv_file", "_gf_dv_ridx")
-  }
-
-  /**
-   * (file basename, deleted row index) rows for a snapshot's DV-carrying
-   * files, BROADCAST-hinted when the log's own recorded cardinalities say
-   * the decoded position set is small: the anti-join then builds one hash
-   * relation instead of shuffling + sorting the ENTIRE data scan against
-   * a few thousand positions (the plan was SortMergeJoin with an Exchange
-   * on the 100 TB side). Beyond the cap
-   * (`spark.graft.dv.broadcastMaxPositions`, default 4M positions — a
-   * few hundred MB of hash relation, far cheaper than a full-table
-   * shuffle but bounded so a pathological table cannot OOM the driver)
-   * the frame is left unhinted and the planner falls back to the shuffle.
-   */
-  private[sources] def deletedPositions(spark: SparkSession, root: String,
-                                        dvFiles: Seq[AddFile],
-                                        fileCol: String,
-                                        posCol: String): DataFrame = {
+  private def deletedPositions(spark: SparkSession, root: String,
+                               dvFiles: Seq[AddFile]): DataFrame = {
     val f = fs(spark, root)
-    val base = (p: String) => p.substring(p.lastIndexOf('/') + 1)
     val payloads: Seq[(String, Array[Byte])] = dvFiles.map { a =>
-      base(decodePath(a.path)) -> DeletionVectors.payload(f, root, a.deletionVector.get)
+      a.path -> DeletionVectors.payload(f, root, a.deletionVector.get)
     }
     val schema = StructType(Seq(
-      org.apache.spark.sql.types.StructField(fileCol,
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField(posCol,
-        org.apache.spark.sql.types.LongType)))
+      StructField("_gf_file", StringType), StructField("_gf_ridx", LongType)))
     val rows = spark.sparkContext
       .parallelize(payloads, math.max(1, math.min(payloads.size, 32)))
       .flatMap { case (file, bytes) =>
@@ -859,72 +827,26 @@ object DeltaLog {
     require(fromVersion >= vs.head && to <= vs.last && fromVersion <= to,
       s"change range [$fromVersion, $to] outside log [${vs.head}, ${vs.last}]")
     val snap = snapshot(spark, root, versionAsOf = Some(to))
-    val mapped =
-      snap.configuration.getOrElse("delta.columnMapping.mode", "none") != "none"
-    val physOf = physicalNames(snap)
-    val logicalType: Map[String, DataType] =
-      snap.schema.fields.map(fd => fd.name -> fd.dataType).toMap
-    val dataFields =
-      snap.schema.fields.filterNot(fd => snap.partitionColumns.contains(fd.name))
-    def physSchema(extra: Seq[org.apache.spark.sql.types.StructField]) =
-      StructType(dataFields.map(fd =>
-        org.apache.spark.sql.types.StructField(
-          if (mapped) physicalName(fd) else fd.name,
-          if (mapped) toPhysical(fd.dataType) else stripMeta(fd.dataType),
-          fd.nullable)) ++ extra)
-    val ordered = snap.schema.fieldNames.toSeq
 
     /** Read one file group — files of ONE change class across ALL range
-      * commits, ONE parquet scan — attaching partition values plus the
-      * change cols. `_commit_version`/`_commit_timestamp` stamp per file
-      * through a (basename → value) literal map, so a 50-commit CDF range
-      * plans 1-2 scans instead of a union of one subplan per
-      * (commit, class) (plan analysis alone dominated multi-commit
-      * ranges). `changeType` = Some(ct) stamps a derived type; None means
-      * cdc files carrying their own `_change_type` column. */
+      * commits, ONE parquet scan. The change columns are per-file
+      * constants of the scan, so a 50-commit CDF range plans 1-2 scans
+      * instead of a union of one subplan per (commit, class) (plan
+      * analysis alone dominated multi-commit ranges). `changeType` =
+      * Some(ct) stamps a derived type; None means cdc files carrying
+      * their own `_change_type` column. */
     def readGroup(files: Seq[(AddFile, Long, Long)],
                   changeType: Option[String]): Option[DataFrame] = {
       if (files.isEmpty) return None
-      val ctField =
-        if (changeType.isEmpty)
-          Seq(org.apache.spark.sql.types.StructField("_change_type",
-            org.apache.spark.sql.types.StringType))
-        else Nil
-      val scan0 = MetaScan.parquetScanStat(spark, physSchema(ctField),
-        files.map { case (a, _, _) => absolutize(root, a.path) })
-      val scan = changeType match {
-        case Some(ct) => scan0.withColumn("_change_type", lit(ct))
-        case None => scan0
-      }
-      def logicalCol(c: String) =
-        if (!mapped) col(c)
-        else col(physOf(c)).cast(stripMeta(logicalType(c))).as(c)
-      val base = (p: String) => p.substring(p.lastIndexOf('/') + 1)
-      val verOf: Map[String, Long] =
-        files.map { case (a, v, _) => base(decodePath(a.path)) -> v }.toMap
-      val tsOf: Map[String, Long] =
-        files.map { case (a, _, t) => base(decodePath(a.path)) -> t }.toMap
-      val withFile = scan.withColumn("_gf_file",
-        element_at(split(input_file_name(), "/"), -1))
-      val framed: DataFrame =
-        if (snap.partitionColumns.isEmpty)
-          withFile.select(ordered.map(logicalCol) ++
-            Seq(col("_change_type"), col("_gf_file")): _*)
-        else {
-          withFile.join(broadcast(partitionValueFrame(spark, snap, files.map(_._1))),
-              Seq("_gf_file"))
-            .select(ordered.map { c =>
-              if (snap.partitionColumns.contains(c))
-                col(s"_gf_pv_$c").cast(stripMeta(logicalType(c))).as(c)
-              else logicalCol(c)
-            } ++ Seq(col("_change_type"), col("_gf_file")): _*)
-        }
-      Some(framed
-        .withColumn("_commit_version",
-          element_at(typedLit(verOf), col("_gf_file")))
-        .withColumn("_commit_timestamp",
-          timestamp_millis(element_at(typedLit(tsOf), col("_gf_file"))))
-        .drop("_gf_file"))
+      val ctField = StructField("_change_type", StringType)
+      val stamps = Seq(StructField("_commit_version", LongType),
+        StructField("_commit_timestamp", TimestampType))
+      val stamped = files.map { case (a, v, t) =>
+        (a, changeType.toSeq ++ Seq(v, java.time.Instant.ofEpochMilli(t))) }
+      Some(changeType match {
+        case Some(_) => scanFiles(spark, root, snap, stamped, ctField +: stamps)
+        case None => scanFiles(spark, root, snap, stamped, stamps, dataExtra = Seq(ctField))
+      })
     }
 
     def pvMap(n: JsonNode): Map[String, Option[String]] =
@@ -992,11 +914,7 @@ object DeltaLog {
       val b = math.min(hi - offset, xs.size.toLong)
       if (a >= b) Nil else xs.slice(a.toInt, b.toInt)
     }
-    // accumulate per change class ACROSS commits — one scan per class.
-    // Per-file stamping needs unique basenames within a class; a path
-    // re-added after a remove (protocol-legal, no real writer does it)
-    // would collide in the stamp map, so such a class falls back to
-    // per-commit frames.
+    // accumulate per change class ACROSS commits — one scan per class
     val cdcAll = scala.collection.mutable.ArrayBuffer[(AddFile, Long, Long)]()
     val insAll = scala.collection.mutable.ArrayBuffer[(AddFile, Long, Long)]()
     val delAll = scala.collection.mutable.ArrayBuffer[(AddFile, Long, Long)]()
@@ -1014,20 +932,9 @@ object DeltaLog {
           .map((_, pc.version, pc.ts))
       }
     }
-    def grouped(all: Seq[(AddFile, Long, Long)],
-                ct: Option[String]): Seq[DataFrame] = {
-      // stamping (and the pv join) key on the file BASENAME — writers
-      // name files with a fresh uuid, but verify rather than assume
-      val names = all.map { case (a, _, _) =>
-        val p = decodePath(a.path); p.substring(p.lastIndexOf('/') + 1)
-      }
-      if (names.distinct.size == names.size) readGroup(all, ct).toSeq
-      else all.groupBy { case (_, v, _) => v }.toSeq.sortBy(_._1)
-        .flatMap { case (_, fs0) => readGroup(fs0, ct) }
-    }
-    val frames = grouped(cdcAll.toSeq, None) ++
-      grouped(insAll.toSeq, Some("insert")) ++
-      grouped(delAll.toSeq, Some("delete"))
+    val frames = readGroup(cdcAll.toSeq, None).toSeq ++
+      readGroup(insAll.toSeq, Some("insert")) ++
+      readGroup(delAll.toSeq, Some("delete"))
     frames match {
       case Seq() =>
         spark.createDataFrame(spark.sparkContext.emptyRDD[Row], StructType(

@@ -30,8 +30,8 @@ import org.apache.spark.sql.types._
  *
  * Scale: the rewrite is ONE distributed job regardless of partition
  * count — candidate files scan through the ordinary parquet reader, each
- * file routes to its driver-assigned bin via a broadcast basename→bin
- * map, and `repartition(bins, _gf_bin)` lands every bin in one task.
+ * file's driver-assigned bin rides the scan as a per-file constant
+ * column, and `repartition(bins, _gf_bin)` lands every bin in one task.
  * Driver state is file METADATA only (the same per-file actions every
  * Delta writer ships). Concurrency: the commit loop re-reads the log and
  * verifies every file it removes is still active — a concurrent writer
@@ -139,42 +139,6 @@ object DeltaMaintenance {
    * `partitionFilter` restricts compaction to partitions whose values
    * match every (column -> string value) entry — the OPTIMIZE WHERE form.
    */
-  /**
-   * DV-applied scan over exactly `removes` with PARTITION VALUES (which
-   * Delta does not store in data files) re-attached through a broadcast
-   * basename → values map — the routing column must attach on the RAW
-   * scan because input_file_name() is "" after a join. `extra` appends
-   * more per-file columns (the compaction path's bin id). Output columns:
-   * `ordered` table columns (+ the extras, in order).
-   */
-  private def scanWithPartitionValues(spark: SparkSession, root: String,
-      snap: DeltaLog.Snapshot, removes: Seq[DeltaLog.AddFile],
-      dataSchema: StructType, partCols: Seq[String], ordered: Seq[String],
-      extra: Seq[(String, DataType, DeltaLog.AddFile => Any)] = Nil): DataFrame = {
-    val base = (p: String) => p.substring(p.lastIndexOf('/') + 1)
-    val pvRows = removes.map { a =>
-      Row.fromSeq(base(DeltaLog.decodePath(a.path)) +:
-        (extra.map(_._3(a)) ++
-          partCols.map(c => a.partitionValues.get(c).flatten.orNull)))
-    }
-    val pvSchema = StructType(StructField("_gf_file", StringType) +:
-      (extra.map { case (n, t, _) => StructField(n, t) } ++
-        partCols.map(c => StructField(s"_gf_pv_$c", StringType))))
-    val pv = spark.createDataFrame(
-      spark.sparkContext.parallelize(pvRows, 1), pvSchema)
-    val partType = snap.schema.fields.map(fd => fd.name -> fd.dataType).toMap
-    val raw = MetaScan.parquetScanStat(spark, dataSchema,
-      removes.map(a => DeltaLog.absolutize(root, a.path)))
-    DeltaLog.applyDeletionVectors(spark, root, snap.copy(files = removes),
-        raw.withColumn("_gf_file",
-          element_at(split(input_file_name(), "/"), -1)))
-      .join(broadcast(pv), Seq("_gf_file"))
-      .select((ordered.map { c =>
-        if (partCols.contains(c)) col(s"_gf_pv_$c").cast(partType(c)).as(c)
-        else col(c)
-      } ++ extra.map { case (n, _, _) => col(n) }): _*)
-  }
-
   def optimize(spark: SparkSession, root: String,
                targetFileBytes: Long = 128L << 20,
                zorderBy: Seq[String] = Nil,
@@ -226,9 +190,6 @@ object DeltaMaintenance {
     val removes = rewrite.flatMap(_._2)
     val bytesRemoved = removes.map(_.size).sum
     val partCols = snap.partitionColumns
-    val dataSchema = StructType(
-      snap.schema.fields.filterNot(fd => partCols.contains(fd.name)))
-    val ordered = snap.schema.fieldNames.toSeq
     val nonce = java.lang.Long.toHexString(System.nanoTime())
     val f = fs(spark, root)
 
@@ -243,15 +204,7 @@ object DeltaMaintenance {
         val numFiles = math.max(1, math.ceil(bytesRemoved.toDouble / targetFileBytes).toInt)
         // DV-carrying inputs compact to their LIVE rows (the rewrite is
         // also the purge: the new file drops the vector)
-        val scan =
-          if (partCols.isEmpty)
-            DeltaLog.applyDeletionVectors(spark, root,
-                snap.copy(files = removes),
-                MetaScan.parquetScanStat(spark, dataSchema,
-                  removes.map(a => DeltaLog.absolutize(root, a.path))))
-              .select(ordered.map(col): _*)
-          else scanWithPartitionValues(spark, root, snap, removes,
-            dataSchema, partCols, ordered)
+        val scan = DeltaLog.scanFiles(spark, root, snap, removes.map((_, Nil)))
         // z ranges from the LOG's add-action stats, not a min/max scan:
         // the rewrite then reads every selected file exactly ONCE (the
         // Iceberg optimize path derives the same hint from manifest
@@ -262,15 +215,12 @@ object DeltaMaintenance {
           statsHint = DeltaStats.zRanges(snap, removes, zorderBy))
         DeltaWriter.stageAndMove(clustered, root, partCols, nonce, countRows = false)._1
       } else {
-        // one distributed job for every bin across every partition: route
-        // each file's rows to its bin (broadcast basename -> bin), land
-        // each bin in one task, write through the hive-partitioned stager
-        val binOf: Map[String, Int] = rewrite.flatMap { case (bin, files) =>
-          files.map(_.path -> bin)
-        }.toMap
-        val routed = scanWithPartitionValues(spark, root, snap, removes,
-          dataSchema, partCols, ordered,
-          extra = Seq(("_gf_bin", IntegerType, a => Int.box(binOf(a.path)))))
+        // one distributed job for every bin across every partition: each
+        // file's bin id is a per-file constant of the scan, and
+        // `repartition(bins, _gf_bin)` lands each bin in one task
+        val routed = DeltaLog.scanFiles(spark, root, snap,
+          rewrite.flatMap { case (bin, files) => files.map((_, Seq(bin))) },
+          Seq(StructField("_gf_bin", IntegerType)))
         val packed = routed
           .repartition(rewrite.size, col("_gf_bin"))
           .drop("_gf_bin")

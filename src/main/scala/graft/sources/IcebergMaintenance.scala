@@ -27,9 +27,10 @@ import scala.jdk.CollectionConverters._
  *    data files no retained snapshot references — the storage-reclaim /
  *    time-travel trade every Iceberg deployment schedules.
  *
- * Scale: the rewrite is ONE distributed job (broadcast basename→bin
- * routing, `repartition(bins)`) regardless of partition count; all other
- * work is driver-side metadata bounded by manifest counts.
+ * Scale: the rewrite is ONE distributed job (each file's bin id a
+ * per-file constant of the scan, `repartition(bins)`) regardless of
+ * partition count; all other work is driver-side metadata bounded by
+ * manifest counts.
  */
 object IcebergMaintenance {
 
@@ -198,7 +199,7 @@ object IcebergMaintenance {
     }
     if (bins.isEmpty) return OptimisticCommit.Finish(OptimizeResult(None, 0, 0, 0L, 0L))
 
-    // one distributed rewrite: basename → bin id, repartition per bin
+    // one distributed rewrite: file → bin id, repartition per bin
     val readSchema = {
       def strip(dt: DataType): DataType = dt match {
         case s: StructType => StructType(s.fields.map(fd =>
@@ -207,13 +208,8 @@ object IcebergMaintenance {
       }
       strip(meta.schema).asInstanceOf[StructType]
     }
-    // route by FULL scheme-normalized path, NOT basename: Spark's
-    // dynamic-partition writer reuses one basename across a task's
-    // partition dirs, so basenames collide between partition directories
-    def normPath(p: String): String =
-      p.replaceFirst("^[a-zA-Z][a-zA-Z0-9+.-]*:", "").replaceFirst("^/+", "/")
     val binOf: Map[String, Int] = bins.zipWithIndex.flatMap { case ((_, files), i) =>
-      files.map(e => normPath(e.path) -> i)
+      files.map(_.path -> i)
     }.toMap
     val candidateEntries = bins.flatMap(_._2).toSeq
     val commitUuid = java.util.UUID.randomUUID().toString
@@ -222,20 +218,19 @@ object IcebergMaintenance {
     at.stage(Seq(outDir, manifestPath))
     // alias-aware scan: a compaction that read pre-rename files under
     // the current name only would REWRITE the renamed column as null —
-    // permanent data loss the alias fallback could never repair
-    val rawScan = IcebergSource.scanFiles(spark, meta, readSchema,
-        IcebergSource.knownFiles(meta, candidateEntries))
-      .withColumn("_gf_bin", element_at(typedLit(binOf),
-        regexp_replace(regexp_replace(input_file_name(),
-          "^[a-zA-Z][a-zA-Z0-9+.-]*:", ""), "^/+", "/")))
+    // permanent data loss the alias fallback could never repair. Each
+    // file's bin id is a per-file constant of the scan.
+    val withDeletes = pos.nonEmpty || eq.nonEmpty
+    val scan = IcebergSource.scanEntries(spark, meta, readSchema, candidateEntries,
+      provenance = withDeletes,
+      constants = Seq((StructField("_gf_bin", IntegerType), e => binOf(e.path))))
     // merge-on-read compaction IS the purge: row-level deletes targeting
     // the compacted files are applied during the rewrite (the new files
     // get the fresh sequence number, so the old deletes no longer bind)
     val routed =
-      if (pos.isEmpty && eq.isEmpty) rawScan
-      else IcebergSource.applyDeletes(spark, meta, rawScan,
-        bins.flatMap(_._2).toSeq, pos, eq)
-        .drop("_gf_path", "_gf_pos", "_gf_seq")
+      if (!withDeletes) scan
+      else IcebergSource.applyDeletes(spark, meta, scan, pos, eq)
+        .drop(IcebergSource.provenanceCols: _*)
     // observe the routed rows INSIDE the rewrite job: a mis-routed row
     // (null bin) would land outside the listed dirs and silently vanish
     val obs = org.apache.spark.sql.Observation()

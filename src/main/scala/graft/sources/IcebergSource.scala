@@ -33,9 +33,9 @@ import scala.jdk.CollectionConverters._
  *  - live data files = manifest entries with status EXISTING/ADDED;
  *  - v2 row-level deletes apply, both classes SEQUENCE-AWARE per the
  *    spec's inheritance rules: POSITION deletes anti-join the scan's
- *    (input_file_name, `_metadata.row_index`) under scheme-normalized
- *    paths for data files with seq <= the delete's (same shape as the
- *    Delta deletion-vector path); EQUALITY deletes anti-join on the
+ *    (file path, `_metadata.row_index`) under scheme-normalized paths
+ *    (the path is a per-file constant of the scan) for data files with
+ *    seq <= the delete's (same shape as the Delta deletion-vector path); EQUALITY deletes anti-join on the
  *    delete file's equality columns (field ids resolved through the
  *    table schema) for data files with seq STRICTLY below the delete's —
  *    so a re-inserted row after the delete survives;
@@ -280,21 +280,6 @@ object IcebergSource {
       .view.mapValues(_.map(_._2)).toMap
   }
 
-  /**
-   * One parquet scan over `paths` under `readSchema` (current logical
-   * names), with historical-name fallback: a column renamed after some
-   * of `paths`' files were written surfaces under its OLD name in those
-   * files, so the scan requests the aliases too and coalesces. Exact: a
-   * file never carries both names (renames are metadata-only), missing
-   * parquet columns read null, and genuine nulls coalesce to null.
-   * No-op (single scan, no projection) for never-renamed tables.
-   *
-   * Scale note: parquet ROW-GROUP pushdown of predicates on a RENAMED
-   * column is lost behind the coalesce (filters on other columns still
-   * push; never-renamed tables are unaffected). The heavier 100 TB lever
-   * is untouched: manifest bounds key on FIELD IDS, so whole-file
-   * skipping for renamed-column predicates keeps working.
-   */
   /** The subset of `entries` provably written under the CURRENT schema
     * (their adding snapshot records the current schema-id): those files
     * carry every current name, so they scan WITHOUT alias coalescing —
@@ -312,42 +297,54 @@ object IcebergSource {
       snapSchema.get(sid).contains(curId))).map(_.path).toSet
   }
 
-  /** [[scanFiles]] over FileEntries: generation-aware — see
-    * [[currentGenPaths]]. `withRowPos` appends a `_gf_pos` column (the
-    * parquet row index) resolved INSIDE each scan leg — `_metadata`
-    * does not resolve through the generation-split Union, so callers
-    * that apply row-level deletes must request the position here. */
-  /** Manifest-known (path, size, commit-timestamp) triples for a scan —
-    * what [[MetaScan.parquetScan]] plans from without re-statting files. */
-  private[sources] def knownFiles(meta: TableMeta,
-                                  entries: Seq[FileEntry]): Seq[MetaScan.KnownFile] = {
+  /** Per-file constant columns of an Iceberg scan, each with its value
+    * for a manifest entry (see [[MetaScan]]). */
+  private[sources] type Constants = Seq[(StructField, FileEntry => Any)]
+
+  /** Row provenance for row-level deletes: the data file's path as the
+    * manifest records it (what a position-delete file must reference),
+    * its scheme-normalized form (the key position deletes match on,
+    * whatever scheme spelling their writer used) and its data sequence
+    * number. [[scanEntries]] adds `_gf_pos`, the parquet row index. */
+  private val provenance: Constants = Seq(
+    (StructField("_gf_file", StringType), _.path),
+    (StructField("_gf_path", StringType), e => normSchemeString(e.path)),
+    (StructField("_gf_seq", LongType), _.seq))
+
+  /** The provenance columns a `provenance = true` scan carries. */
+  private[sources] val provenanceCols: Seq[String] =
+    provenance.map(_._1.name) :+ "_gf_pos"
+
+  /** Manifest-known (path, size, commit-timestamp) of each entry — what
+    * [[MetaScan.parquetScan]] plans from without re-statting files —
+    * with the entry's values for `constants`. */
+  private def knownFiles(meta: TableMeta, entries: Seq[FileEntry],
+                         constants: Constants = Nil): Seq[MetaScan.KnownFile] = {
     val tsOf: Map[Long, Long] =
       meta.snapshots.map(s => s.snapshotId -> s.timestampMs).toMap
     entries.map(e => MetaScan.KnownFile(e.path, e.size,
-      e.addedSnapshotId.flatMap(tsOf.get).getOrElse(0L)))
+      e.addedSnapshotId.flatMap(tsOf.get).getOrElse(0L), constants.map(_._2(e))))
   }
 
+  /**
+   * The rows of `entries` under `readSchema`, generation-aware (see
+   * [[currentGenPaths]]): current-schema files scan plain, older ones
+   * through the historical-alias coalesce, the two legs unioned by
+   * position. Output: `readSchema`'s columns, then — with `provenance`,
+   * the input [[applyDeletes]] needs — `_gf_pos`, `_gf_file`, `_gf_path`,
+   * `_gf_seq`, then the `constants`.
+   */
   private[sources] def scanEntries(spark: SparkSession, meta: TableMeta,
                                    readSchema: StructType,
                                    entries: Seq[FileEntry],
-                                   withRowPos: Boolean = false): DataFrame =
-    scanFiles(spark, meta, readSchema, knownFiles(meta, entries),
-      currentGenPaths(meta, entries), withRowPos)
-
-  private[sources] def scanFiles(spark: SparkSession, meta: TableMeta,
-                                 readSchema: StructType,
-                                 files: Seq[MetaScan.KnownFile],
-                                 currentGen: Set[String] = Set.empty,
-                                 withRowPos: Boolean = false): DataFrame = {
-    def posCol = org.apache.spark.sql.functions
-      .col("_metadata.row_index").as("_gf_pos")
-    def plain(ps: Seq[MetaScan.KnownFile]): DataFrame = {
-      val df = MetaScan.parquetScan(spark, readSchema, ps)
-      if (withRowPos) df.select(
-        readSchema.fieldNames.map(org.apache.spark.sql.functions.col)
-          .toSeq :+ posCol: _*)
-      else df
-    }
+                                   provenance: Boolean = false,
+                                   constants: Constants = Nil): DataFrame = {
+    val consts = (if (provenance) this.provenance else Nil) ++ constants
+    val constSchema = StructType(consts.map(_._1))
+    // `_metadata` does not resolve through the generation-split union:
+    // the row index attaches inside each leg
+    val tail = (if (provenance) Seq(col("_metadata.row_index").as("_gf_pos")) else Nil) ++
+      constSchema.fieldNames.map(col)
     val aliases = historicalAliases(meta)
       .filter { case (cur, _) => readSchema.fieldNames.contains(cur) }
     // nested (struct-member) renames, grouped by top-level column;
@@ -358,20 +355,43 @@ object IcebergSource {
         if readSchema.fieldNames.contains(path.head) =>
           (path.head, (path.tail, olds))
       }.groupBy(_._1).view.mapValues(_.map(_._2)).toMap
-    if (aliases.isEmpty && nested.isEmpty)
-      return plain(files)
-    // generation split: current-schema files scan PLAIN (full pushdown);
-    // only older generations pay the alias coalesce. Union is by
-    // position — both legs emit readSchema's columns in order.
-    if (currentGen.nonEmpty) {
-      val (newP, oldP) = files.partition(f => currentGen(f.path))
-      if (oldP.isEmpty)
-        return plain(files)
-      if (newP.nonEmpty)
-        return plain(newP)
-          .union(scanFiles(spark, meta, readSchema, oldP,
-            withRowPos = withRowPos))
+    def plain(es: Seq[FileEntry]): DataFrame = {
+      val df = MetaScan.parquetScan(spark, readSchema, knownFiles(meta, es, consts), constSchema)
+      if (provenance) df.select(readSchema.fieldNames.map(col).toSeq ++ tail: _*) else df
     }
+    def aliased(es: Seq[FileEntry]): DataFrame =
+      aliasScan(spark, readSchema, knownFiles(meta, es, consts), constSchema, tail,
+        aliases, nested)
+    if (aliases.isEmpty && nested.isEmpty) return plain(entries)
+    // generation split: current-schema files scan PLAIN (full pushdown);
+    // only older generations pay the alias coalesce
+    val currentGen = currentGenPaths(meta, entries)
+    val (newE, oldE) = entries.partition(e => currentGen(e.path))
+    if (oldE.isEmpty) plain(entries)
+    else if (newE.isEmpty) aliased(entries)
+    else plain(newE).union(aliased(oldE))
+  }
+
+  /**
+   * One parquet scan over `files` under `readSchema` (current logical
+   * names), with historical-name fallback: a column renamed after some
+   * of the files were written surfaces under its OLD name in those
+   * files, so the scan requests the aliases too and coalesces. Exact: a
+   * file never carries both names (renames are metadata-only), missing
+   * parquet columns read null, and genuine nulls coalesce to null.
+   * `aliases`/`nested` are the renamed top-level columns' and struct
+   * members' old names; `tail` follows the projected columns.
+   *
+   * Scale note: parquet ROW-GROUP pushdown of predicates on a RENAMED
+   * column is lost behind the coalesce (filters on other columns still
+   * push; never-renamed tables are unaffected). The heavier 100 TB lever
+   * is untouched: manifest bounds key on FIELD IDS, so whole-file
+   * skipping for renamed-column predicates keeps working.
+   */
+  private def aliasScan(spark: SparkSession, readSchema: StructType,
+                        files: Seq[MetaScan.KnownFile], constSchema: StructType,
+                        tail: Seq[Column], aliases: Map[String, Seq[String]],
+                        nested: Map[String, Seq[(Seq[String], Seq[String])]]): DataFrame = {
     val byName = readSchema.fields.map(f => f.name -> f).toMap
     val extra = aliases.toSeq.flatMap { case (cur, olds) =>
       olds.map(o => StructField(o, byName(cur).dataType, nullable = true))
@@ -399,8 +419,8 @@ object IcebergSource {
         }
       }
     }
-    MetaScan.parquetScan(spark, requested, files)
-      .select((if (withRowPos) projected :+ posCol else projected): _*)
+    MetaScan.parquetScan(spark, requested, files, constSchema)
+      .select(projected ++ tail: _*)
   }
 
   /**
@@ -693,8 +713,8 @@ object IcebergSource {
     if (p.contains(":/") || p.startsWith("/")) p
     else s"${root.stripSuffix("/")}/$p"
 
-  /** Strip URI schemes so delete-file paths match input_file_name()
-    * regardless of how the writer spelled the scheme. */
+  /** Strip URI schemes so delete-file paths match the data files'
+    * recorded paths regardless of how either writer spelled the scheme. */
   private def normPath(c: org.apache.spark.sql.Column) =
     regexp_replace(regexp_replace(c, "^[a-zA-Z][a-zA-Z0-9+.-]*:", ""), "^/+", "/")
 
@@ -1279,10 +1299,9 @@ object IcebergSource {
     if (dataFiles.isEmpty) return withFilter(empty)
     if (posDeleteFiles.isEmpty && eqDeleteFiles.isEmpty)
       return withFilter(scanEntries(spark, meta, readSchema, dataFiles))
-    val scan = scanEntries(spark, meta, readSchema, dataFiles,
-      withRowPos = true)
-    withFilter(applyDeletes(spark, meta, scan, dataFiles, posDeleteFiles, eqDeleteFiles)
-      .drop("_gf_path", "_gf_pos", "_gf_seq"))
+    val scan = scanEntries(spark, meta, readSchema, dataFiles, provenance = true)
+    withFilter(applyDeletes(spark, meta, scan, posDeleteFiles, eqDeleteFiles)
+      .drop(provenanceCols: _*))
   }
 
   /** The OR-of-AND partition projection a resolved source-column filter
@@ -1402,43 +1421,18 @@ object IcebergSource {
   }
 
   /**
-   * Attach row provenance (`_gf_path` scheme-normalized file path,
-   * `_gf_pos` parquet row index, `_gf_seq` data sequence number) to a RAW
-   * parquet scan over `dataFiles` and anti-join every delete class away.
-   * `scan` may carry extra withColumns but NO joins — input_file_name()
-   * and `_metadata` are undefined after a join. Callers drop the
-   * provenance columns (or use them: the positional-delete WRITER plans
-   * from exactly these).
+   * Anti-join every delete class away from `scan`, a
+   * [[scanEntries]]`(provenance = true)` scan of the data files: its
+   * per-file `_gf_path`/`_gf_seq` constants and `_gf_pos` row index are
+   * what the deletes match on. The provenance columns stay on the output
+   * (callers drop [[provenanceCols]], or use them: the position-delete
+   * WRITER plans from exactly these).
    */
   private[sources] def applyDeletes(spark: SparkSession, meta: TableMeta,
-                                    scan0: DataFrame, dataFiles: Seq[FileEntry],
+                                    scan0: DataFrame,
                                     posDeleteFiles: Seq[FileEntry],
                                     eqDeleteFiles: Seq[FileEntry]): DataFrame = {
-    // every delete class is sequence-aware: attach each data row's file
-    // sequence number from a (normalized path → seq) map — a pure
-    // projection (element_at over a literal map) below 1000 files, so
-    // the common MOR read carries NO extra join node; wide scans fall
-    // back to a broadcast join (a plan literal holding 100k paths would
-    // bloat analysis instead of helping it)
-    // `_gf_pos` pre-attached by scanEntries(withRowPos = true) when the
-    // scan is a generation-split union (where `_metadata` cannot
-    // resolve); direct scans still derive it here
     var scan = scan0
-      .withColumn("_gf_path", normPath(input_file_name()))
-    if (!scan0.columns.contains("_gf_pos"))
-      scan = scan.withColumn("_gf_pos", col("_metadata.row_index"))
-    scan =
-      if (dataFiles.size <= 1000)
-        scan.withColumn("_gf_seq", element_at(
-          typedLit(dataFiles.map(fe =>
-            normSchemeString(fe.path) -> fe.seq).toMap), col("_gf_path")))
-      else {
-        val fileSeq = spark.createDataFrame(
-          dataFiles.map(fe => (fe.path, fe.seq)).toSeq).toDF("_gf_rawpath", "_gf_seq")
-          .select(normPath(col("_gf_rawpath")).as("_gf_path"), col("_gf_seq"))
-        scan.join(broadcast(fileSeq), Seq("_gf_path"))
-      }
-
     // position deletes apply to files with data seq <= the delete's seq
     if (posDeleteFiles.nonEmpty) {
       // explicit spec schema: inference would launch a footer-merge job
@@ -1446,11 +1440,7 @@ object IcebergSource {
       // files); the two columns are fixed by the Iceberg v2 spec and any
       // optional trailing `row` payload column is ignored either way
       val deletes = MetaScan.parquetScan(spark, posDeleteReadSchema,
-          knownFiles(meta, posDeleteFiles.toSeq))
-        .withColumn("_gf_dseq",
-          element_at(typedLit(posDeleteFiles.map(fe =>
-            normSchemeString(fe.path) -> fe.seq).toMap),
-            normPath(input_file_name())))
+          knownFiles(meta, posDeleteFiles, Seq(deleteSeq)), StructType(Seq(deleteSeq._1)))
         .select(normPath(col("file_path")).as("_gf_path"),
           col("pos").as("_gf_pos"), col("_gf_dseq"))
       scan = scan.join(deletes,
@@ -1478,11 +1468,7 @@ object IcebergSource {
         // delete files would otherwise un-merge)
         val stripped = stripFieldIds(meta.schema).asInstanceOf[StructType]
         val keySchema = StructType(cols.map(c => stripped(stripped.fieldIndex(c))))
-        val del = scanEntries(spark, meta, keySchema, files)
-          .withColumn("_gf_dseq",
-            element_at(typedLit(files.map(fe =>
-              normSchemeString(fe.path) -> fe.seq).toMap),
-              normPath(input_file_name())))
+        val del = scanEntries(spark, meta, keySchema, files, constants = Seq(deleteSeq))
           .select(cols.map(c => col(c).as(s"_gfd_$c")) :+ col("_gf_dseq"): _*)
         val cond = cols.map(c => scan(c) <=> del(s"_gfd_$c")).reduce(_ && _) &&
           del("_gf_dseq") > scan("_gf_seq")
@@ -1501,7 +1487,11 @@ object IcebergSource {
     StructField("file_path", StringType, nullable = false),
     StructField("pos", LongType, nullable = false)))
 
-  /** Driver-side twin of [[normPath]] for literal maps. */
+  /** A delete file's sequence number, as a per-file constant. */
+  private val deleteSeq: (StructField, FileEntry => Any) =
+    (StructField("_gf_dseq", LongType), _.seq)
+
+  /** Driver-side twin of [[normPath]]. */
   private def normSchemeString(p: String): String =
     p.replaceFirst("^[a-zA-Z][a-zA-Z0-9+.-]*:", "").replaceFirst("^/+", "/")
 
@@ -1563,13 +1553,8 @@ object IcebergSource {
       }
       if (dataFiles.isEmpty) return OptimisticCommit.Finish(DeleteResult(None, 0L, 0))
 
-      val scan0 = scanEntries(spark, meta, readSchema, dataFiles.toSeq)
-      val prov = applyDeletes(spark, meta, scan0, dataFiles, posD, eqD)
-      // delete files must reference the EXACT path string the manifests
-      // record; _gf_path is scheme-normalized, so map it back through a
-      // (normalized -> recorded) literal map — a projection, not a join
-      val pathBackMap: Map[String, String] =
-        dataFiles.map(fe => normSchemeString(fe.path) -> fe.path).toMap
+      val prov = applyDeletes(spark, meta,
+        scanEntries(spark, meta, readSchema, dataFiles, provenance = true), posD, eqD)
       val commitUuid = java.util.UUID.randomUUID().toString
       val delDir = new Path(root, s"data/$commitUuid")
       at.stage(delDir)
@@ -1582,22 +1567,10 @@ object IcebergSource {
         .putLong("parquet.field.id", 2147483546L).build()
       val posMeta = new org.apache.spark.sql.types.MetadataBuilder()
         .putLong("parquet.field.id", 2147483545L).build()
-      val matched =
-        if (dataFiles.size <= 1000)
-          prov.filter(expr(condition))
-            .select(element_at(typedLit(pathBackMap), col("_gf_path"))
-                .as("file_path", fpMeta),
-              col("_gf_pos").as("pos", posMeta))
-        else {
-          // a plan literal holding 100k+ paths bloats analysis — wide
-          // tables keep the broadcast-join shape
-          val pathBack = spark.createDataFrame(pathBackMap.toSeq)
-            .toDF("_gf_path", "file_path")
-          prov.filter(expr(condition))
-            .join(broadcast(pathBack), Seq("_gf_path"))
-            .select(col("file_path").as("file_path", fpMeta),
-              col("_gf_pos").as("pos", posMeta))
-        }
+      // delete files must reference the EXACT path string the manifests
+      // record: the scan's `_gf_file` constant
+      val matched = prov.filter(expr(condition))
+        .select(col("_gf_file").as("file_path", fpMeta), col("_gf_pos").as("pos", posMeta))
       matched
         .repartition(col("file_path"))
         .sortWithinPartitions("file_path", "pos")
@@ -1974,9 +1947,8 @@ object IcebergSource {
             if (pos.isEmpty && eq.isEmpty)
               scanEntries(spark, meta, readSchema, data.toSeq)
             else applyDeletes(spark, meta,
-              scanEntries(spark, meta, readSchema, data.toSeq,
-                withRowPos = true), data, pos, eq)
-              .drop("_gf_path", "_gf_pos", "_gf_seq")
+              scanEntries(spark, meta, readSchema, data.toSeq, provenance = true), pos, eq)
+              .drop(provenanceCols: _*)
 
           val inserts =
             if (newData.isEmpty) None
@@ -1989,9 +1961,8 @@ object IcebergSource {
             else {
               // previous-snapshot live rows of still-present files, WITH
               // provenance kept for the position join and the final dedup
-              val scan0 = scanEntries(spark, meta, readSchema,
-                keptData.toSeq, withRowPos = true)
-              val live = applyDeletes(spark, meta, scan0, keptData,
+              val live = applyDeletes(spark, meta,
+                scanEntries(spark, meta, readSchema, keptData.toSeq, provenance = true),
                 prevPos, prevEq)
               val byPos =
                 if (newPos.isEmpty) None
@@ -2018,7 +1989,7 @@ object IcebergSource {
               val matched = (byPos.toSeq ++ byEq).reduceOption(_ union _)
               matched.map(m => stamp(
                 m.dropDuplicates(Seq("_gf_path", "_gf_pos"))
-                  .drop("_gf_path", "_gf_pos", "_gf_seq"), "delete"))
+                  .drop(provenanceCols: _*), "delete"))
             }
           inserts.toSeq ++ removedDeletes.toSeq ++ rowDeletes.toSeq
         }

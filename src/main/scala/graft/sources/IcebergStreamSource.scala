@@ -310,9 +310,9 @@ class IcebergStreamSource(spark: SparkSession, root: String,
       IcebergSource.scanEntries(spark, m, tableSchema, entries)
     else
       IcebergSource.applyDeletes(spark, m,
-          IcebergSource.scanEntries(spark, m, tableSchema, entries,
-            withRowPos = true), entries, posD, eqD)
-        .drop("_gf_path", "_gf_pos", "_gf_seq")
+          IcebergSource.scanEntries(spark, m, tableSchema, entries, provenance = true),
+          posD, eqD)
+        .drop(IcebergSource.provenanceCols: _*)
   }
 
   /** CDF change-item decomposition of snapshot `ord(i)` against its

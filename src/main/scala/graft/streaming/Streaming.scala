@@ -190,12 +190,9 @@ object Streaming {
       mergeFn: (DataFrame, DataFrame, Seq[String]) => DataFrame): Unit = {
     val spark = batch.sparkSession
     val target =
-      try spark.read.parquet(targetPath)
-      catch {
-        case e: org.apache.spark.sql.AnalysisException
-            if graft.core.AtomicParquet.isMissingPath(e) =>
-          batch.limit(0) // first batch: no target yet
-      }
+      if (!graft.core.AtomicParquet.exists(spark, targetPath))
+        batch.limit(0) // first batch: no target yet
+      else spark.read.parquet(targetPath)
     graft.core.AtomicParquet.overwrite(
       mergeFn(target, batch, keys), targetPath, batchId.toString)
   }

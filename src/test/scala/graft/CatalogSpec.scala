@@ -385,7 +385,8 @@ class CatalogSpec extends SparkSpec {
     assert(rd("broken").failure.exists(_.getMessage.contains("no_such_node")))
   }
 
-  test("a first recorded run on an empty catalog root plans no read that fails") {
+  /** Failure messages of the queries `body` planned that failed. */
+  private def failedQueries(body: => Unit): Seq[String] = {
     import org.apache.spark.sql.graftshim.ListenerShim
     val failed = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {
@@ -398,12 +399,20 @@ class CatalogSpec extends SparkSpec {
         failed.add(s"$funcName: ${exception.getMessage}"); ()
       }
     }
-    val dir = java.nio.file.Files.createTempDirectory("graft_cat_first").toString
-    val cfg = threeNodes(dir)
-    val cat = new Catalog(spark, s"$dir/_system")
     ListenerShim.drain(spark.sparkContext)
     spark.listenerManager.register(listener)
     try {
+      body
+      ListenerShim.drain(spark.sparkContext)
+      failed.toArray.toSeq.map(_.toString)
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("a first recorded run on an empty catalog root plans no read that fails") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_cat_first").toString
+    val cfg = threeNodes(dir)
+    val cat = new Catalog(spark, s"$dir/_system")
+    val failed = failedQueries {
       val results = Catalog.runRecorded(spark, cfg, cat, "run-1")
       assert(results.values.forall(_.failure.isEmpty))
       // every probe of a meta table that a first run has not written
@@ -415,8 +424,33 @@ class CatalogSpec extends SparkSpec {
       assert(fresh.state.get("hwm/k").isEmpty)
       assert(!new graft.core.DerivedUpdater(spark, s"$dir/_fresh")
         .isApplied("meta_daily_stats", "run-1"))
-      ListenerShim.drain(spark.sparkContext)
-      assert(failed.isEmpty, failed.toArray.mkString("\n"))
-    } finally spark.listenerManager.unregister(listener)
+    }
+    assert(failed.isEmpty, failed.mkString("\n"))
+  }
+
+  test("first runs that merge into their own sink plan no read that fails") {
+    import spark.implicits._
+    import graft.semantics.Semantics._
+    val dir = java.nio.file.Files.createTempDirectory("graft_first_merge").toString
+    val rows = Seq((1L, "a"), (2L, "b")).toDF("id", "v")
+    val failed = failedQueries {
+      // a dimension pattern's first run: its sink does not exist yet
+      val dim = graft.patterns.PatternRegistry.get("dimension").get.apply(
+        graft.core.EngineContext(rows),
+        Map("natural_key" -> "id", "surrogate_key" -> "sk"),
+        Some(graft.patterns.PatternRegistry.TargetRef(s"$dir/dim")))
+      assert(dim.filter("id > 0").count() == 2)
+      // a semantic incremental run's first materialization
+      val model = SemanticModel(Map("n" -> Metric("n", "count(*)", "t")),
+        Map("v" -> Dimension("v", "v")))
+      val m = materializeIncremental(spark, model, "n BY v", Map("t" -> rows),
+        s"$dir/metrics", grain = Seq("v"), strategies = Map("n" -> "sum"))
+      assert(m.count() == 2)
+      // a streaming merge's first micro-batch
+      graft.streaming.Streaming.mergeBatchIntoTarget(rows, 0L, s"$dir/target",
+        Seq("id"), graft.operators.Merge.upsert(_, _, _))
+      assert(spark.read.parquet(s"$dir/target").count() == 2)
+    }
+    assert(failed.isEmpty, failed.mkString("\n"))
   }
 }

@@ -272,6 +272,49 @@ class DeltaDvSpec extends SparkSpec {
     assert(ch.filter("_change_type = 'delete' AND day <> 'tue'").count() == 0)
   }
 
+  test("DV delete and read on a data file whose name needs URI escaping") {
+    // the log stores `p%201.parquet` for the file `p 1.parquet`; vectors
+    // key on the log path, so a delete finds the file and a read applies
+    // its vector
+    val root = tmp()
+    def dataFile(df: org.apache.spark.sql.DataFrame, name: String): Long = {
+      val staging = Files.createTempDirectory("dvescape").toFile
+      df.coalesce(1).write.mode("overwrite").parquet(staging.toString)
+      val part = staging.listFiles().find(f =>
+        f.getName.endsWith(".parquet") && !f.getName.startsWith("_")).get
+      val dest = new java.io.File(root, name)
+      dest.getParentFile.mkdirs()
+      Files.copy(part.toPath, dest.toPath)
+      dest.length()
+    }
+    val spaced = dataFile((0 until 50).map(i => (i.toLong, s"v$i")).toDF("id", "v"), "p 1.parquet")
+    val plain = dataFile((50 until 100).map(i => (i.toLong, s"v$i")).toDF("id", "v"), "q.parquet")
+    val schema = (0 until 1).map(i => (i.toLong, "")).toDF("id", "v").schema.json
+    val logDir = new java.io.File(root, "_delta_log"); logDir.mkdirs()
+    Files.write(new java.io.File(logDir, "00000000000000000000.json").toPath,
+      Seq(
+        """{"commitInfo":{"timestamp":1000,"operation":"WRITE"}}""",
+        """{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}""",
+        s"""{"metaData":{"id":"t","format":{"provider":"parquet","options":{}},"schemaString":${
+          new com.fasterxml.jackson.databind.ObjectMapper().writeValueAsString(schema)
+        },"partitionColumns":[],"configuration":{},"createdTime":1}}""",
+        s"""{"add":{"path":"p%201.parquet","partitionValues":{},"size":$spaced,"modificationTime":1000,"dataChange":true}}""",
+        s"""{"add":{"path":"q.parquet","partitionValues":{},"size":$plain,"modificationTime":1000,"dataChange":true}}""")
+        .mkString("\n").getBytes("UTF-8"))
+
+    assert(DeltaDvWriter.delete(spark, root, "id >= 40 AND id < 60").deletedRows == 20)
+    val dvPaths = DeltaLog.snapshot(spark, root).files
+      .filter(_.deletionVector.isDefined).map(_.path).toSet
+    assert(dvPaths == Set("p%201.parquet", "q.parquet"), s"$dvPaths")
+    val got = DeltaLog.read(spark, root)
+    assert(got.count() == 80)
+    assert(got.filter("id >= 40 AND id < 60").count() == 0)
+    // a second delete merges into the escaped file's existing vector
+    assert(DeltaDvWriter.delete(spark, root, "id < 10").deletedRows == 10)
+    assert(DeltaLog.read(spark, root).select("id").as[Long].collect().sorted.toSeq ==
+      ((10 until 40) ++ (60 until 100)).map(_.toLong))
+  }
+
   test("detect_deletes_dv transformer: hard deletes land as DV commits") {
     graft.core.StandardTransformers.registerAll
     val root = tmp()

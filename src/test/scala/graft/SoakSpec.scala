@@ -28,6 +28,23 @@ class SoakSpec extends SparkSpec {
 
   private val N = 20000000L
 
+  // the soaks write gigabytes under these; a suite that left them
+  // behind would fill a shared temp volume within a few runs
+  private val tempDirs = scala.collection.mutable.ArrayBuffer.empty[java.io.File]
+  private def tempDir(prefix: String): String = {
+    val d = java.nio.file.Files.createTempDirectory(prefix).toFile
+    tempDirs += d
+    d.toString
+  }
+  override def afterAll(): Unit = {
+    def delete(f: java.io.File): Unit = {
+      Option(f.listFiles).foreach(_.foreach(delete))
+      f.delete(); ()
+    }
+    tempDirs.foreach(delete)
+    super.afterAll()
+  }
+
   /** 20M docs, every body duplicated exactly once (id % (n/2)). */
   private def docs(n: Long): DataFrame = spark.range(n).select(
     $"id",
@@ -196,7 +213,7 @@ class SoakSpec extends SparkSpec {
     // must stay an equi-join with per-doc cap windows, no cartesian, no
     // funnel — and because the generator repeats bodies, EVERY batch doc
     // must match the index (recall check at soak size, not just 5 rows).
-    val dir = java.nio.file.Files.createTempDirectory("soakmh").toString
+    val dir = tempDir("soakmh")
     graft.operators.MinHashIndex.build(
       docs(200000L), "id", "text", s"$dir/idx")
     val batch = docs(100000L)
@@ -357,7 +374,7 @@ class SoakSpec extends SparkSpec {
       $"id", concat(lit("r"), ($"id" % regions).cast("string")).as("region"),
       ($"id" % 1000).cast("double").as("v"))
 
-    val iceRoot = java.nio.file.Files.createTempDirectory("soakice").toString + "/t"
+    val iceRoot = tempDir("soakice") + "/t"
     graft.sources.IcebergSource.write(df, iceRoot, "append",
       partitionBy = Seq("region"))
     val iceAll = graft.sources.IcebergSource.read(spark, iceRoot)
@@ -369,7 +386,7 @@ class SoakSpec extends SparkSpec {
     assert(iceOne.count() == n / regions)
     assertScaleSafe("iceberg pruned read", PlanAudit.audit(iceOne))
 
-    val dlRoot = java.nio.file.Files.createTempDirectory("soakdl").toString + "/t"
+    val dlRoot = tempDir("soakdl") + "/t"
     graft.sources.DeltaWriter.write(df, dlRoot, partitionBy = Seq("region"))
     val dlAll = graft.sources.DeltaLog.read(spark, dlRoot)
     val dlOne = graft.sources.DeltaLog.read(spark, dlRoot,
@@ -399,7 +416,7 @@ class SoakSpec extends SparkSpec {
       $"id", ($"id" % 997).cast("double").as("v"),
       concat(lit("p"), ($"id" % 4).cast("string")).as("part"))
 
-    val dlRoot = java.nio.file.Files.createTempDirectory("soakdlopt").toString + "/t"
+    val dlRoot = tempDir("soakdlopt") + "/t"
     graft.sources.DeltaWriter.write(df.repartition(8), dlRoot,
       partitionBy = Seq("part"))
     val filesBefore = graft.sources.DeltaLog.read(spark, dlRoot).inputFiles.length
@@ -413,7 +430,7 @@ class SoakSpec extends SparkSpec {
     assert(dlAfter.inputFiles.length < filesBefore)
     assert(dlAfter.count() == n, "delta optimize lost rows")
 
-    val iceRoot = java.nio.file.Files.createTempDirectory("soakiceopt").toString + "/t"
+    val iceRoot = tempDir("soakiceopt") + "/t"
     graft.sources.IcebergSource.write(df.repartition(8), iceRoot, "append",
       partitionBy = Seq("part"))
     val (ires, ijobs) = distributedJobs("soak-ice-opt") {
@@ -433,7 +450,7 @@ class SoakSpec extends SparkSpec {
     val n = 2000000L
     val df = spark.range(n).select($"id", ($"id" % 1000).cast("long").as("m"))
 
-    val dlRoot = java.nio.file.Files.createTempDirectory("soakdldv").toString + "/t"
+    val dlRoot = tempDir("soakdldv") + "/t"
     graft.sources.DeltaWriter.write(df.repartition(8), dlRoot)
     val dataBefore = new java.io.File(dlRoot).listFiles()
       .filter(_.getName.endsWith(".parquet")).map(_.getName).toSet
@@ -444,7 +461,7 @@ class SoakSpec extends SparkSpec {
     assert(dataAfter == dataBefore, "DV delete rewrote data files at scale")
     assert(graft.sources.DeltaLog.read(spark, dlRoot).count() == n - n / 100)
 
-    val iceRoot = java.nio.file.Files.createTempDirectory("soakicedel").toString + "/t"
+    val iceRoot = tempDir("soakicedel") + "/t"
     graft.sources.IcebergSource.write(df.repartition(8), iceRoot)
     val ires = graft.sources.IcebergSource.delete(spark, iceRoot, "m < 10")
     assert(ires.deletedRows == n / 100, s"$ires")
@@ -462,7 +479,7 @@ class SoakSpec extends SparkSpec {
     val n = 2000000L
     val rounds = 50
     val df = spark.range(n).select($"id", ($"id" % 1000).cast("long").as("m"))
-    val root = java.nio.file.Files.createTempDirectory("soakdvcadence").toString + "/t"
+    val root = tempDir("soakdvcadence") + "/t"
     DeltaWriter.write(df.repartition(8), root)
     val dataBefore = new java.io.File(root).listFiles()
       .filter(_.getName.endsWith(".parquet")).map(_.getName).toSet
@@ -509,7 +526,7 @@ class SoakSpec extends SparkSpec {
   }
   test("data skipping at 2M: range predicate reads one file of 32, exact", Soak) {
     import graft.sources.{DeltaLog, DeltaStats, DeltaWriter}
-    val root = java.nio.file.Files.createTempDirectory("soak_skip").toString
+    val root = tempDir("soak_skip")
     val n = 2000000L
     DeltaWriter.write(
       spark.range(n).select($"id", ($"id" % 97).as("m"))
