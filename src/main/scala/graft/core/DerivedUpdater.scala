@@ -13,10 +13,12 @@ import org.apache.spark.sql.functions._
  * The history lives as an append-only parquet log under the catalog root
  * (the reference uses Delta/SQL Server transactions). Mutual exclusion
  * does NOT come from the log — parquet append has no compare-and-swap —
- * but from an atomic filesystem primitive: claiming is exclusive
- * creation of a per-(table, run) marker file (`O_CREAT|O_EXCL` locally,
- * namenode-atomic `create(overwrite = false)` on HDFS), so two
- * concurrent claimers cannot both win no matter how appends interleave:
+ * but from the put-if-absent primitive table commits claim their
+ * versions with ([[graft.sources.CommitStore]]): claiming publishes a
+ * per-(table, run) marker file only if none exists (link(2) locally,
+ * rename-if-absent on HDFS, a conditional put on object stores that
+ * offer one), so two concurrent claimers cannot both win no matter how
+ * appends interleave:
  *
  *  1. exclusively create `_claims/<table>__<run>.claim`; creation
  *     failure = another live claim holds the key;
@@ -30,9 +32,10 @@ import org.apache.spark.sql.functions._
  * re-applies on any LATER attempt — the contract that makes re-running a
  * finished orchestration idempotent. Residual caveats: a claimer that
  * outlives the stale threshold while still running can be reclaimed
- * (size the threshold above the longest update), and object stores
- * without atomic create (S3A) fall back to best-effort — on those, or
- * for a hard guarantee, use the transactional store the reference uses.
+ * (size the threshold above the longest update). On a store where
+ * [[graft.sources.CommitStore]] refuses to commit (no atomic primitive
+ * and no coordination configured), claiming fails loudly, exactly as a
+ * table commit there does.
  */
 final class DerivedUpdater(spark: SparkSession, root: String,
                            maxClaimAgeMinutes: Long = 60L) {
@@ -86,44 +89,6 @@ final class DerivedUpdater(spark: SparkSession, root: String,
   private def fsOf(p: org.apache.hadoop.fs.Path) =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** Exclusively create the marker; true iff THIS caller created it.
-    * Local paths use `File.createNewFile` (`O_CREAT|O_EXCL` — atomic);
-    * other filesystems use `create(overwrite = false)` (atomic on HDFS;
-    * best-effort on stores without exclusive create). Any IO failure
-    * counts as "not acquired" — never as a win. */
-  private def atomicCreate(p: org.apache.hadoop.fs.Path, claimId: String): Boolean = {
-    val fs = fsOf(p)
-    val scheme = Option(fs.getUri.getScheme)
-    if (scheme.forall(_ == "file")) {
-      val f = new java.io.File(p.toUri.getPath)
-      Option(f.getParentFile).foreach(_.mkdirs())
-      f.createNewFile() && {
-        // a failed ownership write must not leave an orphan marker that
-        // blocks every claimer until the stale threshold; not-acquired,
-        // never a win (matching the non-local branch)
-        try { java.nio.file.Files.writeString(f.toPath, claimId); true }
-        catch { case _: java.io.IOException => f.delete(); false }
-      }
-    } else {
-      // mirror the local branch: a marker we created but could not stamp
-      // with ownership must not linger as an orphan blocking every
-      // claimer until the stale threshold
-      var created = false
-      try {
-        fs.mkdirs(p.getParent)
-        val out = fs.create(p, false)
-        created = true
-        try out.write(claimId.getBytes("UTF-8")) finally out.close()
-        true
-      } catch {
-        case _: java.io.IOException =>
-          if (created)
-            try fs.delete(p, false) catch { case _: java.io.IOException => () }
-          false
-      }
-    }
-  }
-
   /** Marker's recorded owner, if readable. */
   private def markerOwner(p: org.apache.hadoop.fs.Path): Option[String] =
     try {
@@ -144,8 +109,7 @@ final class DerivedUpdater(spark: SparkSession, root: String,
    * Try to claim the update via exclusive marker creation. None when
    * already applied or another live claim holds the marker; failed and
    * stale claims do not block. Winning is atomic (see class doc) — two
-   * concurrent callers on an atomic-create filesystem cannot both
-   * receive `Some`.
+   * concurrent callers cannot both receive `Some`.
    */
   def tryClaim(table: String, runId: String): Option[Claim] = {
     require(validTables.contains(table),
@@ -154,6 +118,10 @@ final class DerivedUpdater(spark: SparkSession, root: String,
     val claimId = java.util.UUID.randomUUID().toString
     val marker = markerPath(table, runId)
     val fs = fsOf(marker)
+    // publish the marker, owned by claimId, iff none exists; a losing
+    // claimer never touches the winner's marker
+    def create(): Boolean = graft.sources.CommitStore.forFs(fs)
+      .putIfAbsent(fs, marker, claimId.getBytes("UTF-8"), claimId)
     // Stale reclaim must not delete the marker in place: between "observe
     // stale" and "delete", another reclaimer may have already deleted it
     // AND re-created its own fresh marker — a plain delete would destroy
@@ -167,7 +135,7 @@ final class DerivedUpdater(spark: SparkSession, root: String,
         catch { case _: java.io.FileNotFoundException => None }
       stale match {
         case Some(false) => false // live claim holds the key
-        case None => atomicCreate(marker, claimId) // vanished: plain atomic race
+        case None => create() // vanished: plain atomic race
         case Some(true) =>
           val tomb = new org.apache.hadoop.fs.Path(marker.getParent,
             s"${marker.getName}.$claimId.reclaim")
@@ -189,11 +157,11 @@ final class DerivedUpdater(spark: SparkSession, root: String,
               try fs.rename(tomb, marker)
               catch { case _: java.io.IOException => () }
               false
-            } else { fs.delete(tomb, false); atomicCreate(marker, claimId) }
+            } else { fs.delete(tomb, false); create() }
           }
       }
     }
-    val won = atomicCreate(marker, claimId) || reclaim()
+    val won = create() || reclaim()
     if (!won) return None
     // close the applied-while-we-raced window: markApplied appends the
     // terminal row BEFORE removing its marker, so if our create succeeded
@@ -223,11 +191,12 @@ final class DerivedUpdater(spark: SparkSession, root: String,
    * Exactly-once wrapper (derived_updater.py apply_derived_update): claim,
    * run `body`, mark applied; on failure mark failed and rethrow. Returns
    * true when the body ran here, false when skipped (already applied or
-   * lost the claim). Exactly-once holds on filesystems with atomic
-   * exclusive create (local, HDFS) as long as `maxClaimAgeMinutes`
-   * exceeds the body's runtime; on object stores without it, or when a
-   * live claimer is reclaimed as stale, a duplicate apply is possible —
-   * use a transactional backend where that is unacceptable.
+   * lost the claim). Exactly-once holds wherever table commits are safe
+   * (local, HDFS, a conditional-put or lock-coordinated object store) as
+   * long as `maxClaimAgeMinutes` exceeds the body's runtime; a live
+   * claimer reclaimed as stale can still apply twice. On a store where
+   * [[graft.sources.CommitStore]] refuses, the claim throws and the body
+   * never runs.
    */
   def applyOnce(table: String, runId: String)(body: => Unit): Boolean =
     tryClaim(table, runId) match {

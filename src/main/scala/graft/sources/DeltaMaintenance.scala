@@ -333,128 +333,53 @@ object DeltaMaintenance {
                   dryRun: Boolean = false): LogCleanupResult = {
     require(retentionHours >= 0, "retentionHours must be >= 0")
     val f = fs(spark, root)
-    val logDir = new Path(root, "_delta_log")
-    if (!f.exists(logDir)) return LogCleanupResult(Nil, Nil, Nil, dryRun)
-    val commitR = "^(\\d{20})\\.json$".r
-    val classicR = "^(\\d{20})\\.checkpoint\\.parquet$".r
-    val multiR = "^(\\d{20})\\.checkpoint\\.\\d{10}\\.\\d{10}\\.parquet$".r
-    val v2R = "^(\\d{20})\\.checkpoint\\.([A-Za-z0-9][A-Za-z0-9-]*)\\.(parquet|json)$".r
-    def cpVersion(n: String): Option[Long] = n match {
-      case classicR(v) => Some(v.toLong)
-      case multiR(v) => Some(v.toLong)
-      case v2R(v, _, _) => Some(v.toLong)
-      case _ => None
-    }
-    val entries = f.listStatus(logDir).toSeq.filterNot(_.isDirectory)
-    // `newest` may only be a COMPLETE checkpoint — keying retention on a
-    // torn multi-part set (or a V2 main whose sidecars are missing) would
-    // delete the commits/checkpoints it cannot actually replace and brick
-    // the table. Mirror the reader's completeness rules.
-    val multiFullR = "^(\\d{20})\\.checkpoint\\.(\\d{10})\\.(\\d{10})\\.parquet$".r
-    def sidecarsOf(s: FileStatus): Seq[String] =
-      if (s.getPath.getName.endsWith(".parquet")) {
-        val df = spark.read.parquet(s.getPath.toString)
-        if (!df.columns.contains("sidecar")) Nil
-        else df.select("sidecar.path").where(col("sidecar").isNotNull)
-          .collect().map(r => new Path(r.getString(0)).getName).toSeq
-      } else {
-        val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-        val in = f.open(s.getPath)
-        val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-        txt.split('\n').iterator.map(_.trim).filter(_.nonEmpty)
-          .map(mapper.readTree).filter(_.has("sidecar"))
-          .map(n => new Path(n.get("sidecar").get("path").asText()).getName)
-          .toSeq
-      }
-    def complete(version: Long): Boolean = {
-      val ofVersion = entries.filter(s =>
-        cpVersion(s.getPath.getName).contains(version))
-      val names = ofVersion.map(_.getPath.getName)
-      val classicOk = names.exists(classicR.findFirstIn(_).isDefined)
-      val multiOk = names.flatMap(multiFullR.findFirstMatchIn(_))
-        .groupBy(_.group(3).toInt)
-        .exists { case (of, ms) => ms.map(_.group(2).toInt).toSet == (1 to of).toSet }
-      val v2Ok = ofVersion.filter(s =>
-        v2R.findFirstIn(s.getPath.getName).isDefined).exists { s =>
-        try sidecarsOf(s).forall(n =>
-          f.exists(new Path(new Path(logDir, "_sidecars"), n)))
-        catch { case _: Exception => false }
-      }
-      classicOk || multiOk || v2Ok
-    }
-    val cpVersions = entries.flatMap(s => cpVersion(s.getPath.getName))
-      .distinct.sorted.reverse
-    val newest = cpVersions.find(complete).getOrElse(
-      return LogCleanupResult(Nil, Nil, Nil, dryRun))
+    val log = DeltaLog.listLog(f, root)
+    // a sidecar reference that cannot be read counts as missing
+    def sidecarsOf(st: FileStatus): Option[Seq[Path]] =
+      try Some(DeltaLog.sidecars(spark, root, st)) catch { case _: Exception => None }
+    // `newest` may only be a COMPLETE checkpoint (the reader's rule) —
+    // keying retention on a torn multi-part set would delete the commits
+    // and checkpoints it cannot actually replace and brick the table.
+    // Stricter than the reader: a V2 checkpoint counts only while every
+    // sidecar it references exists.
+    val newest = log.checkpoints.find(cp => !cp.v2 ||
+      cp.parts.forall(st => sidecarsOf(st).exists(_.forall(f.exists))))
+      .map(_.version).getOrElse(return LogCleanupResult(Nil, Nil, Nil, dryRun))
     val cutoff = System.currentTimeMillis() - (retentionHours * 3600 * 1000).toLong
     def aged(s: FileStatus): Boolean = s.getModificationTime < cutoff
 
-    val oldCommits = entries.filter { s =>
-      s.getPath.getName match {
-        case commitR(v) => v.toLong < newest && aged(s)
-        case _ => false
-      }
-    }
-    val oldCheckpoints = entries.filter(s =>
-      cpVersion(s.getPath.getName).exists(_ < newest) && aged(s))
-    val deadCp = oldCheckpoints.map(_.getPath.getName).toSet
+    val oldCommits = log.commits.filter { case (v, s) => v < newest && aged(s) }
+    val oldCheckpoints = log.checkpointFiles.filter { case (v, _, s) => v < newest && aged(s) }
+    val deadCp = oldCheckpoints.map(_._3.getPath.getName).toSet
 
     // sidecars referenced by any RETAINED V2 checkpoint must stay; if a
     // retained main file cannot be read, SKIP sidecar GC entirely rather
     // than risk collecting a live shard
-    val retainedV2 = entries.filter { s =>
-      val n = s.getPath.getName
-      v2R.findFirstIn(n).isDefined && !deadCp(n)
+    val retainedV2 = log.checkpointFiles.collect {
+      case (_, DeltaLog.V2, s) if !deadCp(s.getPath.getName) => s
     }
-    val referenced: Option[Set[String]] =
-      try Some(retainedV2.flatMap(sidecarsOf).toSet)
-      catch { case _: Exception => None }
-    val sidecarDir = new Path(logDir, "_sidecars")
-    val oldSidecars = referenced match {
-      case Some(refs) if f.exists(sidecarDir) =>
-        f.listStatus(sidecarDir).toSeq.filter(s =>
-          !refs(s.getPath.getName) && aged(s))
-      case _ => Seq.empty[FileStatus]
-    }
+    val referenced = retainedV2.map(sidecarsOf)
+    val sidecarDir = DeltaLog.sidecarDir(root)
+    val oldSidecars =
+      if (referenced.exists(_.isEmpty) || !f.exists(sidecarDir)) Seq.empty[FileStatus]
+      else {
+        val refs = referenced.flatten.flatten.map(_.getName).toSet
+        f.listStatus(sidecarDir).toSeq.filter(s => !refs(s.getPath.getName) && aged(s))
+      }
 
     if (!dryRun)
-      (oldCommits ++ oldCheckpoints ++ oldSidecars)
+      (oldCommits.map(_._2) ++ oldCheckpoints.map(_._3) ++ oldSidecars)
         .foreach(s => f.delete(s.getPath, false))
-    LogCleanupResult(
-      oldCommits.flatMap(s => commitR.findFirstMatchIn(s.getPath.getName)
-        .map(_.group(1).toLong)).sorted,
-      oldCheckpoints.map(_.getPath.getName).sorted,
-      oldSidecars.map(_.getPath.getName).sorted,
-      dryRun)
+    LogCleanupResult(oldCommits.map(_._1), oldCheckpoints.map(_._3.getPath.getName).sorted,
+      oldSidecars.map(_.getPath.getName).sorted, dryRun)
   }
 
   /** Per-version commitInfo — the DESCRIBE HISTORY equivalent. Bounded by
     * log size (one small JSON per commit), assembled on the driver. */
   def history(spark: SparkSession, root: String): DataFrame = {
-    val f = fs(spark, root)
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val rows = DeltaLog.versions(spark, root).map { v =>
-      val p = new Path(new Path(root, "_delta_log"), f"$v%020d.json")
-      val in = f.open(p)
-      val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-      var op: String = null; var ts = 0L; var params: String = null; var engine: String = null
-      var nAdd = 0; var nRemove = 0
-      txt.split('\n').iterator.map(_.trim).filter(_.nonEmpty).foreach { line =>
-        val node = mapper.readTree(line)
-        if (node.has("commitInfo")) {
-          val ci = node.get("commitInfo")
-          if (ci.hasNonNull("operation")) op = ci.get("operation").asText()
-          if (ci.hasNonNull("timestamp")) ts = ci.get("timestamp").asLong()
-          if (ci.hasNonNull("operationParameters"))
-            params = ci.get("operationParameters").toString
-          if (ci.hasNonNull("engineInfo")) engine = ci.get("engineInfo").asText()
-        }
-        if (node.has("add")) nAdd += 1
-        if (node.has("remove")) nRemove += 1
-      }
-      Row(v, if (ts == 0) f.getFileStatus(p).getModificationTime else ts,
-        op, params, engine, nAdd, nRemove)
+    val rows = DeltaLog.commits(spark, root).map { c =>
+      Row(c.version, c.timestamp, c.operation.orNull, c.operationParameters.orNull,
+        c.engineInfo.orNull, c.adds.size, c.removes.size)
     }
     val schema = StructType(Seq(
       StructField("version", LongType), StructField("timestamp", LongType),

@@ -8,9 +8,12 @@ import org.apache.spark.sql.sources.{DataSourceRegister, StreamSourceProvider}
 import org.apache.spark.sql.types.StructType
 
 /**
- * Delta table as a STREAMING SOURCE: tail the `_delta_log` for new add
+ * Delta table as a STREAMING SOURCE: tail the table's commits for new add
  * actions and emit each batch's files through the same scan machinery the
- * batch reader uses ([[DeltaLog.frameOf]]). The incremental-ETL shape the
+ * batch reader uses ([[DeltaLog.frameOf]]). Every read of the log goes
+ * through [[DeltaLog]] — its snapshots, its decoded commits and its CDF
+ * change-item order — whose caches serve repeated batches; this source
+ * keeps no copy of its own. The incremental-ETL shape the
  * reference reads with `format: delta, streaming: true` through
  * delta-spark (reference odibi/config.py:2676-2685); this is the native
  * equivalent for an environment without the delta-spark jar.
@@ -70,10 +73,11 @@ object DeltaStreamSource {
     * are consumed; `snapshot` marks the initial-snapshot phase, whose
     * "files" are the snapshot's active list at `version`. In CDF mode a
     * tail cursor marked `fileLevel` indexes the version's CHANGE-ITEM
-    * list ([[DeltaLog.changeItemSizes]] order: cdc, else adds then
-    * removes); an unmarked CDF tail cursor is from a checkpoint written
-    * when CDF drained whole versions — its index counts one item per
-    * version, so index >= 1 means the version is fully consumed. */
+    * list ([[DeltaLog.changeItems]], the order [[DeltaLog.changes]]
+    * slices by: cdc, else adds then removes); an unmarked CDF tail
+    * cursor is from a checkpoint written when CDF drained whole
+    * versions — its index counts one item per version, so index >= 1
+    * means the version is fully consumed. */
   final case class DeltaSourceOffset(version: Long, index: Long, snapshot: Boolean,
                                      fileLevel: Boolean = false)
     extends OffsetV1 {
@@ -94,7 +98,6 @@ class DeltaStreamSource(spark: SparkSession, root: String,
                         parameters: Map[String, String],
                         metadataPath: String = "") extends Source {
   import DeltaStreamSource._
-  import scala.jdk.CollectionConverters._
 
   private def opt(k1: String, k2: String): Option[String] =
     parameters.get(k1).orElse(parameters.get(k2))
@@ -173,16 +176,12 @@ class DeltaStreamSource(spark: SparkSession, root: String,
       DeltaLog.snapshot(spark, root)
   }
 
-  /** Snapshot at a pinned version (the base when it matches, else a
-    * cached time-travel read — a committed version's state is
-    * immutable). */
-  private val snapAt = scala.collection.mutable.Map[Long, DeltaLog.Snapshot]()
+  /** Snapshot at a pinned version: the base when it matches, else a
+    * time-travel read (served from [[DeltaLog]]'s snapshot cache). */
   private def snapshotAt(v: Long): DeltaLog.Snapshot = base match {
     case Left(b) if b == v => snapshotAtBase
-    case _ => snapAt.getOrElseUpdate(v,
-      DeltaLog.snapshot(spark, root, versionAsOf = Some(v)))
+    case _ => DeltaLog.snapshot(spark, root, versionAsOf = Some(v))
   }
-  private def snapshotFilesAt(v: Long): Seq[DeltaLog.AddFile] = snapshotAt(v).files
 
   private def trackPath: Option[Path] =
     schemaTrackLoc.map(d => new Path(d, "graft-delta-schema-track.json"))
@@ -350,68 +349,30 @@ class DeltaStreamSource(spark: SparkSession, root: String,
     align(renamed)
   }
 
-  /** Per-version ADDED files while tailing, with the append-only contract
-    * enforced. Cached: a version's actions never change once committed.
-    * Entries well behind the consumed cursor are evicted in [[commit]] —
-    * a long-lived stream's driver footprint stays O(recent versions),
-    * not O(stream lifetime). */
-  private val versionAdds = scala.collection.mutable.Map[Long, Seq[DeltaLog.AddFile]]()
+  /** Version `version`'s ADDED files while tailing, with the
+    * append-only contract enforced. */
+  private def addsOf(version: Long): Seq[DeltaLog.AddFile] = {
+    val c = DeltaLog.commit(spark, root, version)
+    c.metaData.foreach(m => checkTableSchema(m.schema, version))
+    val adds = c.adds.filter(_.dataChange)
+    val removes = c.removes.filter(_.dataChange)
+    if (removes.nonEmpty && adds.isEmpty)
+      require(ignoreDeletes || ignoreChanges,
+        s"version $version deletes data from the stream source table " +
+          s"($root); set ignoreDeletes to skip pure deletes")
+    if (removes.nonEmpty && adds.nonEmpty)
+      require(ignoreChanges,
+        s"version $version updates rows in the stream source table " +
+          s"($root); set ignoreChanges to re-emit rewritten files whole")
+    adds.map(_.copy(deletionVector = None)) // re-emitted WHOLE under ignoreChanges
+  }
 
-  private def addsOf(version: Long): Seq[DeltaLog.AddFile] =
-    versionAdds.getOrElseUpdate(version, {
-      val f = new Path(root, "_delta_log").getFileSystem(
-        spark.sessionState.newHadoopConf())
-      val p = new Path(new Path(root, "_delta_log"), f"$version%020d.json")
-      val text = {
-        val in = f.open(p)
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-      }
-      val mapper = new ObjectMapper()
-      val lines = text.split('\n').filter(_.nonEmpty).map(mapper.readTree).toSeq
-      val metas = lines.flatMap(n => Option(n.get("metaData")))
-      metas.foreach { m =>
-        val st = org.apache.spark.sql.types.DataType.fromJson(
-          m.get("schemaString").asText()).asInstanceOf[StructType]
-        checkTableSchema(st, version)
-      }
-      val adds = lines.flatMap(n => Option(n.get("add")))
-        .filter(a => Option(a.get("dataChange")).forall(_.asBoolean))
-      val removes = lines.flatMap(n => Option(n.get("remove")))
-        .filter(r => Option(r.get("dataChange")).forall(_.asBoolean))
-      if (removes.nonEmpty && adds.isEmpty)
-        require(ignoreDeletes || ignoreChanges,
-          s"version $version deletes data from the stream source table " +
-            s"($root); set ignoreDeletes to skip pure deletes")
-      if (removes.nonEmpty && adds.nonEmpty)
-        require(ignoreChanges,
-          s"version $version updates rows in the stream source table " +
-            s"($root); set ignoreChanges to re-emit rewritten files whole")
-      adds.map { a =>
-        DeltaLog.AddFile(
-          a.get("path").asText(),
-          Option(a.get("partitionValues")).map { pv =>
-            pv.properties().iterator().asScala.map(e =>
-              e.getKey -> Option(e.getValue).filterNot(_.isNull)
-                .map(_.asText())).toMap
-          }.getOrElse(Map.empty),
-          Option(a.get("size")).map(_.asLong).getOrElse(0L),
-          Option(a.get("modificationTime")).map(_.asLong).getOrElse(0L),
-          deletionVector = None, // re-emitted WHOLE under ignoreChanges
-          stats = Option(a.get("stats")).filterNot(_.isNull).map(_.asText()))
-      }
-    })
-
-  /** CDF change-item stand-ins per version (size only — what the caps
-    * weigh; the items themselves are read through [[DeltaLog.changes]]'
-    * boundary slicing). Cached and evicted like [[versionAdds]]. */
-  private val cdfItems = scala.collection.mutable.Map[Long, Seq[DeltaLog.AddFile]]()
-  private def cdfItemsOf(v: Long): Seq[DeltaLog.AddFile] =
-    cdfItems.getOrElseUpdate(v,
-      DeltaLog.changeItemSizes(spark, root, v)
-        .map(sz => DeltaLog.AddFile("", Map.empty, sz, 0L)))
-
+  /** A tail version's items: its added files, or in CDF mode its change
+    * items (sizes weigh the caps; the rows are read through
+    * [[DeltaLog.changes]]' boundary slicing). */
   private def itemsOf(v: Long): Seq[DeltaLog.AddFile] =
-    if (readChangeFeed) cdfItemsOf(v) else addsOf(v)
+    if (readChangeFeed) DeltaLog.changeItems(DeltaLog.commit(spark, root, v)).map(_._1)
+    else addsOf(v)
 
   /** Pending (pos, file) pairs after `from`, in commit order, capped by
     * file count and/or cumulative bytes (a batch always makes progress:
@@ -439,7 +400,7 @@ class DeltaStreamSource(spark: SparkSession, root: String,
       case Left(v) if from.forall(o => o.snapshot) =>
         val resumeV = from.map(_.version).getOrElse(v)
         val startIdx = from.map(_.index).getOrElse(0L)
-        val files = snapshotFilesAt(resumeV)
+        val files = snapshotAt(resumeV).files
         var i = startIdx
         while (i < files.size && room) {
           admit(DeltaSourceOffset(resumeV, i + 1, snapshot = true), files(i.toInt))
@@ -668,10 +629,7 @@ class DeltaStreamSource(spark: SparkSession, root: String,
         val hi = if (endOff.snapshot) endOff.index else files.size.toLong
         if (lo >= hi) None
         else {
-          val f = new Path(root, "_delta_log").getFileSystem(
-            spark.sessionState.newHadoopConf())
-          val ts = f.getFileStatus(new Path(
-            new Path(root, "_delta_log"), f"$pv%020d.json")).getModificationTime
+          val ts = DeltaLog.commit(spark, root, pv).timestamp
           Some(alignFrom(DeltaLog.frameOf(spark, root,
               snapshotAt(pv).copy(files = files.slice(lo.toInt, hi.toInt)))
             .withColumn("_change_type", lit("insert"))
@@ -722,13 +680,5 @@ class DeltaStreamSource(spark: SparkSession, root: String,
     else if (a.version != b.version) a.version < b.version
     else a.index < b.index
 
-  override def commit(end: OffsetV1): Unit = {
-    // a committed batch's versions are never re-read (offsets only move
-    // forward): drop their cached add lists and pinned snapshots
-    val v = toOffset(end).version
-    versionAdds.keys.filter(_ < v - 1).toSeq.foreach(versionAdds.remove)
-    cdfItems.keys.filter(_ < v - 1).toSeq.foreach(cdfItems.remove)
-    snapAt.keys.filter(_ < v - 1).toSeq.foreach(snapAt.remove)
-  }
   override def stop(): Unit = ()
 }

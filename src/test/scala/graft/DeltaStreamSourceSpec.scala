@@ -287,6 +287,35 @@ class DeltaStreamSourceSpec extends SparkSpec {
     assert(got.filter(col("_change_type") === "insert").count() == 32)
   }
 
+  test("CDF snapshot rows carry the commit timestamp, not the commit file's mtime") {
+    import graft.sources.DeltaMaintenance
+    val root = tmp()
+    DeltaWriter.write(Seq((1, "a")).toDF("k", "v"), root) // v0
+    DeltaWriter.write(Seq((2, "b")).toDF("k", "v"), root) // v1
+    // move v1's commit file an hour later; its commitInfo.timestamp stays
+    val v1 = new org.apache.hadoop.fs.Path(root, "_delta_log/00000000000000000001.json")
+    val fs = v1.getFileSystem(spark.sessionState.newHadoopConf())
+    val mtime = fs.getFileStatus(v1).getModificationTime + 3600 * 1000L
+    fs.setTimes(v1, mtime, -1)
+    val committed = DeltaMaintenance.history(spark, root)
+      .filter(col("version") === 1L).head().getAs[Long]("timestamp")
+    assert(committed != mtime)
+    def stamps(df: org.apache.spark.sql.DataFrame): Set[Long] =
+      df.select("_commit_timestamp").as[java.sql.Timestamp].collect().map(_.getTime).toSet
+    assert(stamps(DeltaLog.changes(spark, root, 1L)) == Set(committed))
+    val name = mem()
+    val q = spark.readStream.format("graft-delta")
+      .option("readChangeFeed", "true").load(root)
+      .writeStream.format("memory").queryName(name)
+      .option("checkpointLocation", tmp()).start()
+    try {
+      q.processAllAvailable()
+      assert(spark.table(name).count() == 2)
+      assert(stamps(spark.table(name)) == Set(committed),
+        s"snapshot rows should carry v1's commit timestamp $committed (file mtime $mtime)")
+    } finally q.stop()
+  }
+
   test("CDF: legacy whole-version cursors from old checkpoints still resume") {
     import graft.sources.DeltaStreamSource
     val root = tmp()

@@ -57,6 +57,37 @@ class DerivedUpdaterSpec extends SparkSpec {
     } finally pool.shutdown()
   }
 
+  test("conditional-put store: one winner per race, and no claim while it is open") {
+    // a conditional put (S3 If-None-Match) fails a losing claimer at
+    // close(); the loser must not then delete the winner's marker
+    val hconf = spark.sparkContext.hadoopConfiguration
+    val conf = Seq("fs.s3a.impl" -> classOf[MockConditionalPutFileSystem].getName,
+      "fs.s3a.impl.disable.cache" -> "true", "graft.commit.store" -> "create")
+    val saved = conf.map { case (k, _) => k -> Option(hconf.get(k)) }
+    conf.foreach { case (k, v) => hconf.set(k, v) }
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+    try (1 to 6).foreach { round =>
+      val du = new DerivedUpdater(spark, "s3a://mock" + tmp())
+      val barrier = new java.util.concurrent.CyclicBarrier(8)
+      // a second winner's concurrent "claimed" append can itself fail
+      val results = (1 to 8).map { _ =>
+        pool.submit(new java.util.concurrent.Callable[Option[DerivedUpdater#Claim]] {
+          def call() = { barrier.await(); du.tryClaim("meta_daily_stats", "rX") }
+        })
+      }.map(f => scala.util.Try(f.get()))
+      assert(results.forall(_.isSuccess) && results.count(_.toOption.flatten.isDefined) == 1,
+        s"round $round: expected exactly one winner and no failed claimer, got $results")
+      assert(du.tryClaim("meta_daily_stats", "rX").isEmpty,
+        s"round $round: a later claim won while the first claim was open")
+    } finally {
+      pool.shutdown()
+      saved.foreach {
+        case (k, Some(v)) => hconf.set(k, v)
+        case (k, None) => hconf.unset(k)
+      }
+    }
+  }
+
   test("stale claims do not block reclaim") {
     val root = tmp()
     val hung = new DerivedUpdater(spark, root, maxClaimAgeMinutes = 0L)
